@@ -44,6 +44,43 @@ def _nproc():
     return len(os.sched_getaffinity(0))
 
 
+def _descendants():
+    """Pids of every process this one started, directly or not."""
+    children: dict[int, list[int]] = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as fh:
+                ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):
+            continue
+        children.setdefault(ppid, []).append(int(d))
+    out, todo = [], list(children.get(os.getpid(), []))
+    while todo:
+        pid = todo.pop()
+        out.append(pid)
+        todo += children.get(pid, [])
+    return out
+
+
+def stop_jvm(timeout_s=60.0):
+    """End the gateway JVM (it exits when its stdin closes) and wait until
+    it and the Python workers it forked are gone."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    if gateway is not None:
+        gateway.shutdown()
+        proc = getattr(gateway, "proc", None)
+        if proc is not None:
+            proc.stdin.close()
+            proc.wait(timeout=timeout_s)
+    deadline = time.monotonic() + timeout_s
+    while _descendants() and time.monotonic() < deadline:
+        time.sleep(0.1)
+
+
 class RssSampler(threading.Thread):
     """Peak resident memory of this process and all its descendants (the
     driver JVM and its Python workers), sampled from /proc."""
@@ -56,25 +93,13 @@ class RssSampler(threading.Thread):
         self.page = os.sysconf("SC_PAGE_SIZE")
 
     def _tree_rss(self):
-        children: dict[int, list[int]] = {}
-        for d in os.listdir("/proc"):
-            if not d.isdigit():
-                continue
-            try:
-                with open(f"/proc/{d}/stat") as fh:
-                    ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
-            except (OSError, IndexError, ValueError):
-                continue
-            children.setdefault(ppid, []).append(int(d))
-        total, todo = 0, [os.getpid()]
-        while todo:
-            pid = todo.pop()
-            todo += children.get(pid, [])
+        total = 0
+        for pid in [os.getpid(), *_descendants()]:
             try:
                 with open(f"/proc/{pid}/statm") as fh:
                     total += int(fh.read().split()[1]) * self.page
             except (OSError, IndexError, ValueError):
-                pass
+                pass  # the process ended between listing and reading
         return total
 
     def run(self):
@@ -354,6 +379,7 @@ def main(argv=None):
             sampler.join()
         with contextlib.suppress(Exception):
             bench.spark.stop()
+        stop_jvm()
         shutil.rmtree(work, ignore_errors=True)
         with contextlib.suppress(OSError):
             os.rmdir(os.path.dirname(work))  # only once no run uses it

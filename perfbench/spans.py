@@ -76,7 +76,6 @@ class Traced:
     def __init__(self, tracer, layer, orig):
         self.tracer, self.layer, self.orig = tracer, layer, orig
         self.__name__ = getattr(orig, "__name__", "call")
-        self.__doc__ = getattr(orig, "__doc__", None)
         self.__wrapped__ = orig  # inspect.signature (F.transform) reads it
 
     def __call__(self, *args, **kwargs):
