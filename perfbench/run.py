@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import argparse
 import contextlib
+import hashlib
 import json
 import os
 import platform
@@ -28,6 +29,8 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SETUP_REPS = 3  # set-ups per run; setup_s reports their median
+CACHE = os.path.join(ROOT, ".perfbench_cache")  # generated inputs by key
+CACHE_KEEP = 8
 DRIVER_MEM_MB = 2048  # capped below MemTotal/2 on smaller hosts
 RSS_SAMPLE_S = 0.1
 
@@ -38,6 +41,23 @@ def _meminfo_mb():
             if line.startswith("MemTotal:"):
                 return int(line.split()[1]) // 1024
     raise RuntimeError("no MemTotal in /proc/meminfo")
+
+
+def _cpu_jiffies():
+    """(steal, total) CPU time of the host so far, from /proc/stat."""
+    with open("/proc/stat") as fh:
+        ticks = [int(x) for x in fh.readline().split()[1:9]]
+    return ticks[7], sum(ticks)
+
+
+def _evict(cache, keep):
+    """Remove all but the ``keep`` most recently used cache entries."""
+    entries = sorted(
+        (os.path.join(cache, d) for d in os.listdir(cache)),
+        key=os.path.getmtime, reverse=True,
+    )
+    for path in entries[keep:]:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def _nproc():
@@ -140,6 +160,7 @@ class Bench:
         self.attempted = self.failed = 0
         self.op_bounds = {}  # traced op id -> (t0 ms, t1 ms)
         self.extras = []  # per traced op: dict of report-derived metrics
+        self.steal = [0, 0]  # steal and total jiffies during timed ops
 
     # -- set-up ---------------------------------------------------------
     def start_session(self, cores, driver_mem_mb):
@@ -170,21 +191,41 @@ class Bench:
     def event_dir(self):
         return os.path.join(self.work, "eventlog")
 
+    def input_key(self):
+        """Cache key: workload, size, seed and the generator's source."""
+        h = hashlib.sha256()
+        for f in ("kiez_spark/synth.py", "perfbench/workloads.py"):
+            with open(os.path.join(ROOT, f), "rb") as fh:
+                h.update(fh.read())
+        return (f"{self.wl.name}-n{self.wl.records}-s{self.args.seed}-"
+                f"{h.hexdigest()[:12]}")
+
     def setup_inputs(self):
         """Generate the seed's inputs SETUP_REPS times (fresh dirs, so each
-        repetition does the full generation work); ops use the last."""
-        times, prev = [], None
+        repetition does the full generation work) and return the median
+        time. The last copy goes to the input cache. A traced run reports
+        no set-up time, so it reads the cache when the key is there."""
+        cached = os.path.join(CACHE, self.input_key())
+        if self.args.trace and os.path.isdir(cached):
+            os.utime(cached)
+            self.wl.attach(cached)
+            return None
+        times = []
         for rep in range(SETUP_REPS):
-            in_dir = os.path.join(
-                self.work, "inputs",
-                f"{self.wl.name}-n{self.wl.records}-s{self.args.seed}-r{rep}",
-            )
+            in_dir = os.path.join(self.work, "inputs", f"r{rep}")
             t0 = time.perf_counter()
-            self.wl.setup(self.spark, self.args.seed, in_dir)
+            self.wl.generate(self.spark, self.args.seed, in_dir)
             times.append(time.perf_counter() - t0)
-            if prev:
-                shutil.rmtree(prev, ignore_errors=True)
-            prev = in_dir
+        for rep in range(SETUP_REPS - 1):
+            shutil.rmtree(os.path.join(self.work, "inputs", f"r{rep}"))
+        last = os.path.join(self.work, "inputs", f"r{SETUP_REPS - 1}")
+        if not os.path.isdir(cached):
+            os.makedirs(CACHE, exist_ok=True)
+            with contextlib.suppress(OSError):  # a concurrent run won
+                os.rename(last, cached)
+                last = cached
+            _evict(CACHE, CACHE_KEEP)
+        self.wl.attach(last)
         return statistics.median(times)
 
     # -- ops ------------------------------------------------------------
@@ -196,6 +237,7 @@ class Bench:
         sc.setLocalProperty("perfbench.op", op_id)
         self.attempted += 1
         problems, reports = [], None
+        j0 = _cpu_jiffies()
         t0_ms = time.time() * 1000.0
         p0 = time.perf_counter()
         if tracer:
@@ -210,6 +252,7 @@ class Bench:
         finally:
             wall = time.perf_counter() - p0
             t1_ms = time.time() * 1000.0
+            steal, total = (b - a for a, b in zip(j0, _cpu_jiffies()))
             if tracer:
                 tracer.uninstall()
             sc.setLocalProperty("perfbench.op", None)
@@ -230,8 +273,11 @@ class Bench:
             self.failed += 1
             print(f"perfbench: op {op_id} failed: {problems}", file=sys.stderr)
         self.walls[kind].append(wall)
+        self.steal[0] += steal
+        self.steal[1] += total
         parts = " ".join(f"{k}={v:.2f}s" for k, v in self.wl.part_walls.items())
-        print(f"perfbench: op {op_id} {wall:.2f}s ({parts})", file=sys.stderr)
+        print(f"perfbench: op {op_id} {wall:.2f}s ({parts}) "
+              f"steal {100.0 * steal / max(total, 1):.0f}%", file=sys.stderr)
 
     def _traced_extras(self, op_dir, reports):
         from workloads import LinkState
@@ -254,15 +300,18 @@ class Bench:
 
     def loop(self, seconds, traced):
         """Closed loop for ``seconds``, at least one op. A traced run
-        alternates untraced and traced ops in one session, at least two
-        pairs, swapping their order each pair so warm-up favours neither."""
+        alternates untraced and traced ops in one session, at least one
+        pair, swapping their order each pair so that over an even number
+        of pairs warm-up favours neither. A one-pair minimum keeps a short
+        traced run of er-lsh-state under three minutes on a busy 4-vCPU
+        host."""
         from spans import Tracer
 
         self.tracer = Tracer(self.spark, self.wl.name) if traced else None
         kinds = ("untraced", "traced") if traced else ("untraced",)
         end = time.perf_counter() + seconds
         i = 1
-        while i <= len(kinds) or time.perf_counter() < end:
+        while i == 1 or time.perf_counter() < end:
             for kind in kinds if i % 2 else kinds[::-1]:
                 self.op(i, kind, self.tracer if kind == "traced" else None)
             i += 1
@@ -312,6 +361,9 @@ class Bench:
                 statistics.mean(e[key] for e in self.extras), unit
             )
         out["host.peak_rss_mb"] = _metric(peak_rss / 2**20, "MB")
+        out["host.steal_pct"] = _metric(
+            100.0 * self.steal[0] / max(self.steal[1], 1), "%"
+        )
         traced = statistics.median(self.walls["traced"])
         out["trace.wall_s"] = _metric(traced, "s")
         out["trace.overhead_s"] = _metric(
@@ -363,7 +415,11 @@ def main(argv=None):
         t0 = time.perf_counter()
         bench.start_session(cores, driver_mem_mb)
         session_s = time.perf_counter() - t0
-        setup_s = session_s + bench.setup_inputs()
+        gen_s = bench.setup_inputs()
+        setup_s = session_s + (gen_s or 0.0)
+        print(f"perfbench: session {session_s:.2f}s, inputs "
+              + (f"{gen_s:.2f}s (median of {SETUP_REPS})" if gen_s is not None
+                 else "from cache"), file=sys.stderr)
         sampler.active.set()
         bench.op(0, "cold")
         bench.loop(args.seconds, traced=bool(args.trace))

@@ -1,5 +1,6 @@
 """The benchmark's own checks: the event-log fold on a tiny recorded log,
-the span bookkeeping and the F1 gate. No Spark session is started.
+the span bookkeeping, the correctness gates and the input cache. No Spark
+session is started.
 
   python3 -m pytest perfbench/tests -q
 
@@ -20,8 +21,9 @@ import pandas as pd
 import pytest
 
 import eventlog
+import run
 import spans
-from workloads import pairwise_f1
+from workloads import link_f1, pairwise_f1, survivor_problems
 
 LOG = os.path.join(os.path.dirname(__file__), "tiny_eventlog")
 LAYERS = ("driver", "synth", "clustering")
@@ -121,3 +123,26 @@ def test_pairwise_f1():
     split = pd.Series([1, 1, 5, 2, 3], index=[10, 11, 12, 13, 14])
     # one of three gold pairs found, no false pair: P=1, R=1/3
     assert pairwise_f1(split, gold) == pytest.approx(0.5)
+
+
+def test_link_f1():
+    # links 1->1 and 2->2 right, 3->4 wrong; gold has four links
+    assert link_f1([1, 2, 3], [1, 2, 4], [1, 2, 3, 4]) == pytest.approx(4 / 7)
+    assert link_f1([], [], []) == 1.0
+
+
+def test_survivor_gate_counts_merged_survivors():
+    gold = pd.Series([7, 7, 8, 9], index=[1, 2, 3, 4])
+    assert survivor_problems([1, 3, 4], gold) == []
+    assert survivor_problems([1, 2, 3], gold)  # entity 9 lost, 7 twice
+    # doc 2 shipped before a later batch merged its survivor into doc 1
+    assert survivor_problems([1, 2, 3, 4], gold, merged=1) == []
+    assert survivor_problems([1, 2, 3, 4], gold)
+
+
+def test_cache_keeps_the_most_recently_used(tmp_path):
+    for i, name in enumerate(("a", "b", "c")):
+        (tmp_path / name).mkdir()
+        os.utime(tmp_path / name, (i, i))
+    run._evict(str(tmp_path), keep=2)
+    assert sorted(os.listdir(tmp_path)) == ["b", "c"]
