@@ -391,7 +391,7 @@ WORKLOADS = {
     "er-lsh-state": lambda: Workload("er-lsh-state", [ErFs(), LinkState()]),
     # not in BENCHMARK.json: on a 4-vCPU host one warm op of these costs
     # about 20 s (align-lsh), 25 s (curate) and 80 s (curate-increment),
-    # more than the run budget carries; run them by name
+    # which stretches one run to minutes; run them by name
     "align-lsh": lambda: Workload("align-lsh", [AlignLsh()]),
     "curate": lambda: Workload("curate", [Curate()]),
     "curate-increment": lambda: Workload("curate-increment",
