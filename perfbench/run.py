@@ -146,8 +146,7 @@ def _metric(value, unit):
 
 class Bench:
     def __init__(self, args, work):
-        import jobs.run_curation  # noqa: F401  (binds the job modules on jobs)
-        import jobs.run_er  # noqa: F401
+        import jobs.run_er  # noqa: F401  (binds the job modules on jobs)
         import jobs.run_linkage
         from workloads import WORKLOADS
 
@@ -259,8 +258,7 @@ class Bench:
         if reports is not None:
             try:
                 f1, more = self.wl.check(op_dir, reports)
-                if f1 is not None:
-                    self.f1.append(f1)
+                self.f1.append(f1)
                 problems += more
             except Exception as exc:
                 problems.append(f"check {type(exc).__name__}: {exc}")
@@ -280,7 +278,7 @@ class Bench:
               f"steal {100.0 * steal / max(total, 1):.0f}%", file=sys.stderr)
 
     def _traced_extras(self, op_dir, reports):
-        from workloads import LinkState
+        from spans import LSH_COUNTED
 
         er = next((r[-1] for r in reports if "candidate_pairs" in r[-1]), {})
         cand = er.get("candidate_pairs", 0)
@@ -290,28 +288,32 @@ class Bench:
                 state_bytes += sum(
                     os.path.getsize(os.path.join(dirpath, f)) for f in files
                 )
-        lsh = self.wl.part(LinkState)
+        # the op's own frames, counted outside its wall and outside every
+        # folded op (perfbench.op is unset by now)
+        frames = self.tracer.lsh_frames
+        kept, scored = (sum(df.count() for df in frames[n]) for n in LSH_COUNTED)
+        for dfs in frames.values():
+            dfs.clear()
         return {
             "er.candidate_pairs": cand,
             "er.match_ratio": er.get("matched_pairs", 0) / cand if cand else 0.0,
             "state.write_bytes": state_bytes,
-            "lsh.useful_ratio": lsh.useful_ratio(op_dir) if lsh else 0.0,
+            "lsh.useful_ratio": kept / scored if scored else 0.0,
         }
 
     def loop(self, seconds, traced):
-        """Closed loop for ``seconds``, at least one op. A traced run
-        alternates untraced and traced ops in one session, at least one
-        pair, swapping their order each pair so that over an even number
-        of pairs warm-up favours neither. A one-pair minimum keeps a short
-        traced run of er-lsh-state under three minutes on a busy 4-vCPU
-        host."""
+        """Closed loop for ``seconds``, at least one warm op. A traced run
+        alternates traced and untraced ops in one session, at least one
+        pair, swapping their order each pair. The traced op goes first in
+        the first pair, so with one pair the warm-up the first op still
+        pays counts as tracing overhead instead of hiding it."""
         from spans import Tracer
 
         self.tracer = Tracer(self.spark, self.wl.name) if traced else None
-        kinds = ("untraced", "traced") if traced else ("untraced",)
+        kinds = ("traced", "untraced") if traced else ("untraced",)
         end = time.perf_counter() + seconds
         i = 1
-        while i == 1 or time.perf_counter() < end:
+        while not self.walls["untraced"] or time.perf_counter() < end:
             for kind in kinds if i % 2 else kinds[::-1]:
                 self.op(i, kind, self.tracer if kind == "traced" else None)
             i += 1
@@ -319,15 +321,14 @@ class Bench:
     # -- results --------------------------------------------------------
     def end_to_end(self, setup_s):
         wall = statistics.median(self.walls["untraced"])
-        out = {
+        return {
             "wall_s": _metric(wall, "s"),
             "records_per_s": _metric(self.wl.records / wall, "1/s"),
             "cold_wall_s": _metric(self.walls["cold"][0], "s"),
             "setup_s": _metric(setup_s, "s"),
+            # 0 when no op got as far as its gate (the run is not correct)
+            "f1": _metric(min(self.f1, default=0.0), "1"),
         }
-        if self.f1:
-            out["f1"] = _metric(min(self.f1), "1")
-        return out
 
     def per_layer(self, peak_rss):
         import eventlog

@@ -42,7 +42,10 @@ CONTAINERS = ("driver", "checkpoint", "state")
 LAYER_FUNCS = {
     "synth": [("kiez_spark.synth", ["derive_embeddings"])],
     "knn": [("kiez_spark.operators.knn", None)],
-    "lsh": [("kiez_spark.operators.lsh", None)],
+    "lsh": [
+        ("kiez_spark.operators.lsh", None),
+        ("jobs.run_linkage", ["_lsh_gated_pairs"]),
+    ],
     "hubness": [
         ("kiez_spark.operators.hubness", None),
         ("kiez_spark.operators.knn", ["topk"]),
@@ -66,6 +69,9 @@ CHECKPOINT_METHODS = (
     "sha_invariant_ok",
 )
 LAYERS = ("driver", *LAYER_FUNCS, "checkpoint")
+# lsh.useful_ratio: rows of the pairs the state-mode pair rule keeps over
+# rows of the collision candidates it scores (counted after the op)
+LSH_COUNTED = ("_lsh_gated_pairs", "lsh_candidates_from_index")
 UDF_TAG_SEP = "__"
 
 
@@ -83,6 +89,8 @@ class Traced:
             out = self.orig(*args, **kwargs)
         if self.__name__ == "collect_index":
             self.tracer.last_index = out  # its broadcast is index build too
+        elif self.__name__ in LSH_COUNTED:
+            self.tracer.lsh_frames[self.__name__].append(out)
         return out
 
     def __get__(self, obj, objtype=None):
@@ -111,6 +119,7 @@ class Tracer:
         self.index_build_s = 0.0
         self.stages_written = 0
         self.last_index = None
+        self.lsh_frames = {name: [] for name in LSH_COUNTED}
         self._watch: list[dict] = []
         self._undo: list = []
 

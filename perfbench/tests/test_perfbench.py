@@ -23,7 +23,7 @@ import pytest
 import eventlog
 import run
 import spans
-from workloads import link_f1, pairwise_f1, survivor_problems
+from workloads import pairwise_f1
 
 LOG = os.path.join(os.path.dirname(__file__), "tiny_eventlog")
 LAYERS = ("driver", "synth", "clustering")
@@ -96,6 +96,18 @@ def test_traced_pickles_as_the_original_function():
     assert inspect.signature(t) == inspect.signature(os.path.join)
 
 
+def test_traced_keeps_the_frames_lsh_useful_ratio_counts():
+    tr = spans.Tracer(_FakeSpark(), "w")
+
+    def _lsh_gated_pairs(x):
+        return [x]
+
+    t = spans.Traced(tr, "lsh", _lsh_gated_pairs)
+    assert t(1) == [1] and t(2) == [2]
+    assert tr.lsh_frames["_lsh_gated_pairs"] == [[1], [2]]
+    assert tr.lsh_frames["lsh_candidates_from_index"] == []
+
+
 def test_nested_operator_call_is_absorbed_by_the_caller():
     spark = _FakeSpark()
     tr = spans.Tracer(spark, "w")
@@ -123,21 +135,6 @@ def test_pairwise_f1():
     split = pd.Series([1, 1, 5, 2, 3], index=[10, 11, 12, 13, 14])
     # one of three gold pairs found, no false pair: P=1, R=1/3
     assert pairwise_f1(split, gold) == pytest.approx(0.5)
-
-
-def test_link_f1():
-    # links 1->1 and 2->2 right, 3->4 wrong; gold has four links
-    assert link_f1([1, 2, 3], [1, 2, 4], [1, 2, 3, 4]) == pytest.approx(4 / 7)
-    assert link_f1([], [], []) == 1.0
-
-
-def test_survivor_gate_counts_merged_survivors():
-    gold = pd.Series([7, 7, 8, 9], index=[1, 2, 3, 4])
-    assert survivor_problems([1, 3, 4], gold) == []
-    assert survivor_problems([1, 2, 3], gold)  # entity 9 lost, 7 twice
-    # doc 2 shipped before a later batch merged its survivor into doc 1
-    assert survivor_problems([1, 2, 3, 4], gold, merged=1) == []
-    assert survivor_problems([1, 2, 3, 4], gold)
 
 
 def test_cache_keeps_the_most_recently_used(tmp_path):

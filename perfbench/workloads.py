@@ -3,8 +3,7 @@
 Every part builds its inputs with ``synth.repos_files(seed=...)`` from the
 benchmark's seed and writes them to parquet during set-up; the jobs only
 ever see ``--input`` paths. One op calls each part's job ``main(argv)``
-once (curate-increment: once per batch), with fresh output, checkpoint
-and state directories.
+once, with fresh output, checkpoint and state directories.
 """
 
 from __future__ import annotations
@@ -17,12 +16,9 @@ import time
 
 import numpy as np
 import pandas as pd
-import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
 F1_BAR = 0.99
-# the bar tests/test_synth_lsh_linkage.py holds the LSH alignment path to
-ALIGN_F1_BAR = 0.95
 MAX_DIST = "12.0"  # the synth corpus's near-pair gate (run_linkage docs)
 
 
@@ -37,13 +33,6 @@ def call_main(main, argv):
         json.loads(line) for line in buf.getvalue().splitlines()
         if line.startswith("{")
     ]
-
-
-def link_f1(src, tgt, ids) -> float:
-    """F1 of 1:1 links (src[i] -> tgt[i], target ids already shifted
-    back) against the gold links id -> id."""
-    tp = int((np.asarray(src) == np.asarray(tgt)).sum())
-    return 2.0 * tp / (len(src) + len(ids)) if len(src) + len(ids) else 1.0
 
 
 def _pairs(sizes):
@@ -101,23 +90,9 @@ def _f1_gate(f1, bar=F1_BAR):
     return [] if f1 >= bar else [f"f1 {f1:.4f} < {bar}"]
 
 
-def _kept_docs(out_dirs):
-    return np.concatenate([
-        ds.dataset(d, format="parquet", partitioning="hive")
-        .to_table(columns=["doc_id"]).column("doc_id").to_numpy()
-        for d in out_dirs
-    ])
-
-
-def survivor_problems(kept, gold, merged=0):
-    """Curation gate: the survivors left after ``merged`` of them were
-    tombstoned number one per planted entity, and together they cover
-    every entity."""
-    n = gold.nunique()
-    if len(kept) - merged != n or gold.loc[kept].nunique() != n:
-        return [f"{len(kept)} survivors ({merged} merged) for "
-                f"{gold.nunique()} entities"]
-    return []
+def _component_f1(out, gold):
+    got = pq.read_table(out, columns=["id", "component"]).to_pandas()
+    return pairwise_f1(got.set_index("id")["component"], gold)
 
 
 class Part:
@@ -125,10 +100,6 @@ class Part:
 
     n = 0
     synth_kw: dict = {}
-
-    @property
-    def records(self):
-        return self.n
 
     def files(self, spark, seed):
         from kiez_spark import synth
@@ -149,6 +120,15 @@ class Part:
         return (os.path.join(d, "out"), os.path.join(d, "ckpt"),
                 os.path.join(d, "state"))
 
+    def check(self, op_dir, reports):
+        """F1 against the planted clusters and the job's sha check."""
+        out, _, _ = self.dirs(op_dir)
+        f1 = _component_f1(out, self.gold)
+        problems = _f1_gate(f1)
+        if reports[-1].get("sha_violations") != 0:
+            problems.append(f"sha_violations {reports[-1].get('sha_violations')}")
+        return f1, problems
+
 
 class LinkBatch(Part):
     """run_linkage batch path, exact Arrow kNN kernel + CSLS."""
@@ -165,8 +145,7 @@ class LinkBatch(Part):
 
     def check(self, op_dir, reports):
         out, ckpt, _ = self.dirs(op_dir)
-        got = pq.read_table(out, columns=["id", "component"]).to_pandas()
-        f1 = pairwise_f1(got.set_index("id")["component"], self.gold)
+        f1 = _component_f1(out, self.gold)
         problems = _f1_gate(f1) + _resumed_stages(ckpt)
         if reports[-1].get("sha_invariant_ok") is not True:
             problems.append("sha invariant failed")
@@ -180,90 +159,12 @@ class ErFs(Part):
     slower cold on a 4-vCPU host."""
 
     name = "er"
-    n = 600
+    n = 400
     synth_kw = {"cluster_size": 10}  # deep components: many star rounds
 
     def run(self, jobs, op_dir):
         out, _, _ = self.dirs(op_dir)
         return call_main(jobs.run_er.main, ["--input", self.input, "--output", out])
-
-    def check(self, op_dir, reports):
-        out, _, _ = self.dirs(op_dir)
-        got = pq.read_table(out, columns=["id", "component"]).to_pandas()
-        f1 = pairwise_f1(got.set_index("id")["component"], self.gold)
-        problems = _f1_gate(f1)
-        if reports[-1].get("sha_violations") != 0:
-            problems.append(f"sha_violations {reports[-1].get('sha_violations')}")
-        return f1, problems
-
-
-class Curate(Part):
-    """run_curation: scrub, quality filter, MinHash near-dup, survivors."""
-
-    name = "curate"
-    n = 400
-    # 80 tokens: a one-token edit keeps 3-shingle Jaccard ~0.93, far above
-    # the 0.7 gate, so the survivor count does not hinge on banding luck
-    synth_kw = {"tokens_per_file": 80}
-
-    def run(self, jobs, op_dir):
-        out, _, _ = self.dirs(op_dir)
-        return call_main(jobs.run_curation.main,
-                         ["--input", self.input, "--output", out])
-
-    def check(self, op_dir, reports):
-        out, _, _ = self.dirs(op_dir)
-        return None, survivor_problems(_kept_docs([out]), self.gold)
-
-
-class CurateIncrement(Curate):
-    """run_curation base run with --state-dir, then one --increment per
-    batch. Every fourth 8-row block feeds the batches: one of its planted
-    clusters has members in the base corpus and in both batches, so the
-    increments drop near-dups against the stored corpus index; the other
-    arrives whole in batch 1, so within-batch clustering has real
-    components too."""
-
-    name = "curate-inc"
-    n = 600
-    batches = (1, 2)
-
-    def generate(self, spark, seed, in_dir):
-        from pyspark.sql import functions as F
-
-        files = self.files(spark, seed)
-        # 8-row blocks (two clusters of 4); every 4th block feeds the
-        # batches: rows 0-3 -> batch 1, 4-5 -> base, 6 -> batch 1, 7 -> 2
-        r = F.col("row_id")
-        split = (
-            F.when((r / 8).cast("bigint") % 4 != 3, 0)
-            .when(r % 8 < 4, 1).when(r % 8 < 6, 0).when(r % 8 == 6, 1)
-            .otherwise(2)
-        )
-        for b in (0, *self.batches):
-            _write(files.filter(split == b),
-                   os.path.join(in_dir, f"{self.name}-{b}"))
-
-    def attach(self, in_dir):
-        self.inputs = [os.path.join(in_dir, f"{self.name}-{b}")
-                       for b in (0, *self.batches)]
-        self.gold = pd.concat([_gold(p) for p in self.inputs])
-
-    def run(self, jobs, op_dir):
-        out, _, state = self.dirs(op_dir)
-        reports = []
-        for b, path in enumerate(self.inputs):
-            argv = ["--input", path, "--output", os.path.join(out, str(b)),
-                    "--state-dir", state]
-            reports += call_main(jobs.run_curation.main,
-                                 argv + (["--increment"] if b else []))
-        return reports
-
-    def check(self, op_dir, reports):
-        out, _, _ = self.dirs(op_dir)
-        outs = [os.path.join(out, str(b)) for b in range(len(self.inputs))]
-        merged = sum(r.get("merged_survivors", 0) for r in reports)
-        return None, survivor_problems(_kept_docs(outs), self.gold, merged)
 
 
 class LinkState(Part):
@@ -271,7 +172,7 @@ class LinkState(Part):
     distance pair rule, CC, append-only ver=N state deltas."""
 
     name = "lsh-state"
-    n = 600
+    n = 400
 
     def run(self, jobs, op_dir):
         out, _, state = self.dirs(op_dir)
@@ -280,74 +181,6 @@ class LinkState(Part):
             "--max-dist", MAX_DIST,
         ])
 
-    def check(self, op_dir, reports):
-        out, _, _ = self.dirs(op_dir)
-        got = pq.read_table(out, columns=["id", "component"]).to_pandas()
-        f1 = pairwise_f1(got.set_index("id")["component"], self.gold)
-        problems = _f1_gate(f1)
-        if reports[-1].get("sha_violations") != 0:
-            problems.append(f"sha_violations {reports[-1].get('sha_violations')}")
-        return f1, problems
-
-    def useful_ratio(self, op_dir):
-        """Pairs kept by the distance gate over distinct collision pairs
-        scored, recomputed from the persisted signature index."""
-        _, _, state = self.dirs(op_dir)
-        sig = pq.read_table(os.path.join(state, "sig")).to_pandas()
-        emb = pq.read_table(os.path.join(state, "emb")).to_pandas()
-        pairs = sig.merge(sig, on=["table", "sig"])[["id_x", "id_y"]]
-        pairs = pairs[pairs.id_x != pairs.id_y].drop_duplicates()
-        if pairs.empty:
-            return 0.0
-        vec = dict(zip(emb["id"], emb["vec"]))
-        a = np.stack(pairs.id_x.map(vec).to_numpy())
-        b = np.stack(pairs.id_y.map(vec).to_numpy())
-        dist = np.sqrt(((a - b) ** 2).sum(axis=1))
-        return float((dist <= float(MAX_DIST)).mean())
-
-
-class AlignLsh(Part):
-    """run_linkage --target-input on the LSH tier: bucket candidates in
-    both directions, CSLS with a separate reverse table, mutual best."""
-
-    name = "align"
-    n = 1000
-    offset = 1_000_000  # synth.mutated_copy's row_id shift
-
-    @property
-    def records(self):
-        return 2 * self.n  # source and target tables
-
-    def generate(self, spark, seed, in_dir):
-        from kiez_spark import synth
-
-        files = self.files(spark, seed)
-        _write(files, os.path.join(in_dir, f"{self.name}-src"))
-        _write(synth.mutated_copy(files, id_offset=self.offset),
-               os.path.join(in_dir, f"{self.name}-tgt"))
-
-    def attach(self, in_dir):
-        self.input = os.path.join(in_dir, f"{self.name}-src")
-        self.target = os.path.join(in_dir, f"{self.name}-tgt")
-        self.gold = _gold(self.input)
-
-    def run(self, jobs, op_dir):
-        out, ckpt, _ = self.dirs(op_dir)
-        return call_main(jobs.run_linkage.main, [
-            "--input", self.input, "--target-input", self.target,
-            "--output", out, "--checkpoint-dir", ckpt, "--tier", "lsh",
-            "--hubness", "csls", "--max-dist", MAX_DIST,
-        ])
-
-    def check(self, op_dir, reports):
-        out, ckpt, _ = self.dirs(op_dir)
-        got = pq.read_table(out, columns=["src_id", "tgt_id"]).to_pandas()
-        f1 = link_f1(got.src_id, got.tgt_id - self.offset, self.gold.index)
-        problems = _f1_gate(f1, ALIGN_F1_BAR) + _resumed_stages(ckpt)
-        if reports[-1].get("sha_invariant_ok") is not True:
-            problems.append("sha invariant failed")
-        return f1, problems
-
 
 class Workload:
     """An op = every part's job call, in order."""
@@ -355,7 +188,7 @@ class Workload:
     def __init__(self, name, parts):
         self.name = name
         self.parts = parts
-        self.records = sum(p.records for p in parts)
+        self.records = sum(p.n for p in parts)
 
     def generate(self, spark, seed, in_dir):
         for p in self.parts:
@@ -374,26 +207,16 @@ class Workload:
         return reports
 
     def check(self, op_dir, reports):
+        """Lowest F1 of the parts and every part's gate failures."""
         f1s, problems = [], []
         for p, rep in zip(self.parts, reports):
             f1, more = p.check(op_dir, rep)
-            if f1 is not None:
-                f1s.append(f1)
+            f1s.append(f1)
             problems += [f"{p.name}: {m}" for m in more]
-        return (min(f1s) if f1s else None), problems
-
-    def part(self, cls):
-        return next((p for p in self.parts if isinstance(p, cls)), None)
+        return min(f1s), problems
 
 
 WORKLOADS = {
     "link-exact": lambda: Workload("link-exact", [LinkBatch()]),
     "er-lsh-state": lambda: Workload("er-lsh-state", [ErFs(), LinkState()]),
-    # not in BENCHMARK.json: on a 4-vCPU host one warm op of these costs
-    # about 20 s (align-lsh), 25 s (curate) and 80 s (curate-increment),
-    # which stretches one run to minutes; run them by name
-    "align-lsh": lambda: Workload("align-lsh", [AlignLsh()]),
-    "curate": lambda: Workload("curate", [Curate()]),
-    "curate-increment": lambda: Workload("curate-increment",
-                                         [CurateIncrement()]),
 }
