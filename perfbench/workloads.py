@@ -86,8 +86,8 @@ def _resumed_stages(ckpt_dir):
     return [f"stage {s} resumed" for s in sorted(stages - written)]
 
 
-def _f1_gate(f1, bar=F1_BAR):
-    return [] if f1 >= bar else [f"f1 {f1:.4f} < {bar}"]
+def _f1_gate(f1):
+    return [] if f1 >= F1_BAR else [f"f1 {f1:.4f} < {F1_BAR}"]
 
 
 def _component_f1(out, gold):
@@ -101,14 +101,12 @@ class Part:
     n = 0
     synth_kw: dict = {}
 
-    def files(self, spark, seed):
-        from kiez_spark import synth
-
-        return synth.repos_files(spark, n=self.n, seed=seed, **self.synth_kw)
-
     def generate(self, spark, seed, in_dir):
         """Write the seed's inputs under ``in_dir``."""
-        _write(self.files(spark, seed), os.path.join(in_dir, self.name))
+        from kiez_spark import synth
+
+        files = synth.repos_files(spark, n=self.n, seed=seed, **self.synth_kw)
+        _write(files, os.path.join(in_dir, self.name))
 
     def attach(self, in_dir):
         """Point the part at inputs that ``generate`` wrote."""
