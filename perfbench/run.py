@@ -8,9 +8,10 @@ Run from the root of a checkout:
 One process, one long-lived SparkSession at local[nproc], one client in a
 closed loop: each op (a job's ``main(argv)`` on fresh directories) starts
 after the previous one returns. ``--trace 0`` prints the end-to-end
-metrics; ``--trace 1`` alternates untraced and traced ops with the Spark
-event log on and prints the per-layer metrics (see README.md). The last
-stdout line is the JSON result; the line before it records the host.
+metrics, timed as CPU seconds of the process tree; ``--trace 1``
+alternates untraced and traced ops with the Spark event log on and prints
+the per-layer metrics (see README.md). The last stdout line is the JSON
+result; the line before it records the host.
 """
 
 from __future__ import annotations
@@ -28,7 +29,6 @@ import threading
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SETUP_REPS = 3  # set-ups per run; setup_s reports their median
 CACHE = os.path.join(ROOT, ".perfbench_cache")  # generated inputs by key
 CACHE_KEEP = 8
 DRIVER_MEM_MB = 2048  # capped below MemTotal/2 on smaller hosts
@@ -48,6 +48,21 @@ def _cpu_jiffies():
     with open("/proc/stat") as fh:
         ticks = [int(x) for x in fh.readline().split()[1:9]]
     return ticks[7], sum(ticks)
+
+
+def _tree_cpu_s():
+    """CPU seconds (user + system) used so far by this process and every
+    process it started, reaped children included. The kernel counts time
+    the hypervisor stole from a vCPU as steal, not as the task's time."""
+    total = 0
+    for pid in [os.getpid(), *_descendants()]:
+        try:
+            with open(f"/proc/{pid}/stat") as fh:
+                fields = fh.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue  # the process ended between listing and reading
+        total += sum(int(x) for x in fields[11:15])  # u/s time, own + reaped
+    return total / os.sysconf("SC_CLK_TCK")
 
 
 def _evict(cache, keep):
@@ -155,6 +170,7 @@ class Bench:
         self.work = work
         self.wl = WORKLOADS[args.workload]()
         self.walls = {"cold": [], "untraced": [], "traced": []}
+        self.cpus = {"cold": [], "untraced": [], "traced": []}
         self.f1 = []
         self.attempted = self.failed = 0
         self.op_bounds = {}  # traced op id -> (t0 ms, t1 ms)
@@ -187,6 +203,7 @@ class Bench:
             lambda it: it, "id bigint"
         ).count()
 
+
     def event_dir(self):
         return os.path.join(self.work, "eventlog")
 
@@ -200,32 +217,24 @@ class Bench:
                 f"{h.hexdigest()[:12]}")
 
     def setup_inputs(self):
-        """Generate the seed's inputs SETUP_REPS times (fresh dirs, so each
-        repetition does the full generation work) and return the median
-        time. The last copy goes to the input cache. A traced run reports
-        no set-up time, so it reads the cache when the key is there."""
+        """Generate the seed's inputs and keep them in the input cache. A
+        traced run reports no set-up time, so it reads the cache when the
+        key is there. Returns whether the inputs were generated."""
         cached = os.path.join(CACHE, self.input_key())
         if self.args.trace and os.path.isdir(cached):
             os.utime(cached)
             self.wl.attach(cached)
-            return None
-        times = []
-        for rep in range(SETUP_REPS):
-            in_dir = os.path.join(self.work, "inputs", f"r{rep}")
-            t0 = time.perf_counter()
-            self.wl.generate(self.spark, self.args.seed, in_dir)
-            times.append(time.perf_counter() - t0)
-        for rep in range(SETUP_REPS - 1):
-            shutil.rmtree(os.path.join(self.work, "inputs", f"r{rep}"))
-        last = os.path.join(self.work, "inputs", f"r{SETUP_REPS - 1}")
+            return False
+        in_dir = os.path.join(self.work, "inputs")
+        self.wl.generate(self.spark, self.args.seed, in_dir)
         if not os.path.isdir(cached):
             os.makedirs(CACHE, exist_ok=True)
             with contextlib.suppress(OSError):  # a concurrent run won
-                os.rename(last, cached)
-                last = cached
+                os.rename(in_dir, cached)
+                in_dir = cached
             _evict(CACHE, CACHE_KEEP)
-        self.wl.attach(last)
-        return statistics.median(times)
+        self.wl.attach(in_dir)
+        return True
 
     # -- ops ------------------------------------------------------------
     def op(self, i, kind, tracer=None):
@@ -237,6 +246,7 @@ class Bench:
         self.attempted += 1
         problems, reports = [], None
         j0 = _cpu_jiffies()
+        c0 = _tree_cpu_s()
         t0_ms = time.time() * 1000.0
         p0 = time.perf_counter()
         if tracer:
@@ -252,6 +262,7 @@ class Bench:
             wall = time.perf_counter() - p0
             t1_ms = time.time() * 1000.0
             steal, total = (b - a for a, b in zip(j0, _cpu_jiffies()))
+            cpu = _tree_cpu_s() - c0
             if tracer:
                 tracer.uninstall()
             sc.setLocalProperty("perfbench.op", None)
@@ -271,10 +282,11 @@ class Bench:
             self.failed += 1
             print(f"perfbench: op {op_id} failed: {problems}", file=sys.stderr)
         self.walls[kind].append(wall)
+        self.cpus[kind].append(cpu)
         self.steal[0] += steal
         self.steal[1] += total
         parts = " ".join(f"{k}={v:.2f}s" for k, v in self.wl.part_walls.items())
-        print(f"perfbench: op {op_id} {wall:.2f}s ({parts}) "
+        print(f"perfbench: op {op_id} {wall:.2f}s cpu {cpu:.2f}s ({parts}) "
               f"steal {100.0 * steal / max(total, 1):.0f}%", file=sys.stderr)
 
     def _traced_extras(self, op_dir, reports):
@@ -320,11 +332,8 @@ class Bench:
 
     # -- results --------------------------------------------------------
     def end_to_end(self, setup_s):
-        wall = statistics.median(self.walls["untraced"])
         return {
-            "wall_s": _metric(wall, "s"),
-            "records_per_s": _metric(self.wl.records / wall, "1/s"),
-            "cold_wall_s": _metric(self.walls["cold"][0], "s"),
+            "cpu_s": _metric(statistics.median(self.cpus["untraced"]), "s"),
             "setup_s": _metric(setup_s, "s"),
             # 0 when no op got as far as its gate (the run is not correct)
             "f1": _metric(min(self.f1, default=0.0), "1"),
@@ -365,11 +374,13 @@ class Bench:
         out["host.steal_pct"] = _metric(
             100.0 * self.steal[0] / max(self.steal[1], 1), "%"
         )
+        wall = statistics.median(self.walls["untraced"])
+        out["host.wall_s"] = _metric(wall, "s")
+        out["host.cold_wall_s"] = _metric(self.walls["cold"][0], "s")
+        out["host.cold_cpu_s"] = _metric(self.cpus["cold"][0], "s")
         traced = statistics.median(self.walls["traced"])
         out["trace.wall_s"] = _metric(traced, "s")
-        out["trace.overhead_s"] = _metric(
-            traced - statistics.median(self.walls["untraced"]), "s"
-        )
+        out["trace.overhead_s"] = _metric(traced - wall, "s")
         return out
 
 
@@ -413,14 +424,13 @@ def main(argv=None):
     if args.trace:  # untraced runs measure with nothing else running
         sampler.start()
     try:
-        t0 = time.perf_counter()
+        c0, t0 = _tree_cpu_s(), time.perf_counter()
         bench.start_session(cores, driver_mem_mb)
-        session_s = time.perf_counter() - t0
-        gen_s = bench.setup_inputs()
-        setup_s = session_s + (gen_s or 0.0)
-        print(f"perfbench: session {session_s:.2f}s, inputs "
-              + (f"{gen_s:.2f}s (median of {SETUP_REPS})" if gen_s is not None
-                 else "from cache"), file=sys.stderr)
+        generated = bench.setup_inputs()
+        setup_s = _tree_cpu_s() - c0
+        print(f"perfbench: set-up {time.perf_counter() - t0:.2f}s "
+              f"cpu {setup_s:.2f}s, inputs "
+              + ("generated" if generated else "from cache"), file=sys.stderr)
         sampler.active.set()
         bench.op(0, "cold")
         bench.loop(args.seconds, traced=bool(args.trace))

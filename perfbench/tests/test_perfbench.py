@@ -16,6 +16,7 @@ import os
 import pickle
 import shutil
 import subprocess
+import sys
 
 import pandas as pd
 import pytest
@@ -135,6 +136,13 @@ def test_pairwise_f1():
     split = pd.Series([1, 1, 5, 2, 3], index=[10, 11, 12, 13, 14])
     # one of three gold pairs found, no false pair: P=1, R=1/3
     assert pairwise_f1(split, gold) == pytest.approx(0.5)
+
+
+def test_tree_cpu_counts_reaped_children():
+    burn = "import time\nt = time.process_time()\nwhile time.process_time() - t < 0.3: pass"
+    c0 = run._tree_cpu_s()
+    subprocess.run([sys.executable, "-c", burn], check=True)
+    assert run._tree_cpu_s() - c0 >= 0.25
 
 
 def test_cache_keeps_the_most_recently_used(tmp_path):
