@@ -122,12 +122,15 @@ def _shingle_sig_kernel(
     Cross-engine normalization, matched to the expr tier exactly (the
     winnow-kernel conventions): Python ``\\s`` is pinned to re.ASCII
     (Java's class); ``str.lower()`` twins UTF8String.toLowerCase —
-    identical on ASCII, the locale-independent JVM mapping elsewhere
-    (same convention the default winnow kernel tier carries); Spark's
-    ``trim`` strips 0x20 only, = ``.strip(" ")``. Shingles longer than
-    55 utf-8 bytes (multi-block MD5) fall back to hashlib per shingle,
-    bit-identical by construction. a*h+b stays < 2^51 (a < 2^21,
-    h mod p < 2^30), so int64 signature arithmetic cannot overflow."""
+    identical on ASCII, and elsewhere the JVM's en-US mapping, which
+    session.get_spark pins (same convention the default winnow kernel
+    tier carries); Spark's ``trim`` strips 0x20 only, = ``.strip(" ")``;
+    non-null text that normalizes to "" is one empty token (``split("")
+    == [""]``), so at shingle_n=1 it gives one md5('') shingle. Shingles
+    longer than 55 utf-8 bytes (multi-block MD5) and that empty shingle
+    fall back to hashlib per shingle, bit-identical by construction.
+    a*h+b stays < 2^51 (a < 2^21, h mod p < 2^30), so int64 signature
+    arithmetic cannot overflow."""
     import re as _re
 
     n = int(shingle_n)
@@ -155,8 +158,13 @@ def _shingle_sig_kernel(
         for pdf in batches:
             nd = len(pdf)
             encs = []
-            for t in pdf["_txt"]:
-                s = (t or "").lower()
+            nonnull = np.ones(nd, bool)
+            for i, t in enumerate(pdf["_txt"]):
+                if t is None:
+                    nonnull[i] = False
+                    encs.append(b"")
+                    continue
+                s = t.lower()
                 # the \s+ -> " " collapse is an identity unless the text
                 # holds a non-space whitespace char or a double space —
                 # C-speed `in` scans skip the 14 us/doc regex for the
@@ -177,12 +185,13 @@ def _shingle_sig_kernel(
             raw = b"".join(encs)
             buf = np.frombuffer(raw, dtype=np.uint8)
             sp = np.flatnonzero(buf == 0x20)
-            nonempty = lens > 0
             # normalized docs have no leading/trailing/double spaces, so
-            # tokens per doc = spaces-in-doc + 1; shingle spans never
-            # cross docs because each doc only indexes its own tokens
+            # tokens per doc = spaces-in-doc + 1 — also for text that
+            # normalizes to "", which is one empty token as in Spark's
+            # split("") == [""]; shingle spans never cross docs because
+            # each doc only indexes its own tokens
             tok_per_doc = np.where(
-                nonempty,
+                nonnull,
                 np.bincount(
                     np.searchsorted(off[1:], sp, side="right"), minlength=nd
                 )
@@ -196,9 +205,9 @@ def _shingle_sig_kernel(
             if total_m:
                 # global token boundary streams, sorted = per-doc order
                 tok_starts = np.sort(
-                    np.concatenate([off[:-1][nonempty], sp + 1])
+                    np.concatenate([off[:-1][nonnull], sp + 1])
                 )
-                tok_ends = np.sort(np.concatenate([sp, off[1:][nonempty]]))
+                tok_ends = np.sort(np.concatenate([sp, off[1:][nonnull]]))
                 tok_off = np.zeros(nd + 1, np.int64)
                 np.cumsum(tok_per_doc, out=tok_off[1:])
                 within = np.arange(total_m) - np.repeat(m_off[:-1], m)
@@ -214,7 +223,7 @@ def _shingle_sig_kernel(
                     idx = order[lo:hi]
                     ln = int(sl[lo])
                     lo = hi
-                    if ln <= 55:
+                    if 0 < ln <= 55:
                         mat = buf[sh_start[idx][:, None] + np.arange(ln)]
                         hashes[idx] = md5_rows_60bit(mat)
                     else:

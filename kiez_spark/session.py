@@ -7,6 +7,10 @@ Scale notes (100 TB / 1000-executor target):
   transfers columnar batches, never rows.
 - shuffle.partitions is a knob, not a constant: callers sizing a real
   cluster should set it to ~2-3x total cores; AQE coalesces the rest.
+- JVM locale pinned to en-US: Spark's lower() on non-ASCII text uses the
+  JVM default locale, and the Arrow text kernels' str.lower() matches it
+  only outside locales with their own casing rules (a tr-TR JVM lowers
+  "I" to a dotless i). Options passed in ``extra_conf`` are appended.
 """
 
 from __future__ import annotations
@@ -14,6 +18,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_LOCALE_OPTS = "-Duser.language=en -Duser.country=US"
 
 
 def get_spark(
@@ -40,6 +46,9 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    for k in ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions"):
+        conf[k] = f"{_LOCALE_OPTS} {conf.get(k, '')}".strip()
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

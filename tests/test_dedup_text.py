@@ -60,7 +60,9 @@ def test_shingle_kernel_tier_parity(spark, dup_docs):
     bit-identical to the expr tier: same distinct shingle hash sets in
     the same (first-occurrence) order, same signatures — on planted
     near-dups AND the normalization edge cases (nulls, empties, unicode,
-    exotic whitespace, shingles >55 utf-8 bytes)."""
+    exotic whitespace, shingles >55 utf-8 bytes) — at shingle_n=3 and
+    at shingle_n=1, where text that normalizes to "" is one md5('')
+    shingle."""
     docs, _ = dup_docs
     edge = spark.createDataFrame(
         [
@@ -80,19 +82,21 @@ def test_shingle_kernel_tier_parity(spark, dup_docs):
         ],
         "doc_id long, text string",
     )
-    for src in (docs, edge):
-        k = D._with_shingles(src, "doc_id", "text", 3, tier="kernel")
-        e = D._with_shingles(src, "doc_id", "text", 3, tier="expr")
+    for n, src in ((3, docs), (3, edge), (1, edge)):
+        k = D._with_shingles(src, "doc_id", "text", n, tier="kernel")
+        e = D._with_shingles(src, "doc_id", "text", n, tier="expr")
         for rk, re_ in zip(
-            k.orderBy("doc_id").collect(), e.orderBy("doc_id").collect()
+            k.orderBy("doc_id").collect(), e.orderBy("doc_id").collect(),
+            strict=True,
         ):
-            assert rk.doc_id == re_.doc_id and rk.sh == re_.sh
-        sk = D.minhash_signatures(src, n_hashes=16, tier="kernel")
-        se = D.minhash_signatures(src, n_hashes=16, tier="expr")
+            assert rk.doc_id == re_.doc_id and rk.sh == re_.sh, (n, rk, re_)
+        sk = D.minhash_signatures(src, n_hashes=16, shingle_n=n, tier="kernel")
+        se = D.minhash_signatures(src, n_hashes=16, shingle_n=n, tier="expr")
         for rk, re_ in zip(
-            sk.orderBy("doc_id").collect(), se.orderBy("doc_id").collect()
+            sk.orderBy("doc_id").collect(), se.orderBy("doc_id").collect(),
+            strict=True,
         ):
-            assert rk.doc_id == re_.doc_id and rk.sig == re_.sig
+            assert rk.doc_id == re_.doc_id and rk.sig == re_.sig, (n, rk, re_)
     pk = sorted(
         map(
             tuple,
