@@ -399,11 +399,11 @@ def timed_winnow(cores: int) -> tuple[float, int, int]:
     """One winnowing-increment measurement: fingerprint the corpus
     (build_winnow_index) AND the batch, then the batch x corpus clone
     join (dedup.winnow_join) — the production daily-increment clone
-    check, end to end. Pure JVM (md5 k-gram expressions + hash joins,
-    no python workers): with the fs leg this gives a second
-    throttle-immune N -> 4N signal whose cost profile is
-    expression-compute + one posting shuffle rather than whole-stage
-    filter codegen. Returns (wall, docs fingerprinted, clone hits)."""
+    check, end to end (Arrow winnow kernel + hash joins): with the fs
+    leg this gives a second N -> 4N signal whose cost profile is
+    vectorized k-gram hashing + one posting shuffle rather than
+    whole-stage filter codegen. Returns (wall, docs fingerprinted,
+    clone hits)."""
     from kiez_spark.operators import dedup as DD
     from kiez_spark.session import get_spark
 

@@ -140,9 +140,10 @@ _H_SQL = "(('0x' || substr(md5({s}), 1, 15))::BIGINT)"
 
 def _hashed_shingles_sql(tok: str, n: int = 3) -> str:
     """Distinct 60-bit-hashed shingle set — the exact SQL twin of the
-    Spark-side _with_shingles (operators/dedup.py): same md5-based hash
-    applied before the distinct, so set sizes and intersections agree
-    bit-for-bit even on (astronomically rare) hash collisions."""
+    Spark-side shingle kernel (operators/dedup.py _shingle_sig_kernel):
+    same md5-based hash applied before the distinct, so set sizes and
+    intersections agree bit-for-bit even on (astronomically rare) hash
+    collisions."""
     return (
         f"list_distinct(list_transform({_shingles_sql(tok, n)},"
         f" x -> {_H_SQL.format(s='x')}))"
@@ -1367,11 +1368,11 @@ def q_jaccard_prefix_pairs(spark, sf_dir):
     )
 
 
-# Winnowing (MOSS) fingerprints — the DuckDB twin replays the exact
-# Spark expression pipeline with list comprehensions: char k-gram md5
-# hashes of the normalized text, sliding-window minima, distinct. The
-# value-set formulation is tie-rule-independent (see
-# functions/text.py:winnow_minima), so the oracle is exact.
+# Winnowing (MOSS) fingerprints — the DuckDB twin replays the Spark
+# winnow kernel with list comprehensions: char k-gram md5 hashes of the
+# normalized text, sliding-window minima, distinct. The value-set
+# formulation is tie-rule-independent (see operators/dedup.py
+# _winnow_fps_kernel), so the oracle is exact.
 _WINNOW_K = 8
 _WINNOW_W = 6
 

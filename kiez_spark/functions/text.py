@@ -1,13 +1,15 @@
 """Text primitives as Spark SQL column expressions.
 
-Shared by the dedup / text-analysis operators ([ext] training-data-pipeline
-set). Everything here has an exact DuckDB-SQL counterpart (same md5-based
-token hashing: Spark ``conv(substr(md5(s),1,15),16,10)`` equals DuckDB
+Shared by the text-analysis / curation operators and the ER blocking keys
+([ext] training-data-pipeline set). Everything here has an exact DuckDB-SQL
+counterpart (same md5-based token hashing: Spark
+``conv(substr(md5(s),1,15),16,10)`` equals DuckDB
 ``('0x'||substr(md5(s),1,15))::bigint`` — verified bit-for-bit), so every
-operator built on these is oracle-checkable.
+operator built on these is oracle-checkable. The dedup kernels
+(operators/dedup.py) compute the same token hash worker-side.
 
 Hash family for MinHash: h_i(x) = (a_i * (x mod p) + b_i) mod p over the
-64-bit-truncated md5 of the shingle, p = 2^31-ish prime 1_000_000_007;
+60-bit md5 token hash of the shingle, p = 2^31-ish prime 1_000_000_007;
 (a_i, b_i) are seeded odd constants. All arithmetic stays < 2^63 (ANSI-safe).
 """
 
@@ -52,103 +54,6 @@ def shingles(tok: Column, n: int = 3) -> Column:
 def token_hash(s: Column) -> Column:
     """60-bit integer hash of a string via md5 (cross-engine stable)."""
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
-
-
-def winnow_norm(col: Column) -> Column:
-    """Winnowing text normalization: lowercase + strip ALL whitespace.
-    The standard code-clone canonicalization (Schleimer/Wilkerson/Aiken,
-    SIGMOD 2003 §2): reformatting and case changes must not perturb the
-    k-gram stream. DuckDB twin:
-    lower(regexp_replace(text, '\\s+', '', 'g'))."""
-    return F.lower(F.regexp_replace(F.coalesce(col, F.lit("")), r"\s+", ""))
-
-
-def char_kgram_hashes(s: Column, k: int) -> Column:
-    """ARRAY<BIGINT> of 60-bit hashes of every character k-gram of ``s``,
-    in document order; empty when len(s) < k. Positional substring keeps
-    the whole stream in whole-stage codegen — one md5 per position, no
-    explode. The F.sequence upper bound is guarded: sequence(1, m) with
-    m < 1 would COUNT DOWN (Spark infers step -1), yielding phantom
-    positions."""
-    m = F.length(s) - F.lit(k) + F.lit(1)
-    return F.when(
-        m >= 1,
-        F.transform(
-            F.sequence(F.lit(1), m),
-            lambda i: token_hash(F.substring(s, i, F.lit(k))),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-
-
-def winnow_minima(h: Column, w: int) -> Column:
-    """Distinct window minima of hash stream ``h`` (ARRAY<BIGINT>) over
-    sliding windows of ``w`` — the winnowing fingerprint VALUE set.
-
-    Keeping only distinct VALUES (no positions) makes the classic
-    rightmost-min tie rule irrelevant: every tie rule selects the same
-    minimum value per window, so the value set is tie-rule-independent
-    and exactly SQL-expressible (the DuckDB oracle replays it with a
-    list comprehension). The winnowing guarantee carries over: any
-    shared normalized substring of length >= w + k - 1 contains a full
-    shared window, hence a shared fingerprint value.
-
-    Short streams: 0 < len(h) < w yields ONE fingerprint (the global
-    min) so short-but-fingerprintable docs stay indexable; len(h) == 0
-    yields the empty set."""
-    mm = F.size(h) - F.lit(w) + F.lit(1)
-    return (
-        F.when(F.size(h) == 0, F.array().cast("array<bigint>"))
-        .when(mm < 1, F.array(F.array_min(h)))
-        .otherwise(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), mm),
-                    lambda j: F.array_min(F.slice(h, j, w)),
-                )
-            )
-        )
-    )
-
-
-def minhash_value(sh: Column, a: int, b: int, p: int = MINHASH_P) -> Column:
-    """min over shingles of (a * (H(s) mod p) + b) mod p; NULL-safe for
-    empty shingle sets (returns p, an impossible real value)."""
-    vals = F.transform(
-        sh, lambda s: (F.lit(a) * (token_hash(s) % F.lit(p)) + F.lit(b)) % F.lit(p)
-    )
-    return F.coalesce(F.array_min(vals), F.lit(p))
-
-
-def minhash_from_hashes(hmod: Column, a: int, b: int, p: int = MINHASH_P) -> Column:
-    """Same as minhash_value but over pre-reduced hash values (H(s) mod p)
-    so the md5 of each shingle is computed ONCE, not once per hash
-    function — 16x fewer md5 evaluations in the signature hot path."""
-    vals = F.transform(hmod, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(p))
-    return F.coalesce(F.array_min(vals), F.lit(p))
-
-
-def simhash64(tok: Column, bits: int = 60) -> Column:
-    """SimHash fingerprint: bit b set iff sum over tokens of
-    (+1 if bit b of H(token) else -1) is positive.
-
-    The bit loop is unrolled driver-side (shift amounts must be literals
-    in the DataFrame API); token hashes are materialized once per row so
-    md5 is evaluated once, not per bit."""
-    hashes = F.transform(tok, token_hash)
-
-    def bit_vote(b: int) -> Column:
-        return F.aggregate(
-            hashes,
-            F.lit(0).cast("bigint"),
-            lambda acc, h: acc + (F.shiftright(h, b) % F.lit(2)) * 2 - 1,
-        )
-
-    out = F.lit(0).cast("bigint")
-    for b in range(bits):
-        out = out + F.when(
-            bit_vote(b) > 0, F.lit(1 << b).cast("bigint")
-        ).otherwise(F.lit(0).cast("bigint"))
-    return out
 
 
 def rolling_fingerprint(tok: Column, p: int = MINHASH_P) -> Column:

@@ -1,17 +1,25 @@
 """Deduplication operators over a documents table ([ext] training-data set).
 
-Five tiers, cheapest-first — the standard large-corpus dedup ladder:
+The standard large-corpus dedup ladder, cheapest-first:
 
 - exact:        groupBy sha256(text); one shuffle of (hash, id)
 - minhash-LSH:  shingle -> minhash signature -> banded bucket join ->
                 exact-Jaccard verification of surviving pairs only
-- simhash:      64-bit fingerprints, banded join, Hamming filter
+- simhash:      60-bit fingerprints, banded join, Hamming filter
 - ngram-jaccard: inverted-index join on shingles (exact, quadratic within
                 a shingle's posting list — document-frequency cap bounds
                 hot shingles, the classic skew guard); or the LOSSLESS
                 prefix-filtered variant (jaccard_prefix_pairs, AllPairs/
                 PPJoin) when completeness matters more than the cap
+- winnowing:    MOSS character k-gram fingerprints, inverted-index join
 - embedding:    cosine near-dup via the LSH tier (operators/lsh.py)
+
+Each text operator has one Spark implementation: an Arrow ``mapInPandas``
+kernel (shingle+MinHash, SimHash, winnow) that hashes byte spans with the
+vectorized MD5 of functions/md5vec. The shingle and SimHash kernels share
+one normalization and token-span helper (_normalized_token_spans). Their
+references are the DuckDB oracle rows (driver_queries.py) and the
+pure-Python references in the tests.
 
 Scale notes: every operator is join+agg only (no driver collect); banded
 joins shuffle on the band key so AQE skew-split applies; the df-cap on the
@@ -20,8 +28,10 @@ inverted index keeps the worst posting list O(cap^2).
 
 from __future__ import annotations
 
+import re
 import warnings
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -48,47 +58,114 @@ def exact_duplicates(
     )
 
 
-def _with_shingles(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int,
-    tier: str = "kernel",
-) -> DataFrame:
-    """(doc_id, sh ARRAY<BIGINT>) — the distinct 60-bit-hashed shingle
-    set. Shingles are hashed (md5-based token_hash, cross-engine stable)
-    at creation: every downstream consumer — minhash signatures, exact
-    Jaccard verification, inverted-index posting lists — then moves
-    8-byte ints instead of ~20-byte shingle strings, shrinking the
-    verification shuffle (the dominant byte-mover of the dedup ladder at
-    scale) ~2.5x and making set intersections integer compares. Two
-    shingles colliding at 60 bits would merge a set element (P ~
-    n_shingles^2 / 2^61 per doc, ~4e-15 at 100 shingles); the DuckDB
-    oracles apply the same hash, so cross-engine parity is exact.
-
-    Two tiers, bit-identical output (the winnowing tier convention):
-    ``kernel`` (default) runs the vectorized Arrow kernel below —
-    measured ~3x the expr tier, whose interpreted shingle HOF builds a
-    slice + concat_ws string per token window at ~12 us each; ``expr``
-    keeps everything JVM-side (the no-python-worker fallback)."""
-    if tier not in ("expr", "kernel"):
-        raise ValueError(f"unknown shingle tier {tier!r} (expr|kernel)")
-    if tier == "kernel":
-        return _shingle_sig_kernel(df, id_col, text_col, shingle_n, 0)
-    # an under-partitioned source (a scan with few file splits) would run
-    # the whole tokenize+shingle stage on a couple of cores — spread it to
-    # the cluster's parallelism first (no-op on well-partitioned inputs;
-    # the same guard knn_join_pandas uses)
+def _spread(df: DataFrame) -> DataFrame:
+    """Repartition an under-partitioned batch input (a scan with few file
+    splits) to the cluster's parallelism, so a kernel stage does not run
+    on a couple of cores; a no-op on well-partitioned inputs (the same
+    guard knn_join_pandas uses). Streaming inputs pass through: ``.rdd``
+    raises on them."""
+    if df.isStreaming:
+        return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
-    tok = T.tokens(F.col(text_col))
-    return df.select(
-        F.col(id_col).cast("bigint").alias("doc_id"),
-        F.array_distinct(
-            F.transform(T.shingles(tok, shingle_n), T.token_hash)
-        ).alias("sh"),
+        return df.repartition(target)
+    return df
+
+
+_WS = re.compile(r"\s+", re.ASCII)
+
+
+def _normalized_token_spans(texts):
+    """(buf, starts, ends, tok_per_doc) — the token byte spans of a batch
+    of texts under the one normalization the shingle and simhash kernels
+    share, the worker-side twin of ``T.tokens``: lowercase, ``\\s+`` ->
+    " ", trim.
+
+    ``buf`` is the batch's normalized texts concatenated as utf-8 bytes;
+    token i of the batch is ``buf[starts[i]:ends[i]]``, in document order,
+    and document d owns ``tok_per_doc[d]`` consecutive tokens. A token is
+    the byte span between 0x20s, exact for ANY unicode text because 0x20
+    never occurs inside a multi-byte utf-8 sequence. Null text has no
+    tokens (``tok_per_doc == 0`` is the null mask); non-null text that
+    normalizes to "" is one empty token, as Spark's ``split("") ==
+    [""]``.
+
+    Cross-engine normalization pins: Python ``\\s`` is pinned to
+    re.ASCII (Java's class); ``str.lower()`` twins UTF8String.toLowerCase
+    — identical on ASCII, and elsewhere the JVM's en-US mapping, which
+    session.get_spark pins; Spark's ``trim`` strips 0x20 only, =
+    ``.strip(" ")``."""
+    nd = len(texts)
+    encs = []
+    nonnull = np.ones(nd, bool)
+    for i, t in enumerate(texts):
+        if t is None:
+            nonnull[i] = False
+            encs.append(b"")
+            continue
+        s = t.lower()
+        # the \s+ -> " " collapse is an identity unless the text holds a
+        # non-space whitespace char or a double space — C-speed `in`
+        # scans skip the 14 us/doc regex for the (overwhelmingly common)
+        # already-normalized case
+        if (
+            "\t" in s
+            or "\n" in s
+            or "\x0b" in s
+            or "\x0c" in s
+            or "\r" in s
+            or "  " in s
+        ):
+            s = _WS.sub(" ", s)
+        encs.append(s.strip(" ").encode("utf-8"))
+    off = np.zeros(nd + 1, np.int64)
+    np.cumsum(np.fromiter(map(len, encs), np.int64, nd), out=off[1:])
+    buf = np.frombuffer(b"".join(encs), dtype=np.uint8)
+    sp = np.flatnonzero(buf == 0x20)
+    # normalized docs have no leading/trailing/double spaces, so tokens
+    # per doc = spaces-in-doc + 1; sorting the boundary streams gives
+    # per-doc order because each doc's spans lie inside its own bytes
+    tok_per_doc = np.where(
+        nonnull,
+        np.bincount(np.searchsorted(off[1:], sp, side="right"), minlength=nd)
+        + 1,
+        0,
     )
+    starts = np.sort(np.concatenate([off[:-1][nonnull], sp + 1]))
+    ends = np.sort(np.concatenate([sp, off[1:][nonnull]]))
+    return buf, starts, ends, tok_per_doc
+
+
+def _md5_spans_60bit(buf, starts, lens):
+    """60-bit md5 (``T.token_hash``) of each byte span
+    ``buf[starts[i]:starts[i] + lens[i]]``. Spans are grouped by length
+    and each group's stacked matrix is hashed with the vectorized
+    single-block MD5 (functions/md5vec.md5_rows_60bit); empty spans and
+    spans over 55 bytes (multi-block MD5) fall back to hashlib per span,
+    bit-identical by construction."""
+    import hashlib
+
+    from kiez_spark.functions.md5vec import md5_rows_60bit
+
+    out = np.empty(len(starts), np.int64)
+    if not len(starts):
+        return out
+    order = np.argsort(lens, kind="stable")
+    sl = lens[order]
+    cuts = [0, *(np.flatnonzero(np.diff(sl)) + 1), len(sl)]
+    mv = memoryview(buf)
+    for lo, hi in zip(cuts[:-1], cuts[1:]):
+        idx = order[lo:hi]
+        ln = int(sl[lo])
+        if 0 < ln <= 55:
+            out[idx] = md5_rows_60bit(buf[starts[idx][:, None] + np.arange(ln)])
+        else:
+            out[idx] = [
+                int.from_bytes(hashlib.md5(mv[s0 : s0 + ln]).digest()[:8], "big")
+                >> 4
+                for s0 in starts[idx]
+            ]
+    return out
 
 
 def _shingle_sig_kernel(
@@ -99,40 +176,32 @@ def _shingle_sig_kernel(
     n_hashes: int = 0,
     seed: int = 42,
 ) -> DataFrame:
-    """Arrow-kernel twin of the expr shingle pipeline, optionally fused
-    with the minhash signature: (doc_id, sh[, sig]) with output
-    bit-identical to ``_with_shingles(tier="expr")`` [+
-    ``minhash_from_hashes``] — parity-tested in tests/test_dedup_text.py
-    and re-certified by every shingle-consuming DuckDB oracle row.
+    """(doc_id, sh ARRAY<BIGINT>[, sig ARRAY<BIGINT>]) — the distinct
+    60-bit-hashed word n-gram shingle set, optionally fused with its
+    ``n_hashes`` minhash signature, in one Arrow ``mapInPandas`` pass.
+
+    Shingles are hashed (md5-based token_hash, cross-engine stable) at
+    creation: every downstream consumer — minhash signatures, exact
+    Jaccard verification, inverted-index posting lists — then moves
+    8-byte ints instead of ~20-byte shingle strings, shrinking the
+    verification shuffle (the dominant byte-mover of the dedup ladder at
+    scale) ~2.5x and making set intersections integer compares. Two
+    shingles colliding at 60 bits would merge a set element (P ~
+    n_shingles^2 / 2^61 per doc, ~4e-15 at 100 shingles); the DuckDB
+    oracles apply the same hash, so cross-engine parity is exact.
 
     Why it is fast (guide §4.2): a word n-gram shingle string is exactly
     a BYTE SUBSTRING of the normalized text (tokens joined by single
-    spaces), so the kernel never builds a single shingle string — it
-    computes token-boundary offsets over the batch's concatenated utf-8
-    buffer (one np.where on the space byte; 0x20 never occurs inside a
-    multi-byte utf-8 sequence, so byte slicing is exact for ANY unicode
-    text), groups the shingle spans by byte length and hashes each
-    group's stacked matrix with the vectorized single-block MD5
-    (functions/md5vec.md5_rows_60bit); per-doc first-occurrence distinct
-    (array_distinct's order) and the 16 signature minima
-    (np.minimum.reduceat over (a*h+b) % p) are vectorized over the whole
-    batch. The expr tier evaluates an interpreted slice+concat_ws+md5
-    HOF per token window instead (~12 us each, measured).
-
-    Cross-engine normalization, matched to the expr tier exactly (the
-    winnow-kernel conventions): Python ``\\s`` is pinned to re.ASCII
-    (Java's class); ``str.lower()`` twins UTF8String.toLowerCase —
-    identical on ASCII, and elsewhere the JVM's en-US mapping, which
-    session.get_spark pins (same convention the default winnow kernel
-    tier carries); Spark's ``trim`` strips 0x20 only, = ``.strip(" ")``;
-    non-null text that normalizes to "" is one empty token (``split("")
-    == [""]``), so at shingle_n=1 it gives one md5('') shingle. Shingles
-    longer than 55 utf-8 bytes (multi-block MD5) and that empty shingle
-    fall back to hashlib per shingle, bit-identical by construction.
-    a*h+b stays < 2^51 (a < 2^21, h mod p < 2^30), so int64 signature
-    arithmetic cannot overflow."""
-    import re as _re
-
+    spaces), so the kernel never builds a shingle string — it hashes the
+    span from the first token's start to the last token's end
+    (_normalized_token_spans, _md5_spans_60bit); per-doc
+    first-occurrence distinct (array_distinct's order) and the signature
+    minima (np.minimum.reduceat over (a*h+b) % p) are vectorized over
+    the whole batch. At shingle_n=1, text that normalizes to "" is one
+    md5('') shingle. a*h+b stays < 2^51 (a < 2^21, h mod p < 2^30), so
+    int64 signature arithmetic cannot overflow. Checked against a
+    pure-Python reference in tests/test_dedup_text.py and by every
+    shingle-consuming DuckDB oracle row."""
     n = int(shingle_n)
     if n < 1:
         raise ValueError(f"shingle_n must be >= 1, got {shingle_n}")
@@ -145,112 +214,40 @@ def _shingle_sig_kernel(
     )
 
     def kernel(batches):
-        import hashlib
-
-        import numpy as np
         import pandas as pd
 
-        from kiez_spark.functions.md5vec import md5_rows_60bit
-
-        ws = _re.compile(r"\s+", _re.ASCII)
         p = T.MINHASH_P
-
         for pdf in batches:
             nd = len(pdf)
-            encs = []
-            nonnull = np.ones(nd, bool)
-            for i, t in enumerate(pdf["_txt"]):
-                if t is None:
-                    nonnull[i] = False
-                    encs.append(b"")
-                    continue
-                s = t.lower()
-                # the \s+ -> " " collapse is an identity unless the text
-                # holds a non-space whitespace char or a double space —
-                # C-speed `in` scans skip the 14 us/doc regex for the
-                # (overwhelmingly common) already-normalized case
-                if (
-                    "\t" in s
-                    or "\n" in s
-                    or "\x0b" in s
-                    or "\x0c" in s
-                    or "\r" in s
-                    or "  " in s
-                ):
-                    s = ws.sub(" ", s)
-                encs.append(s.strip(" ").encode("utf-8"))
-            lens = np.fromiter((len(e) for e in encs), np.int64, nd)
-            off = np.zeros(nd + 1, np.int64)
-            np.cumsum(lens, out=off[1:])
-            raw = b"".join(encs)
-            buf = np.frombuffer(raw, dtype=np.uint8)
-            sp = np.flatnonzero(buf == 0x20)
-            # normalized docs have no leading/trailing/double spaces, so
-            # tokens per doc = spaces-in-doc + 1 — also for text that
-            # normalizes to "", which is one empty token as in Spark's
-            # split("") == [""]; shingle spans never cross docs because
-            # each doc only indexes its own tokens
-            tok_per_doc = np.where(
-                nonnull,
-                np.bincount(
-                    np.searchsorted(off[1:], sp, side="right"), minlength=nd
-                )
-                + 1,
-                0,
+            buf, starts, ends, tok_per_doc = _normalized_token_spans(
+                pdf["_txt"]
             )
+            # m shingles per doc; shingle spans never cross docs because
+            # each doc only indexes its own tokens
             m = np.where(tok_per_doc >= n, tok_per_doc - (n - 1), 0)
             total_m = int(m.sum())
             m_off = np.zeros(nd + 1, np.int64)
             np.cumsum(m, out=m_off[1:])
-            if total_m:
-                # global token boundary streams, sorted = per-doc order
-                tok_starts = np.sort(
-                    np.concatenate([off[:-1][nonnull], sp + 1])
-                )
-                tok_ends = np.sort(np.concatenate([sp, off[1:][nonnull]]))
-                tok_off = np.zeros(nd + 1, np.int64)
-                np.cumsum(tok_per_doc, out=tok_off[1:])
-                within = np.arange(total_m) - np.repeat(m_off[:-1], m)
-                tidx = np.repeat(tok_off[:-1], m) + within
-                sh_start = tok_starts[tidx]
-                sh_len = tok_ends[tidx + (n - 1)] - sh_start
-                hashes = np.empty(total_m, np.int64)
-                order = np.argsort(sh_len, kind="stable")
-                sl = sh_len[order]
-                lo = 0
-                mv = memoryview(raw)
-                for hi in [*np.flatnonzero(np.diff(sl)) + 1, total_m]:
-                    idx = order[lo:hi]
-                    ln = int(sl[lo])
-                    lo = hi
-                    if 0 < ln <= 55:
-                        mat = buf[sh_start[idx][:, None] + np.arange(ln)]
-                        hashes[idx] = md5_rows_60bit(mat)
-                    else:
-                        md5 = hashlib.md5
-                        hashes[idx] = [
-                            int.from_bytes(
-                                md5(mv[s0 : s0 + ln]).digest()[:8], "big"
-                            )
-                            >> 4
-                            for s0 in sh_start[idx]
-                        ]
-                doc_of_sh = np.repeat(np.arange(nd), m)
-                keep = (
-                    ~pd.DataFrame({"d": doc_of_sh, "h": hashes})
-                    .duplicated()
-                    .to_numpy()
-                )
-                kept = hashes[keep]
-                k_off = np.zeros(nd + 1, np.int64)
-                np.cumsum(
-                    np.bincount(doc_of_sh[keep], minlength=nd), out=k_off[1:]
-                )
-                sh_col = [kept[k_off[i] : k_off[i + 1]] for i in range(nd)]
-            else:
-                empty = np.empty(0, np.int64)
-                sh_col = [empty] * nd
-            cols = {"doc_id": pdf["_id"].to_numpy(), "sh": sh_col}
+            tok_off = np.zeros(nd + 1, np.int64)
+            np.cumsum(tok_per_doc, out=tok_off[1:])
+            tidx = np.repeat(tok_off[:-1] - m_off[:-1], m) + np.arange(total_m)
+            sh_start = starts[tidx]
+            hashes = _md5_spans_60bit(
+                buf, sh_start, ends[tidx + (n - 1)] - sh_start
+            )
+            doc_of_sh = np.repeat(np.arange(nd), m)
+            keep = (
+                ~pd.DataFrame({"d": doc_of_sh, "h": hashes})
+                .duplicated()
+                .to_numpy()
+            )
+            kept = hashes[keep]
+            k_off = np.zeros(nd + 1, np.int64)
+            np.cumsum(np.bincount(doc_of_sh[keep], minlength=nd), out=k_off[1:])
+            cols = {
+                "doc_id": pdf["_id"].to_numpy(),
+                "sh": [kept[k_off[i] : k_off[i + 1]] for i in range(nd)],
+            }
             if n_hashes:
                 # min over the multiset == min over the distinct set, so
                 # the signature reduces the pre-distinct hash stream
@@ -258,18 +255,14 @@ def _shingle_sig_kernel(
                 if total_m:
                     hmod = hashes % p
                     ne = m > 0
-                    starts = m_off[:-1][ne]
                     for j, (a, b) in enumerate(params):
                         sig[ne, j] = np.minimum.reduceat(
-                            (a * hmod + b) % p, starts
+                            (a * hmod + b) % p, m_off[:-1][ne]
                         )
                 cols["sig"] = list(sig)
             yield pd.DataFrame(cols)
 
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if d0.rdd.getNumPartitions() < target:
-        d0 = d0.repartition(target)
-    return d0.mapInPandas(kernel, schema=out_schema)
+    return _spread(d0).mapInPandas(kernel, schema=out_schema)
 
 
 def minhash_signatures(
@@ -279,24 +272,13 @@ def minhash_signatures(
     n_hashes: int = 16,
     shingle_n: int = 3,
     seed: int = 42,
-    tier: str = "kernel",
 ) -> DataFrame:
-    """(doc_id, sig ARRAY<BIGINT>[n_hashes]) — one pass; the kernel tier
-    fuses shingling and the signature minima in one Arrow pass, the expr
-    tier is column exprs only (both bit-identical, see _with_shingles)."""
-    if tier == "kernel":
-        return _shingle_sig_kernel(
-            df, id_col, text_col, shingle_n, n_hashes, seed
-        ).select("doc_id", "sig")
-    params = T.minhash_params(n_hashes, seed)
-    shingled = _with_shingles(df, id_col, text_col, shingle_n, tier).withColumn(
-        # sh already holds the 60-bit md5 hash (computed once at shingle
-        # creation); only the mod-P reduction is per-signature work
-        "hmod",
-        F.transform(F.col("sh"), lambda h: h % F.lit(T.MINHASH_P)),
-    )
-    sig = F.array(*[T.minhash_from_hashes(F.col("hmod"), a, b) for a, b in params])
-    return shingled.select("doc_id", sig.alias("sig"))
+    """(doc_id, sig ARRAY<BIGINT>[n_hashes]) — shingling and the
+    signature minima fused in one Arrow pass (_shingle_sig_kernel); an
+    empty shingle set signs as p, an impossible real value."""
+    return _shingle_sig_kernel(
+        df, id_col, text_col, shingle_n, n_hashes, seed
+    ).select("doc_id", "sig")
 
 
 def minhash_lsh_pairs(
@@ -308,35 +290,21 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     threshold: float = 0.7,
     seed: int = 42,
-    tier: str = "kernel",
 ) -> DataFrame:
     """Near-duplicate pairs (src_id, tgt_id, jaccard) with exact-Jaccard
     verification: banding surfaces candidates (any band equal), the
     shingle-set join verifies. src_id < tgt_id."""
     assert n_hashes % bands == 0
-    # the shingled table feeds the signatures AND both verification sides
-    # — persist so shingling (one Arrow kernel pass on the default tier;
-    # regex + slice + concat per token window on the expr tier) runs
-    # once, not three times. Lifetime: the cache entry must outlive
-    # the returned LAZY plan, so it is not unpersisted here; it is
-    # MEMORY_AND_DISK-LRU-evicted under pressure, and batch drivers that
-    # chain many dedup jobs should spark.catalog.clearCache() between them.
-    if tier == "kernel":
-        # the kernel emits the signature in the same pass — the persisted
-        # table carries (sh, sig), so banding never re-reads the texts
-        shingled = _shingle_sig_kernel(
-            df, id_col, text_col, shingle_n, n_hashes, seed
-        ).persist()
-        sigs = shingled.select("doc_id", "sig")
-    else:
-        shingled = _with_shingles(df, id_col, text_col, shingle_n, tier).persist()
-        params = T.minhash_params(n_hashes, seed)
-        hmod = F.transform(F.col("sh"), lambda h: h % F.lit(T.MINHASH_P))
-        sig = F.array(
-            *[T.minhash_from_hashes(F.col("_hmod"), a, b) for a, b in params]
-        )
-        sigs = shingled.withColumn("_hmod", hmod).select("doc_id", sig.alias("sig"))
-    banded = _banded_keys(sigs, n_hashes, bands)
+    # the (sh, sig) table feeds the banding AND both verification sides —
+    # persist so the shingle kernel runs once, not three times. Lifetime:
+    # the cache entry must outlive the returned LAZY plan, so it is not
+    # unpersisted here; it is MEMORY_AND_DISK-LRU-evicted under pressure,
+    # and batch drivers that chain many dedup jobs should
+    # spark.catalog.clearCache() between them.
+    shingled = _shingle_sig_kernel(
+        df, id_col, text_col, shingle_n, n_hashes, seed
+    ).persist()
+    banded = _banded_keys(shingled, n_hashes, bands)
     cand = (
         banded.alias("a")
         .join(banded.alias("b"), ["band", "band_key"])
@@ -395,7 +363,6 @@ def build_minhash_index(
     n_hashes: int = 16,
     shingle_n: int = 3,
     seed: int = 42,
-    tier: str = "kernel",
 ) -> DataFrame:
     """(doc_id, sh, sig) — the reusable corpus-side dedup index: distinct
     shingle sets (the verification side) plus the minhash signature (the
@@ -403,19 +370,8 @@ def build_minhash_index(
     version; every increment then joins against the stored table instead
     of re-shingling the corpus (the S6 index-persistence pattern,
     operators/lsh.py save_index, applied to the dedup ladder)."""
-    if tier == "kernel":
-        return _shingle_sig_kernel(
-            corpus_df, id_col, text_col, shingle_n, n_hashes, seed
-        )
-    params = T.minhash_params(n_hashes, seed)
-    hmod = F.transform(F.col("sh"), lambda h: h % F.lit(T.MINHASH_P))
-    sig = F.array(
-        *[T.minhash_from_hashes(F.col("_hmod"), a, b) for a, b in params]
-    )
-    return (
-        _with_shingles(corpus_df, id_col, text_col, shingle_n, tier)
-        .withColumn("_hmod", hmod)
-        .select("doc_id", "sh", sig.alias("sig"))
+    return _shingle_sig_kernel(
+        corpus_df, id_col, text_col, shingle_n, n_hashes, seed
     )
 
 
@@ -438,7 +394,6 @@ def minhash_lsh_join(
     threshold: float = 0.7,
     seed: int = 42,
     corpus_index: DataFrame | None = None,
-    tier: str = "kernel",
 ) -> DataFrame:
     """Asymmetric near-dup join: (new_id, corpus_id, jaccard >= threshold).
 
@@ -477,7 +432,7 @@ def minhash_lsh_join(
 
     def side(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         idx = build_minhash_index(
-            df, id_col, text_col, n_hashes, shingle_n, seed, tier
+            df, id_col, text_col, n_hashes, shingle_n, seed
         ).persist()
         return idx, _banded_keys(idx, n_hashes, bands)
 
@@ -522,7 +477,6 @@ def ngram_jaccard_pairs(
     shingle_n: int = 3,
     threshold: float = 0.7,
     max_doc_freq: int = 1000,
-    tier: str = "kernel",
 ) -> DataFrame:
     """Exact Jaccard >= threshold pairs via an inverted-index self-join.
 
@@ -532,9 +486,9 @@ def ngram_jaccard_pairs(
     sharing ONLY capped shingles is unreachable, which is acceptable for
     near-dup mining (capped shingles are boilerplate by definition).
     """
-    shingled = _with_shingles(df, id_col, text_col, shingle_n, tier).withColumn(
-        "n_sh", F.size("sh")
-    )
+    shingled = _shingle_sig_kernel(
+        df, id_col, text_col, shingle_n
+    ).withColumn("n_sh", F.size("sh"))
     posting = shingled.select(
         "doc_id", "n_sh", F.explode("sh").alias("shingle")
     )
@@ -568,7 +522,6 @@ def jaccard_prefix_pairs(
     text_col: str = "text",
     shingle_n: int = 3,
     threshold: float = 0.7,
-    tier: str = "kernel",
 ) -> DataFrame:
     """(src_id, tgt_id, jaccard) — EXACT Jaccard >= threshold pairs via
     LOSSLESS prefix filtering (AllPairs/PPJoin family, Bayardo et al.,
@@ -612,9 +565,11 @@ def jaccard_prefix_pairs(
     # so it is not unpersisted here — MEMORY_AND_DISK-LRU-evicted under
     # pressure; drivers chaining many dedup jobs should
     # spark.catalog.clearCache() between them.
-    shingled = _with_shingles(df, id_col, text_col, shingle_n, tier).withColumn(
-        "n_sh", F.size("sh")
-    ).persist()
+    shingled = (
+        _shingle_sig_kernel(df, id_col, text_col, shingle_n)
+        .withColumn("n_sh", F.size("sh"))
+        .persist()
+    )
     posting = shingled.select(
         "doc_id", "n_sh", F.explode("sh").alias("shingle")
     )
@@ -678,33 +633,32 @@ def jaccard_prefix_pairs(
 def _winnow_fps_kernel(
     df, key_col, text_col: str, k: int, window: int, with_counts: bool = False
 ):
-    """Arrow-kernel twin of _winnow_fps: IDENTICAL output (same md5-based
-    60-bit hashes, same window-min value sets — parity-tested against
-    the expr tier and the pure-Python reference), computed with a
-    vectorized numpy MD5 over the batch's concatenated ASCII bytes
-    (functions/md5vec, ~4x the per-gram hashlib rate; non-ASCII docs
-    fall back to hashlib per gram) + numpy sliding-window minima in a
-    ``mapInPandas`` kernel. Measured 3.5x the expr tier end-to-end at
-    local[8] on the 220k-doc clone-increment leg (the interpreted HOF
-    evaluates substring+md5+hex-conv per element at ~2-10us/gram) —
-    callers pick the tier by host: expr keeps the work JVM-side, kernel
-    trades Arrow transfer for hash rate.
+    """(key, fp[, n_fp]) — distinct winnowing fingerprints keyed by an
+    arbitrary expression (bigint doc id, string repo/group, ...), one
+    row per fingerprint: the md5-based 60-bit hashes of the normalized
+    text's character k-grams, computed with a vectorized numpy MD5 over
+    the batch's concatenated ASCII bytes (functions/md5vec, ~4x the
+    per-gram hashlib rate; non-ASCII docs fall back to hashlib per gram)
+    + numpy sliding-window minima in a ``mapInPandas`` kernel.
+
+    Window minima are kept as a distinct VALUE set (no positions), which
+    makes the classic rightmost-min tie rule irrelevant: every tie rule
+    selects the same minimum value per window, so the set is exactly
+    SQL-expressible (the DuckDB oracle replays it with a list
+    comprehension). A doc with fewer than ``window`` k-grams yields ONE
+    fingerprint (the global min), so short docs stay indexable.
 
     ``with_counts`` additionally emits each doc's total fingerprint
     count ``n_fp`` — free at generation (len of the minima set), saving
     index builders a full groupBy + self-join over the posting table.
 
-    Cross-engine normalization notes (the subtle bits, matched to the
-    JVM expr tier exactly): Python's ``\\s`` is UNICODE by default but
-    Java's (Spark regexp_replace) is ASCII-only — re.ASCII pins the
-    same class; grams are CHARACTER slices (encode each gram, never the
-    byte string — the ASCII fast path only engages when chars == bytes);
-    int.from_bytes(digest[:8]) >> 4 equals the first 15 hex digits of
-    the md5 (token_hash's 60-bit convention)."""
-    import re as _re
-
-    from pyspark.sql import types as ST
-
+    Cross-engine normalization (DuckDB twin: lower(regexp_replace(
+    coalesce(text, ''), '\\s+', '', 'g'))): Python's ``\\s`` is UNICODE
+    by default but Java's and DuckDB's are ASCII-only — re.ASCII pins
+    the same class; grams are CHARACTER slices (encode each gram, never
+    the byte string — the ASCII fast path only engages when chars ==
+    bytes); int.from_bytes(digest[:8]) >> 4 equals the first 15 hex
+    digits of the md5 (token_hash's 60-bit convention)."""
     d0 = df.select(key_col.alias("_key"), F.col(text_col).alias("_txt"))
     key_dt = d0.schema["_key"].dataType.simpleString()
     out_schema = f"_key {key_dt}, fp bigint"
@@ -714,12 +668,10 @@ def _winnow_fps_kernel(
     def kernel(batches):
         import hashlib
 
-        import numpy as np
         import pandas as pd
 
         from kiez_spark.functions.md5vec import md5_windows_60bit
 
-        ws = _re.compile(r"\s+", _re.ASCII)
         md5 = hashlib.md5
         swv = np.lib.stride_tricks.sliding_window_view
 
@@ -744,7 +696,7 @@ def _winnow_fps_kernel(
             fast_lens: list = []
             fast_parts: list = []
             for key, text in zip(pdf["_key"], pdf["_txt"]):
-                t = ws.sub("", (text or "").lower())
+                t = _WS.sub("", (text or "").lower())
                 m = len(t) - k + 1
                 if m < 1:
                     continue
@@ -800,75 +752,7 @@ def _winnow_fps_kernel(
                 cols["n_fp"] = np.repeat(counts, counts)
             yield pd.DataFrame(cols)
 
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if d0.rdd.getNumPartitions() < target:
-        d0 = d0.repartition(target)
-    out = d0.mapInPandas(kernel, schema=out_schema)
-    # mapInPandas output row counts are data-dependent; nothing infers
-    # filters here, but keep the explicit isNotNull contract of the expr
-    # tier (kernel never emits nulls — this is a schema-level assert)
-    assert isinstance(out.schema["fp"].dataType, ST.LongType)
-    return out
-
-
-def _winnow_fps_tier(df, key_col, text_col, k, window, tier, with_counts=False):
-    if tier not in ("expr", "kernel"):
-        raise ValueError(f"unknown winnow tier {tier!r} (expr|kernel)")
-    fn = _winnow_fps_kernel if tier == "kernel" else _winnow_fps
-    return fn(df, key_col, text_col, k, window, with_counts)
-
-
-def _winnow_fps(df, key_col, text_col: str, k: int, window: int,
-                with_counts: bool = False):
-    """(key, fp[, n_fp]) — the staged winnowing pipeline keyed by an
-    arbitrary expression (bigint doc id, string repo/group, ...).
-    ``with_counts`` rides the per-doc fingerprint total along from the
-    minima array (size(_fps), free at this stage) so index builders skip
-    a posting-table groupBy + self-join.
-
-    STAGED projections, not one composed expression: winnow_minima
-    references its hash-array argument several times (size guards +
-    slice per window), so inlining char_kgram_hashes there would
-    re-evaluate the WHOLE k-gram md5 stream once per window position —
-    O(m^2 k) interpreted hashing, a measured multi-minute hang at 500
-    docs. As separate aliases each stage is computed once: Catalyst's
-    CollapseProject keeps projections apart when a non-cheap alias is
-    referenced more than once downstream.
-
-    explode_outer, NOT explode: plain explode makes the optimizer infer
-    a `size(_fps) > 0` filter (InferFiltersFromGenerate) and push it
-    below every projection above — which inlines the whole staged
-    pipeline into one Filter expression and re-evaluates the k-gram
-    stream per window slice: the O(m^2) blowup again, through the back
-    door. Outer explode infers nothing; the null rows from empty
-    fingerprint sets are dropped AFTER the Generate, where the filter
-    only references the generated attribute and cannot sink."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
-    d = df.select(
-        key_col.alias("_key"), T.winnow_norm(F.col(text_col)).alias("_t")
-    )
-    d = d.select("_key", T.char_kgram_hashes(F.col("_t"), k).alias("_h"))
-    d = d.select("_key", T.winnow_minima(F.col("_h"), window).alias("_fps"))
-    if with_counts:
-        # size(_fps) is a SECOND reference to the non-cheap _fps alias,
-        # which (like the explode) keeps CollapseProject from inlining
-        # the staged pipeline — the O(m^2) hazard documented above stays
-        # fenced off
-        return (
-            d.select(
-                "_key",
-                F.explode_outer("_fps").alias("fp"),
-                F.size("_fps").cast("bigint").alias("n_fp"),
-            )
-            .filter(F.col("fp").isNotNull())
-            .select("_key", "fp", "n_fp")
-        )
-    return (
-        d.select("_key", F.explode_outer("_fps").alias("fp"))
-        .filter(F.col("fp").isNotNull())
-    )
+    return _spread(d0).mapInPandas(kernel, schema=out_schema)
 
 
 def winnow_fingerprints(
@@ -877,7 +761,6 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = 8,
     window: int = 6,
-    tier: str = "kernel",
     with_counts: bool = False,
 ) -> DataFrame:
     """(doc_id, fp) — distinct winnowing fingerprints per document
@@ -895,12 +778,8 @@ def winnow_fingerprints(
     normalized characters produce no fingerprints (standard winnowing:
     below the guarantee threshold nothing is detectable anyway).
 
-    Two tiers, bit-identical output (parity-tested): ``tier="expr"``
-    (default) is whole-stage-codegen column expressions — no Python,
-    everything JVM-side; ``tier="kernel"`` is an Arrow ``mapInPandas``
-    kernel (hashlib per gram + numpy sliding minima), ~2x the expr
-    rate at local[8] when python workers are available and unthrottled.
-    Reference analogue: kiez has no local-fingerprint operator; this
+    Computed by one Arrow ``mapInPandas`` kernel (_winnow_fps_kernel:
+    vectorized MD5 per gram + numpy sliding minima). Reference analogue: kiez has no local-fingerprint operator; this
     extends the dedup ladder (exact sha / minhash / simhash / n-gram)
     with the partial-overlap detector the source-code north star
     needs.
@@ -909,9 +788,8 @@ def winnow_fingerprints(
     every row — free at generation (the minima-set size), so index
     builders and pair miners skip a full posting-table groupBy +
     self-join (guide §2.4: remove shuffles outright)."""
-    return _winnow_fps_tier(
-        df, F.col(id_col).cast("bigint"), text_col, k, window, tier,
-        with_counts,
+    return _winnow_fps_kernel(
+        df, F.col(id_col).cast("bigint"), text_col, k, window, with_counts
     ).withColumnRenamed("_key", "doc_id")
 
 
@@ -924,7 +802,6 @@ def winnow_pairs(
     min_common: int = 2,
     min_overlap: float = 0.0,
     max_doc_freq: int = 1000,
-    tier: str = "kernel",
 ) -> DataFrame:
     """(a_id, b_id, common, overlap) — candidate clone pairs sharing
     >= ``min_common`` winnowing fingerprints AND overlap coefficient
@@ -947,7 +824,7 @@ def winnow_pairs(
     # plan, MEMORY_AND_DISK LRU handles pressure, and batch drivers
     # chaining many jobs should spark.catalog.clearCache() between them)
     posting = winnow_fingerprints(
-        df, id_col, text_col, k, window, tier, with_counts=True
+        df, id_col, text_col, k, window, with_counts=True
     ).persist()
     df_counts = posting.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
     posting = posting.join(
@@ -983,7 +860,6 @@ def winnow_group_pairs(
     min_common: int = 2,
     min_overlap: float = 0.0,
     max_group_freq: int = 1000,
-    tier: str = "kernel",
 ) -> DataFrame:
     """(a_grp, b_grp, common, overlap) — GROUP-level clone pairs (repo
     vs repo, crawl-source vs crawl-source): a group's fingerprint set is
@@ -1001,8 +877,8 @@ def winnow_group_pairs(
     # persist: feeds sized, the group-frequency cap and both join sides
     # (minhash_lsh_pairs cache convention — see winnow_pairs)
     fp = (
-        _winnow_fps_tier(
-            df, F.col(group_col).cast("string"), text_col, k, window, tier
+        _winnow_fps_kernel(
+            df, F.col(group_col).cast("string"), text_col, k, window
         )
         .select(F.col("_key").alias("grp"), "fp")
         .distinct()
@@ -1041,7 +917,6 @@ def build_winnow_index(
     text_col: str = "text",
     k: int = 8,
     window: int = 6,
-    tier: str = "kernel",
 ) -> DataFrame:
     """(doc_id, fp, n_fp) — the persisted corpus-side clone index: the
     winnowing posting table with each document's total fingerprint count
@@ -1054,7 +929,7 @@ def build_winnow_index(
     # known at generation) — the former groupBy + self-join re-derived it
     # with two extra exchanges of the full posting table (guide §2.4)
     return winnow_fingerprints(
-        corpus_df, id_col, text_col, k, window, tier, with_counts=True
+        corpus_df, id_col, text_col, k, window, with_counts=True
     )
 
 
@@ -1077,7 +952,6 @@ def winnow_join(
     min_overlap: float = 0.0,
     max_doc_freq: int = 1000,
     corpus_index: DataFrame | None = None,
-    tier: str = "kernel",
 ) -> DataFrame:
     """Asymmetric clone join: (new_id, corpus_id, common, overlap) for a
     new batch against an existing corpus — the daily-increment clone
@@ -1110,7 +984,7 @@ def winnow_join(
         # join side — persist so the corpus md5 stage runs once (a LOADED
         # index is just a parquet scan and needs no cache)
         corpus_index = build_winnow_index(
-            corpus_df, id_col, text_col, k, window, tier
+            corpus_df, id_col, text_col, k, window
         ).persist()
     hot = (
         corpus_index.groupBy("fp")
@@ -1123,7 +997,7 @@ def winnow_join(
         "fp",
         F.col("n_fp").alias("nb"),
     )
-    batch = build_winnow_index(new_df, id_col, text_col, k, window, tier).select(
+    batch = build_winnow_index(new_df, id_col, text_col, k, window).select(
         F.col("doc_id").alias("new_id"), "fp", F.col("n_fp").alias("na")
     )
     common = (
@@ -1140,116 +1014,44 @@ def winnow_join(
     )
 
 
-def _simhash_kernel(
-    df: DataFrame, id_col: str, text_col: str, bits: int
+def simhash_fingerprints(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    bits: int = 60,
 ) -> DataFrame:
-    """Arrow-kernel simhash: (doc_id, simhash) bit-identical to the expr
-    tiers (``T.simhash64`` per row / the exploded-vote aggregate) —
-    parity-tested in tests/test_dedup_text.py on nulls, empties, unicode
-    and exotic whitespace.
+    """(doc_id, simhash BIGINT) — Charikar's SimHash over the md5 token
+    hashes: bit b is set iff more tokens have bit b set than clear.
 
-    The token machinery of ``_shingle_sig_kernel`` at n=1 (token = byte
-    span between 0x20s of the batch's concatenated normalized utf-8
-    buffer, length-grouped vectorized MD5), then a per-bit in-place
-    shift/mask/``np.add.reduceat`` vote — deliberately NOT one
-    (n_tokens, bits) unpacked matrix, whose first-touch page faults cost
-    more than the votes. Null text -> simhash 0 (the expr tiers'
-    null-poisoned accumulator); empty-after-normalization text keeps the
-    expr semantics of split('') == [''] — one empty token whose md5('')
-    bits ARE the vote, so simhash = the 60-bit md5('') constant."""
-    import re as _re
-
-    out_schema = "doc_id bigint, simhash bigint"
+    One Arrow ``mapInPandas`` pass (no exploded-token shuffle, a plan of
+    one node): the tokens of _normalized_token_spans, hashed by
+    _md5_spans_60bit, then a per-bit in-place shift/mask/
+    ``np.add.reduceat`` vote — deliberately NOT one (n_tokens, bits)
+    unpacked matrix, whose first-touch page faults cost more than the
+    votes. Null text has no tokens, hence simhash 0; text that
+    normalizes to "" is one empty token whose md5('') bits ARE the vote,
+    so its simhash is the 60-bit md5('') constant."""
     d0 = df.select(
         F.col(id_col).cast("bigint").alias("_id"), F.col(text_col).alias("_txt")
     )
 
     def kernel(batches):
-        import hashlib
-
-        import numpy as np
         import pandas as pd
 
-        from kiez_spark.functions.md5vec import md5_rows_60bit
-
-        ws = _re.compile(r"\s+", _re.ASCII)
-        h_empty = (
-            int.from_bytes(hashlib.md5(b"").digest()[:8], "big") >> 4
-        )
-
         for pdf in batches:
-            nd = len(pdf)
-            encs = []
-            isnull = np.zeros(nd, bool)
-            for i, t in enumerate(pdf["_txt"]):
-                if t is None:
-                    isnull[i] = True
-                    encs.append(b"")
-                    continue
-                s = t.lower()
-                if (
-                    "\t" in s
-                    or "\n" in s
-                    or "\x0b" in s
-                    or "\x0c" in s
-                    or "\r" in s
-                    or "  " in s
-                ):
-                    s = ws.sub(" ", s)
-                encs.append(s.strip(" ").encode("utf-8"))
-            lens = np.fromiter((len(e) for e in encs), np.int64, nd)
-            off = np.zeros(nd + 1, np.int64)
-            np.cumsum(lens, out=off[1:])
-            raw = b"".join(encs)
-            buf = np.frombuffer(raw, dtype=np.uint8)
-            sp = np.flatnonzero(buf == 0x20)
-            nonempty = lens > 0
-            tok_per_doc = np.where(
-                nonempty,
-                np.bincount(
-                    np.searchsorted(off[1:], sp, side="right"), minlength=nd
-                )
-                + 1,
-                0,
+            buf, starts, ends, tok_per_doc = _normalized_token_spans(
+                pdf["_txt"]
             )
-            total_t = int(tok_per_doc.sum())
-            simhash = np.zeros(nd, np.int64)
-            if total_t:
-                tok_starts = np.sort(
-                    np.concatenate([off[:-1][nonempty], sp + 1])
-                )
-                t_len = (
-                    np.sort(np.concatenate([sp, off[1:][nonempty]]))
-                    - tok_starts
-                )
-                hashes = np.empty(total_t, np.int64)
-                order = np.argsort(t_len, kind="stable")
-                sl = t_len[order]
-                lo = 0
-                mv = memoryview(raw)
-                for hi in [*np.flatnonzero(np.diff(sl)) + 1, total_t]:
-                    idx = order[lo:hi]
-                    ln = int(sl[lo])
-                    lo = hi
-                    if ln <= 55:
-                        mat = buf[tok_starts[idx][:, None] + np.arange(ln)]
-                        hashes[idx] = md5_rows_60bit(mat)
-                    else:
-                        md5 = hashlib.md5
-                        hashes[idx] = [
-                            int.from_bytes(
-                                md5(mv[s0 : s0 + ln]).digest()[:8], "big"
-                            )
-                            >> 4
-                            for s0 in tok_starts[idx]
-                        ]
-                ne = tok_per_doc > 0
-                t_off = np.zeros(nd + 1, np.int64)
+            hashes = _md5_spans_60bit(buf, starts, ends - starts)
+            simhash = np.zeros(len(pdf), np.int64)
+            ne = tok_per_doc > 0
+            if ne.any():
+                t_off = np.zeros(len(pdf) + 1, np.int64)
                 np.cumsum(tok_per_doc, out=t_off[1:])
                 ne_starts = t_off[:-1][ne]
                 m = tok_per_doc[ne]
                 sim_ne = np.zeros(len(m), np.int64)
-                scratch = np.empty(total_t, np.int64)
+                scratch = np.empty(len(hashes), np.int64)
                 for b in range(bits):
                     np.right_shift(hashes, b, out=scratch)
                     np.bitwise_and(scratch, 1, out=scratch)
@@ -1259,64 +1061,11 @@ def _simhash_kernel(
                         2 * np.add.reduceat(scratch, ne_starts) > m
                     ).astype(np.int64) << b
                 simhash[ne] = sim_ne
-            empty_doc = (~isnull) & (lens == 0)
-            simhash[empty_doc] = h_empty & ((1 << bits) - 1)
             yield pd.DataFrame(
                 {"doc_id": pdf["_id"].to_numpy(), "simhash": simhash}
             )
 
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if d0.rdd.getNumPartitions() < target:
-        d0 = d0.repartition(target)
-    return d0.mapInPandas(kernel, schema=out_schema)
-
-
-def simhash_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 60,
-    tier: str = "kernel",
-) -> DataFrame:
-    """(doc_id, simhash BIGINT).
-
-    ``tier="kernel"`` (default): one vectorized Arrow pass
-    (_simhash_kernel) — no exploded-token shuffle at all, and a plan of
-    one node instead of the 60-aggregate tree (whose driver-side
-    analysis alone is measurable). ``tier="expr"``: explode the token
-    hashes and majority-vote each bit with whole-stage-codegen sums +
-    map-side partial aggregation (guide §2.3/§4.1) — the no-python-
-    worker fallback. Both bit-identical to ``T.simhash64`` (kept for the
-    per-row streaming path, which cannot aggregate): per-token vote is
-    the same ±1 integer, bit b is set iff the integer vote sum is > 0,
-    and a null token array (null text) yields all-null votes, hence
-    simhash 0, exactly like the HOF's null-poisoned accumulator. Token
-    hashes are never null for non-null tokens (md5 of a string), so
-    per-element null semantics cannot diverge."""
-    if tier not in ("expr", "kernel"):
-        raise ValueError(f"unknown simhash tier {tier!r} (expr|kernel)")
-    if tier == "kernel":
-        return _simhash_kernel(df, id_col, text_col, bits)
-    h = df.select(
-        F.col(id_col).cast("bigint").alias("doc_id"),
-        F.explode_outer(T.tokens(F.col(text_col))).alias("_t"),
-    ).select("doc_id", T.token_hash(F.col("_t")).alias("_h"))
-    votes = [
-        F.sum(
-            F.when(
-                F.col("_h").isNotNull(),
-                (F.shiftright("_h", b) % F.lit(2)) * 2 - 1,
-            )
-        ).alias(f"_v{b}")
-        for b in range(bits)
-    ]
-    agg = h.groupBy("doc_id").agg(*votes)
-    out = F.lit(0).cast("bigint")
-    for b in range(bits):
-        out = out + F.when(
-            F.col(f"_v{b}") > 0, F.lit(1 << b).cast("bigint")
-        ).otherwise(F.lit(0).cast("bigint"))
-    return agg.select("doc_id", out.alias("simhash"))
+    return _spread(d0).mapInPandas(kernel, schema="doc_id bigint, simhash bigint")
 
 
 def simhash_pairs(
@@ -1325,16 +1074,22 @@ def simhash_pairs(
     text_col: str = "text",
     max_hamming: int = 6,
     bits: int = 60,
-    bands: int = 4,
-    tier: str = "kernel",
+    bands: int | None = None,
 ) -> DataFrame:
-    """Pairs with Hamming(simhash) <= max_hamming. Banding on bit slices:
-    any pair within max_hamming < bands must agree on >= 1 band
-    (pigeonhole), so the banded equi-join is recall-complete for
-    max_hamming <= bands - 1 differing *bands*; with uniformly spread bit
-    flips this holds overwhelmingly — the verification filter is exact."""
+    """(src_id, tgt_id, hamming) — pairs with Hamming(simhash) <=
+    max_hamming, found by a banded equi-join on ``bands`` disjoint bit
+    slices and verified exactly.
+
+    Recall is complete whenever max_hamming < bands (pigeonhole: fewer
+    differing bits than bands leave at least one band equal). The
+    default ``bands = max_hamming + 1`` is the fewest bands that keep
+    it complete; fewer bands miss pairs whose differing bits touch every
+    band (e.g. a 2/2/1/1 split over 4 bands at max_hamming=6) in return
+    for wider band keys and fewer candidates."""
+    if bands is None:
+        bands = max_hamming + 1
     band_bits = bits // bands
-    fp = simhash_fingerprints(df, id_col, text_col, bits, tier)
+    fp = simhash_fingerprints(df, id_col, text_col, bits)
     banded = fp.select(
         "doc_id",
         "simhash",

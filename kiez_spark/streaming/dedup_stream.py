@@ -5,22 +5,18 @@ kiez), so these are [ext] training-data-pipeline operators: a document
 firehose is deduplicated / fingerprinted incrementally instead of by
 periodic batch reprocessing.
 
-- ``dedup_stream``:      exact streaming dedup on sha256(text). With an
-  event-time column, state is bounded by ``dropDuplicatesWithinWatermark``
-  (late duplicates beyond the watermark are the accepted trade-off at
-  unbounded scale); without one, global ``dropDuplicates`` (unbounded
-  state — only for bounded backfills).
-- ``signature_stream``:  stateless — the minhash/simhash column
-  expressions from the batch engine run unchanged on a stream, proving
-  the operators are engine-agnostic dataflow.
+``dedup_stream`` is exact streaming dedup on sha256(text). With an
+event-time column, state is bounded by ``dropDuplicatesWithinWatermark``
+(late duplicates beyond the watermark are the accepted trade-off at
+unbounded scale); without one, global ``dropDuplicates`` (unbounded
+state — only for bounded backfills). Online MinHash near-dup flagging
+lives in streaming/stateful.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from kiez_spark.functions import text as T
 
 
 def dedup_stream(
@@ -37,18 +33,3 @@ def dedup_stream(
         )
     return out.dropDuplicates(["sha"])
 
-
-def signature_stream(
-    stream_df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    n_hashes: int = 16, shingle_n: int = 3, seed: int = 42,
-) -> DataFrame:
-    tok = T.tokens(F.col(text_col))
-    sh = F.array_distinct(T.shingles(tok, shingle_n))
-    hmod = F.transform(sh, lambda s: T.token_hash(s) % F.lit(T.MINHASH_P))
-    params = T.minhash_params(n_hashes, seed)
-    sig = F.array(*[T.minhash_from_hashes(hmod, a, b) for a, b in params])
-    return stream_df.select(
-        F.col(id_col).cast("bigint").alias("doc_id"),
-        sig.alias("sig"),
-        T.simhash64(tok).alias("simhash"),
-    )

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-from kiez_spark.functions import text as T
+from kiez_spark.operators.dedup import minhash_signatures
 
 _OUT_SCHEMA = "band_key bigint, doc_id bigint, first_id bigint"
 _STATE_SCHEMA = "first_id bigint, last_seen_ms bigint"
@@ -34,14 +34,12 @@ def banded_keys(
     n_hashes: int = 16, bands: int = 4, shingle_n: int = 3, seed: int = 42,
 ) -> DataFrame:
     """(doc_id, band_key) — one row per (doc, band), keys hashed from the
-    band's minhash-value tuple (identical construction to the batch
-    minhash_lsh_pairs banding)."""
+    band's minhash-value tuple plus the band index. The signature is the
+    batch operator's (dedup.minhash_signatures, an Arrow kernel that also
+    runs on a stream), so documents collide exactly where the batch
+    minhash_lsh_pairs banding collides them."""
     rows_per_band = n_hashes // bands
-    tok = T.tokens(F.col(text_col))
-    sh = F.array_distinct(T.shingles(tok, shingle_n))
-    hmod = F.transform(sh, lambda s: T.token_hash(s) % F.lit(T.MINHASH_P))
-    params = T.minhash_params(n_hashes, seed)
-    sig = [T.minhash_from_hashes(hmod, a, b) for a, b in params]
+    sig = F.col("sig")
     band_keys = [
         F.xxhash64(
             F.concat_ws(
@@ -53,10 +51,9 @@ def banded_keys(
         )
         for b in range(bands)
     ]
-    return df.select(
-        F.col(id_col).cast("bigint").alias("doc_id"),
-        F.explode(F.array(*band_keys)).alias("band_key"),
-    )
+    return minhash_signatures(
+        df, id_col, text_col, n_hashes, shingle_n, seed
+    ).select("doc_id", F.explode(F.array(*band_keys)).alias("band_key"))
 
 
 def online_neardup_flags(

@@ -1,11 +1,15 @@
 """Dedup + text-analysis + multimodal + similarity operators over the
 driver-provided documents/embeddings tables and planted synthetic dups."""
 
+import hashlib
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from kiez_spark import synth
+from kiez_spark.functions import text as T
 from kiez_spark.operators import dedup as D
 from kiez_spark.operators import multimodal as M
 from kiez_spark.operators import similarity as SIM
@@ -55,95 +59,124 @@ def test_minhash_lsh_finds_planted_dups(spark, dup_docs):
     assert precision > 0.95, f"minhash precision {precision}"
 
 
+_EDGE_TEXTS = [
+    (1, None),
+    (2, ""),
+    (3, "   "),
+    (4, "a"),
+    (5, "a b"),
+    (6, "a b c"),
+    (7, "a  b\tc\nd e"),
+    (8, " x y z "),
+    (10, "ümlaut ünïcode tökens hërę extra words"),
+    (11, "\x0bv\x0c f\r n q r"),
+    (12, ("w" * 30 + " ") * 6),  # >55-byte shingles
+    (13, "İstanbul CASE ſtraße test here now"),
+    (14, "w" * 80),  # one >55-byte token
+    (15, "dup dup dup dup dup dup"),
+]
+
+
+def py_tokens(text):
+    """Reference tokenizer: lowercase, ASCII ``\\s+`` -> " ", trim
+    spaces, split on " " — so text that normalizes to "" is [""]."""
+    return (
+        re.sub(r"\s+", " ", text.lower(), flags=re.ASCII).strip(" ").split(" ")
+    )
+
+
+def py_hash(s):
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
+
+def py_shingles(text, n):
+    """Distinct hashed word n-gram shingles in first-occurrence order."""
+    if text is None:
+        return []
+    tok = py_tokens(text)
+    grams = [" ".join(tok[i : i + n]) for i in range(len(tok) - n + 1)]
+    return list(dict.fromkeys(py_hash(g) for g in grams))
+
+
+def py_minhash(sh, n_hashes=16, seed=42):
+    p = T.MINHASH_P
+    return [
+        min(((a * (h % p) + b) % p for h in sh), default=p)
+        for a, b in T.minhash_params(n_hashes, seed)
+    ]
+
+
+def py_simhash(text, bits=60):
+    if text is None:
+        return 0
+    hs = [py_hash(t) for t in py_tokens(text)]
+    return sum(
+        1 << b
+        for b in range(bits)
+        if 2 * sum((h >> b) & 1 for h in hs) > len(hs)
+    )
+
+
 def test_shingle_kernel_tier_parity(spark, dup_docs):
-    """The Arrow shingle/signature kernel (default tier) must be
-    bit-identical to the expr tier: same distinct shingle hash sets in
-    the same (first-occurrence) order, same signatures — on planted
-    near-dups AND the normalization edge cases (nulls, empties, unicode,
-    exotic whitespace, shingles >55 utf-8 bytes) — at shingle_n=3 and
-    at shingle_n=1, where text that normalizes to "" is one md5('')
-    shingle."""
+    """The shingle/signature kernel equals the pure-Python reference:
+    same distinct shingle hash sets in the same (first-occurrence)
+    order and same minhash signatures — on planted near-dups AND the
+    normalization edge cases (nulls, empties, unicode, exotic
+    whitespace, shingles >55 utf-8 bytes) — at shingle_n=3 and at
+    shingle_n=1, where text that normalizes to "" is one md5('')
+    shingle. The reference tokenizer itself is pinned to the JVM's
+    ``T.tokens`` on the edge set."""
     docs, _ = dup_docs
-    edge = spark.createDataFrame(
-        [
-            (1, None),
-            (2, ""),
-            (3, "   "),
-            (4, "a"),
-            (5, "a b"),
-            (6, "a b c"),
-            (7, "a  b\tc\nd e"),
-            (8, " x y z "),
-            (10, "ümlaut ünïcode tökens hërę extra words"),
-            (11, "\x0bv\x0c f\r n q r"),
-            (12, ("w" * 30 + " ") * 6),  # >55-byte shingles
-            (13, "İstanbul CASE ſtraße test here now"),
-            (15, "dup dup dup dup dup dup"),
-        ],
-        "doc_id long, text string",
-    )
+    edge = spark.createDataFrame(_EDGE_TEXTS, "doc_id long, text string")
+    jvm_tokens = edge.select("doc_id", T.tokens(F.col("text")).alias("t"))
+    for r in jvm_tokens.collect():
+        text = dict(_EDGE_TEXTS)[r.doc_id]
+        assert r.t == (None if text is None else py_tokens(text)), r
     for n, src in ((3, docs), (3, edge), (1, edge)):
-        k = D._with_shingles(src, "doc_id", "text", n, tier="kernel")
-        e = D._with_shingles(src, "doc_id", "text", n, tier="expr")
-        for rk, re_ in zip(
-            k.orderBy("doc_id").collect(), e.orderBy("doc_id").collect(),
-            strict=True,
-        ):
-            assert rk.doc_id == re_.doc_id and rk.sh == re_.sh, (n, rk, re_)
-        sk = D.minhash_signatures(src, n_hashes=16, shingle_n=n, tier="kernel")
-        se = D.minhash_signatures(src, n_hashes=16, shingle_n=n, tier="expr")
-        for rk, re_ in zip(
-            sk.orderBy("doc_id").collect(), se.orderBy("doc_id").collect(),
-            strict=True,
-        ):
-            assert rk.doc_id == re_.doc_id and rk.sig == re_.sig, (n, rk, re_)
-    pk = sorted(
-        map(
-            tuple,
-            D.minhash_lsh_pairs(
-                docs, threshold=0.5, n_hashes=16, bands=8, tier="kernel"
-            ).collect(),
-        )
-    )
-    spark.catalog.clearCache()
-    pe = sorted(
-        map(
-            tuple,
-            D.minhash_lsh_pairs(
-                docs, threshold=0.5, n_hashes=16, bands=8, tier="expr"
-            ).collect(),
-        )
-    )
-    assert pk == pe
+        texts = {r.doc_id: r.text for r in src.collect()}
+        got = D.build_minhash_index(src, n_hashes=16, shingle_n=n).collect()
+        assert sorted(r.doc_id for r in got) == sorted(texts)
+        for r in got:
+            want = py_shingles(texts[r.doc_id], n)
+            assert list(r.sh) == want, (n, r.doc_id)
+            assert list(r.sig) == py_minhash(want), (n, r.doc_id)
 
 
 def test_simhash_kernel_tier_parity(spark, dup_docs):
-    """The Arrow simhash kernel (default tier) must be bit-identical to
-    the exploded-vote expr tier — including null text (simhash 0) and
-    empty-after-normalization text (split('') == [''] semantics: the
-    vote of md5(''), i.e. the 60-bit md5('') constant)."""
+    """The simhash kernel equals the pure-Python reference — including
+    null text (simhash 0) and empty-after-normalization text (one empty
+    token: the 60-bit md5('') constant)."""
     docs, _ = dup_docs
-    edge = spark.createDataFrame(
-        [
-            (1, None),
-            (2, ""),
-            (3, "   "),
-            (4, "a"),
-            (5, "a b"),
-            (7, "a  b\tc\nd e"),
-            (10, "ümlaut ünïcode tökens hërę extra words"),
-            (11, "\x0bv\x0c f\r n q r"),
-            (12, ("w" * 30 + " ") * 6),
-            (14, "w" * 80),  # one >55-byte token
-        ],
-        "doc_id long, text string",
-    )
+    edge = spark.createDataFrame(_EDGE_TEXTS, "doc_id long, text string")
     for src in (docs, edge):
-        k = D.simhash_fingerprints(src, tier="kernel").orderBy("doc_id").collect()
-        e = D.simhash_fingerprints(src, tier="expr").orderBy("doc_id").collect()
-        assert len(k) == len(e)
-        for rk, re_ in zip(k, e):
-            assert rk.doc_id == re_.doc_id and rk.simhash == re_.simhash
+        texts = {r.doc_id: r.text for r in src.collect()}
+        got = {
+            r.doc_id: r.simhash for r in D.simhash_fingerprints(src).collect()
+        }
+        assert got == {d: py_simhash(t) for d, t in texts.items()}
+
+
+def test_simhash_pairs_default_bands_find_every_pair(spark):
+    """With the default bands (max_hamming + 1) the banded join returns
+    exactly the brute-force Hamming <= max_hamming pairs; 4 bands at
+    max_hamming=6 missed pairs whose differing bits touched every band."""
+    files = synth.repos_files(spark, n=400)
+    docs = files.select(
+        F.col("row_id").alias("doc_id"), F.col("content").alias("text")
+    )
+    fp = {r.doc_id: r.simhash for r in D.simhash_fingerprints(docs).collect()}
+    ids = sorted(fp)
+    want = {
+        (a, b): bin(fp[a] ^ fp[b]).count("1")
+        for i, a in enumerate(ids)
+        for b in ids[i + 1 :]
+        if bin(fp[a] ^ fp[b]).count("1") <= 6
+    }
+    got = {
+        (r.src_id, r.tgt_id): r.hamming
+        for r in D.simhash_pairs(docs, max_hamming=6).collect()
+    }
+    assert want and got == want
 
 
 def test_minhash_vs_ngram_jaccard_agree(spark, dup_docs):

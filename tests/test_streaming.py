@@ -1,8 +1,7 @@
-"""Structured-Streaming dedup/signature operators: file source,
+"""Structured-Streaming dedup and window operators: file source,
 availableNow trigger, memory sink — deterministic end-to-end."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from kiez_spark.streaming import dedup_stream as S
 
@@ -42,32 +41,6 @@ def test_streaming_exact_dedup(spark, doc_stream_dir):
     shas = {r.sha for r in rows}
     assert len(shas) == 3
 
-
-def test_streaming_signatures_match_batch(spark, doc_stream_dir):
-    from kiez_spark.operators import dedup as D
-
-    stream = spark.readStream.schema("doc_id bigint, text string").parquet(
-        doc_stream_dir
-    )
-    q = (
-        S.signature_stream(stream)
-        .writeStream.format("memory")
-        .queryName("sig_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r.doc_id: list(r.sig)
-        for r in spark.sql("select * from sig_out").collect()
-    }
-    batch = spark.read.parquet(doc_stream_dir)
-    want = {
-        r.doc_id: list(r.sig)
-        for r in D.minhash_signatures(batch, n_hashes=16).collect()
-    }
-    assert got == want  # streaming == batch, column-for-column
 
 def test_watermark_drops_late_rows_and_holds_open_window(spark, tmp_path):
     """Append-mode hourly windows close in the first batch AFTER the

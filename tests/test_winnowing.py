@@ -1,16 +1,12 @@
 """Winnowing (MOSS) fingerprints + clone-pair mining.
 
 Covers: exact parity with a pure-Python reference winnow (value-set
-semantics), the winnowing match guarantee, whitespace/case invariance,
-planted-clone recovery through winnow_pairs, the df-cap, and the plan
-regression guard for the InferFiltersFromGenerate blowup (a pushed-down
-size>0 filter inlined the staged pipeline and made the operator
-quadratic in document length — 435s -> 1.8s at sf0.01 when fixed)."""
+semantics) for fingerprints and mined pairs, the winnowing match
+guarantee, whitespace/case invariance, planted-clone recovery through
+winnow_pairs, the df-cap, the persisted index and the repo rollup."""
 
 import hashlib
-import io
 import re
-from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
@@ -83,14 +79,9 @@ def test_winnow_parity_randomized(spark):
             (i, "".join(rng.choice(alpha) for _ in range(length)))
         )
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for tier in ("expr", "kernel"):
-        got = _collect_fps(
-            D.winnow_fingerprints(df, k=K, window=W, tier=tier)
-        )
-        for doc_id, text in rows:
-            assert got.get(doc_id, set()) == py_winnow(text), (
-                tier, doc_id, text,
-            )
+    got = _collect_fps(D.winnow_fingerprints(df, k=K, window=W))
+    for doc_id, text in rows:
+        assert got.get(doc_id, set()) == py_winnow(text), (doc_id, text)
 
 
 def test_winnow_guarantee_and_no_short_matches(spark):
@@ -141,51 +132,55 @@ def test_winnow_pairs_recovers_planted_clones(spark):
     assert bad == 0
 
 
-def test_winnow_kernel_tier_equals_expr_through_pairs(spark):
-    """The Arrow-kernel fingerprint tier must be bit-identical to the
-    expr tier all the way through pair mining (same md5 60-bit hashes,
-    same window minima — not just same pairs)."""
+def test_winnow_pairs_match_python_reference(spark):
+    """Mined pairs equal the pairs of the pure-Python reference
+    fingerprints (same md5 60-bit hashes, same window minima — hence the
+    same common counts and overlaps, not just the same pairs)."""
     files = synth.repos_files(spark, n=60, cluster_size=4, dup_fraction=0.5)
     docs = files.select(
         F.col("row_id").alias("doc_id"), F.col("content").alias("text")
     )
-    out = {}
-    for tier in ("expr", "kernel"):
-        out[tier] = {
-            (r.a_id, r.b_id, r.common, r.overlap)
-            for r in D.winnow_pairs(
-                docs, k=K, window=W, min_common=1, tier=tier,
-                max_doc_freq=10_000_000,
-            ).collect()
-        }
-    assert out["expr"] == out["kernel"] and out["expr"]
+    fps = {r.doc_id: py_winnow(r.text) for r in docs.collect()}
+    want = {}
+    for a in fps:
+        for b in fps:
+            common = len(fps[a] & fps[b])
+            if a < b and common:
+                want[(a, b, common)] = common / min(len(fps[a]), len(fps[b]))
+    got = {
+        (r.a_id, r.b_id, r.common): r.overlap
+        for r in D.winnow_pairs(
+            docs, k=K, window=W, min_common=1, max_doc_freq=10_000_000,
+        ).collect()
+    }
+    assert want and got.keys() == want.keys()
+    assert all(abs(got[key] - want[key]) <= 5e-7 for key in want)
 
 
 def test_winnow_with_counts_matches_posting_groupby(spark):
     """with_counts=True (n_fp emitted at fingerprint generation — the
     optimization that removed the index build's posting groupBy +
-    self-join) must agree exactly, per tier, with re-deriving n_fp by
-    counting the posting table; rows without counts are unchanged."""
+    self-join) must agree exactly with re-deriving n_fp by counting the
+    posting table; rows without counts are unchanged."""
     files = synth.repos_files(spark, n=40, cluster_size=4, dup_fraction=0.5)
     docs = files.select(
         F.col("row_id").alias("doc_id"), F.col("content").alias("text")
     )
-    for tier in ("expr", "kernel"):
-        fp = D.winnow_fingerprints(docs, k=K, window=W, tier=tier)
-        derived = {
-            (r.doc_id, r.fp, r.n_fp)
-            for r in fp.join(
-                fp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp")),
-                "doc_id",
-            ).collect()
-        }
-        emitted = {
-            (r.doc_id, r.fp, r.n_fp)
-            for r in D.winnow_fingerprints(
-                docs, k=K, window=W, tier=tier, with_counts=True
-            ).collect()
-        }
-        assert emitted == derived and emitted, tier
+    fp = D.winnow_fingerprints(docs, k=K, window=W)
+    derived = {
+        (r.doc_id, r.fp, r.n_fp)
+        for r in fp.join(
+            fp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp")),
+            "doc_id",
+        ).collect()
+    }
+    emitted = {
+        (r.doc_id, r.fp, r.n_fp)
+        for r in D.winnow_fingerprints(
+            docs, k=K, window=W, with_counts=True
+        ).collect()
+    }
+    assert emitted == derived and emitted
 
 
 def test_winnow_pairs_df_cap_drops_boilerplate(spark):
@@ -267,23 +262,3 @@ def test_winnow_group_pairs_repo_rollup(spark):
     assert common == len(py_winnow(base))  # distinct union == one copy
     assert not any("repo_x" in k for k in pairs)
 
-
-def test_winnow_plan_stays_staged(spark):
-    """Regression guard: the optimized plan must evaluate the k-gram md5
-    stream exactly once. Plain explode makes InferFiltersFromGenerate
-    push a size>0 filter below the staged projections, inlining the
-    whole pipeline into a Filter that re-hashes the stream per window
-    slice — O(len^2) per document."""
-    # tier pinned: the staging property under guard is specific to the
-    # expr (JVM HOF) pipeline; the default tier is the Arrow kernel
-    df = D.winnow_fingerprints(
-        spark.createDataFrame([(1, "x" * 50)], "doc_id long, text string"),
-        k=K, window=W, tier="expr",
-    )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain(True)
-    opt = buf.getvalue().split("== Optimized Logical Plan ==")[1].split(
-        "== Physical Plan =="
-    )[0]
-    assert opt.count("md5") == 1, opt
