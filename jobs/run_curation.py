@@ -70,22 +70,12 @@ try:  # pragma: no cover
 except ModuleNotFoundError:  # pragma: no cover
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from kiez_spark import state  # noqa: E402
 
 # ---------------------------------------------------------------- state
-# Layout (append-only: each version dir holds ONLY that run's additions,
-# so per-increment state I/O is O(batch); readers union every complete
-# version via parquet partition discovery):
-#   S/params.json          frozen pipeline params (written once, base run)
-#   S/index/ver=N/         minhash index delta (doc_id, sh, sig)
-#   S/shas/ver=N/          content-sha delta (doc_id, content_sha)
-#   S/assign/ver=N/        (doc_id, survivor_id) delta; LATEST ver wins
-#                          per doc_id (survivor merges re-point docs)
-#   S/tombstones/ver=N/    survivor doc_ids RETRACTED by a merge event
-#   S/VERSION              "N" or "N B": highest COMPLETE version, plus
-#                          (after --compact-state) the first version a
-#                          reader must scan; written last, atomically,
-#                          so a killed increment's partial ver=N+1 is
-#                          invisible and version/base can never disagree
+# Tables index, shas, assign (LATEST ver wins per doc_id: survivor merges
+# re-point docs) and tombstones (survivor doc_ids RETRACTED by a merge
+# event); the layout, versioning and crash safety: kiez_spark/state.py.
 #
 # The index and sha set cover ALL distinct-content quality-passing docs
 # ever seen (the near-dup stage's input), NOT just survivors: a future
@@ -98,26 +88,6 @@ except ModuleNotFoundError:  # pragma: no cover
 
 _SHINGLE_N = 3
 _MINHASH_SEED = 42
-
-
-def _state_version(state_dir):
-    """(version, base): VERSION holds "N" or "N B" — B is the first
-    version a reader must scan (everything older was folded into the
-    ver=B compaction snapshot). One file, one atomic write: there is no
-    ordering window where version and base could disagree."""
-    vf = os.path.join(state_dir, "VERSION")
-    if not os.path.exists(vf):
-        return 0, 1
-    with open(vf) as fh:
-        parts = fh.read().split()
-    return int(parts[0]), int(parts[1]) if len(parts) > 1 else 1
-
-
-def _write_version(state_dir, ver, base):
-    tmp = os.path.join(state_dir, "VERSION.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(f"{ver} {base}" if base > 1 else str(ver))
-    os.replace(tmp, os.path.join(state_dir, "VERSION"))
 
 
 def _frozen_params(args):
@@ -152,56 +122,28 @@ def _write_state_delta(state_dir, ver, seen, assign, tombstones,
         shingle_n=params["shingle_n"],
         seed=params["seed"],
     )
-    idx.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "index", f"ver={ver}")
+    state.write_delta(
+        state_dir, ver,
+        {"index": idx, "shas": seen.select("doc_id", "content_sha"),
+         "assign": assign.select("doc_id", "survivor_id"),
+         "tombstones": tombstones.select("doc_id")},
+        params, base,
     )
-    seen.select("doc_id", "content_sha").write.mode("overwrite").parquet(
-        os.path.join(state_dir, "shas", f"ver={ver}")
-    )
-    assign.select("doc_id", "survivor_id").write.mode("overwrite").parquet(
-        os.path.join(state_dir, "assign", f"ver={ver}")
-    )
-    tombstones.select("doc_id").write.mode("overwrite").parquet(
-        os.path.join(state_dir, "tombstones", f"ver={ver}")
-    )
-    pf = os.path.join(state_dir, "params.json")
-    # Rewrite params.json on every BASE write (ver == base): a base re-run
-    # into an existing --state-dir must refresh the frozen params, not keep
-    # stale ones beside a rebuilt base state. Increments (ver > base) never
-    # touch them.
-    if ver == base or not os.path.exists(pf):
-        with open(pf, "w") as fh:
-            json.dump(params, fh)
-    _write_version(state_dir, ver, base)
 
 
 def _read_state(spark, state_dir, ver, base=1):
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
+    params, deltas = state.read(spark, state_dir, ver, base)
+    return (params, deltas("index").drop("ver"), deltas("shas").drop("ver"),
+            state.latest_wins(deltas("assign"), "doc_id"))
 
-    with open(os.path.join(state_dir, "params.json")) as fh:
-        params = json.load(fh)
 
-    # partition discovery surfaces `ver`; filter <= VERSION so a killed
-    # later increment's partial delta is never read, and >= base so a
-    # compaction snapshot is not double-counted with the deltas it folded
-    def deltas(name):
-        return spark.read.parquet(os.path.join(state_dir, name)).filter(
-            (F.col("ver") <= ver) & (F.col("ver") >= base)
-        )
-
-    index = deltas("index").drop("ver")
-    shas = deltas("shas").drop("ver")
-    # assignment is latest-version-wins per doc (merge events re-point
-    # every doc of a tombstoned survivor at a later ver)
-    w = Window.partitionBy("doc_id").orderBy(F.col("ver").desc())
-    assign = (
-        deltas("assign")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter("_rn = 1")
-        .drop("_rn", "ver")
-    )
-    return params, index, shas, assign
+def _snapshot(spark, state_dir, ver, base):
+    """--compact-state tables. The tombstone snapshot is empty: earlier
+    tombstone dirs are the retraction log, not read state."""
+    _, index, shas, assign = _read_state(spark, state_dir, ver, base)
+    tombstones = spark.createDataFrame([], "doc_id bigint")
+    return ({"index": index, "shas": shas, "assign": assign,
+             "tombstones": tombstones}, ("docs", shas))
 
 
 def _run_increment(args, spark):
@@ -238,9 +180,7 @@ def _curate_increment(spark, docs, state_dir, output_dir):
     from kiez_spark.operators import dedup as D
     from kiez_spark.operators.text_analysis import quality_features
 
-    ver, base = _state_version(state_dir)
-    if ver < 1:
-        raise SystemExit("--increment requires a base run's --state-dir state")
+    ver, base = state.live_version(state_dir, "--increment")
     params, corpus_index, corpus_shas, corpus_assign = _read_state(
         spark, state_dir, ver, base
     )
@@ -435,94 +375,6 @@ def _curate_increment(spark, docs, state_dir, output_dir):
     return report
 
 
-def _run_compact(args, spark):
-    """Fold every live state delta into one ver=N+1 snapshot and advance
-    base to it: reads stop fanning in over the whole increment history
-    (file listings, and the assign latest-wins window, scale with the
-    number of versions since the last compaction, not since day 0).
-    Crash-safe: the snapshot dirs land first, then the single VERSION
-    file flips (version, base) atomically via rename — a killed compact
-    leaves the old state fully live, with no window where the snapshot
-    and the deltas it folds could both be read. Historical tombstone
-    dirs are left in place (they are the retraction log, not read
-    state)."""
-    ver, base = _state_version(args.state_dir)
-    if ver < 1:
-        raise SystemExit("--compact-state requires an existing state")
-    params, index, shas, assign = _read_state(
-        spark, args.state_dir, ver, base
-    )
-    ver2 = ver + 1
-    for name, df in (("index", index), ("shas", shas), ("assign", assign)):
-        df.write.mode("overwrite").parquet(
-            os.path.join(args.state_dir, name, f"ver={ver2}")
-        )
-    spark.createDataFrame([], "doc_id bigint").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(args.state_dir, "tombstones", f"ver={ver2}"))
-    _write_version(args.state_dir, ver2, ver2)
-    report = {
-        "mode": "compact",
-        "state_version": ver2,
-        "base": ver2,
-        "folded_versions": ver - base + 1,
-        "docs": shas.count(),
-    }
-    print(json.dumps(report))
-    return 0
-
-
-def _run_stream(args, spark):
-    """Continuous curation: a parquet-directory file stream of
-    (doc_id, text) batches, each micro-batch curated against the state
-    through the SAME `_curate_increment` core (foreachBatch). Per-epoch
-    survivors land under <output>/epoch=<id>/.
-
-    Delivery semantics: Structured Streaming's checkpoint gives
-    at-least-once foreachBatch execution — and at-least-once is SAFE
-    here by construction: a replayed micro-batch sha-collides with the
-    state its first execution wrote and curates to zero survivors (the
-    tested re-delivery no-op in tests/test_curation_increment.py), so
-    duplicated epochs cost I/O, never corpus corruption."""
-    from pyspark.sql import functions as F
-
-    if not args.state_dir:
-        raise SystemExit("--stream-input requires --state-dir")
-    reports = []
-
-    def handle(batch_df, epoch_id):
-        # EAGER barrier: the micro-batch frame is a LogicalRDD, and the
-        # core's lazy localCheckpoints cannot rewrite a plan that nests
-        # one (the key-not-found analysis failure documented in
-        # clustering.merge_components) — materialize it clean first
-        docs = batch_df.select("doc_id", "text").localCheckpoint()
-        rep = _curate_increment(
-            spark, docs, args.state_dir,
-            os.path.join(args.output, f"epoch={epoch_id}"),
-        )
-        rep["epoch"] = epoch_id
-        reports.append(rep)
-        print(json.dumps(rep))
-
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(args.stream_input)
-    )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option(
-            "checkpointLocation",
-            args.checkpoint_dir or os.path.join(args.output, "_stream_ckpt"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    print(json.dumps({"mode": "stream", "epochs": len(reports)}))
-    return 0
-
-
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="parquet path of documents(doc_id, text)")
@@ -540,19 +392,37 @@ def main(argv=None) -> int:
     ap.add_argument("--splits", default="train:0.9,val:0.05,test:0.05")
     ap.add_argument("--state-dir", default=None,
                     help="persist survivor index/shas/params for increments")
-    ap.add_argument("--increment", action="store_true",
-                    help="curate a new batch against the --state-dir state")
-    ap.add_argument("--stream-input", default=None,
-                    help="parquet dir consumed as a file stream; each "
-                         "micro-batch curates incrementally (foreachBatch)")
-    ap.add_argument("--compact-state", action="store_true",
-                    help="fold all live state deltas into one snapshot "
-                         "version and advance the read base")
-    args = ap.parse_args(argv)
-    if not args.compact_state and not args.output:
-        ap.error("--output is required")
+    state.add_mode_args(
+        ap, "curate a new batch against the --state-dir state",
+        "parquet dir consumed as a file stream; each micro-batch curates "
+        "incrementally (foreachBatch)",
+    )
+    args = state.parse_args(ap, argv)
 
     from pyspark.sql import SparkSession
+
+    owns_session = SparkSession.getActiveSession() is None
+    spark = SparkSession.builder.appName("kiez-spark-curation").getOrCreate()
+    try:
+        if args.increment:
+            return _run_increment(args, spark)
+        if args.stream_input:
+            return state.run_stream(
+                spark, args.stream_input, "doc_id bigint, text string",
+                args.output, args.checkpoint_dir,
+                lambda docs, out: _curate_increment(
+                    spark, docs, args.state_dir, out
+                ),
+            )
+        if args.compact_state:
+            return state.compact(spark, args.state_dir, _snapshot)
+        return _run_batch(args, ap, spark)
+    finally:
+        if owns_session:
+            spark.stop()
+
+
+def _run_batch(args, ap, spark):
     from pyspark.sql import functions as F
 
     from kiez_spark.checkpoint import StageCheckpointer
@@ -560,29 +430,6 @@ def main(argv=None) -> int:
     from kiez_spark.operators import curation as CUR
     from kiez_spark.operators import dedup as D
     from kiez_spark.operators.text_analysis import quality_features
-
-    owns_session = SparkSession.getActiveSession() is None
-    spark = SparkSession.builder.appName("kiez-spark-curation").getOrCreate()
-
-    if args.increment:
-        if not args.state_dir:
-            ap.error("--increment requires --state-dir")
-        rc = _run_increment(args, spark)
-        if owns_session:
-            spark.stop()
-        return rc
-    if args.stream_input:
-        rc = _run_stream(args, spark)
-        if owns_session:
-            spark.stop()
-        return rc
-    if args.compact_state:
-        if not args.state_dir:
-            ap.error("--compact-state requires --state-dir")
-        rc = _run_compact(args, spark)
-        if owns_session:
-            spark.stop()
-        return rc
 
     if args.synthetic:
         from kiez_spark import synth
@@ -725,8 +572,6 @@ def main(argv=None) -> int:
     if ckpt:
         report["lineage_consistent"] = ckpt.lineage_consistent()
     print(json.dumps(report))
-    if owns_session:
-        spark.stop()
     return 0
 
 

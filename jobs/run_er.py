@@ -44,7 +44,8 @@ update_blocking_index exactly. Clusters are monotone (merge, never
 split). With --top-n 0 on the base run, chained increments are
 provably equal to a full re-run on the combined corpus
 (tests/test_er_job.py). --compact-state folds the live deltas into one
-snapshot version and advances the read base.
+snapshot version and advances the read base. The state layout and its
+crash-safety argument: kiez_spark/state.py.
 
 Usage (local smoke):
   spark-submit jobs/run_er.py --synthetic 800 \\
@@ -71,6 +72,8 @@ try:  # pragma: no cover
     import kiez_spark  # noqa: F401
 except ModuleNotFoundError:  # pragma: no cover
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from kiez_spark import state  # noqa: E402
 
 FIELDS = ["prefix_eq", "suffix_eq", "size_close", "lev_small"]
 
@@ -121,106 +124,44 @@ def _agreements(docs, pairs, lev_bound, extra_cols=()):
     )
 
 
-def _survivors(assign):
-    """Min-id survivor election over (id, component) — the same rule
-    survivor_decisions applies in the base run."""
-    from pyspark.sql import functions as F
-
-    keep = assign.groupBy("component").agg(F.min("id").alias("keep_id"))
-    return assign.join(keep, "component").select(
-        "id", "component", "keep_id",
-        (F.col("id") == F.col("keep_id")).alias("is_survivor"),
-    )
-
-
-# State layout — APPEND-ONLY ver=N parquet partitions, so a daily
-# increment writes O(batch) state rows, never O(corpus) (the same delta
-# design as jobs/run_curation.py):
-#   S/params.json          frozen FS params etc. (written once, base run)
-#   S/docs/ver=N/          that version's docs (doc_id, text, content_sha)
-#   S/posting_raw/ver=N/   that version's UNCAPPED (k, id) postings
-#   S/stats/ver=N/         that version's per-key df contribution (k, df)
-#   S/assign/ver=N/        (id, component) CHANGED rows only; LATEST ver
-#                          wins per id (merges re-point touched rows)
-#   S/VERSION              "N" or "N B" (version, read base) — one atomic
-#                          rename, so a killed write is invisible and
-#                          version/base can never disagree
-# Readers reconstruct the capped posting table by filtering the raw
-# union on the SUMMED df (cap membership depends only on total
-# frequency — exactly update_blocking_index's semantics), and the
-# assignment table latest-wins per id. --compact-state folds the live
-# deltas into one snapshot version and advances the base.
-
-
-def _state_version(state_dir):
-    vf = os.path.join(state_dir, "VERSION")
-    if not os.path.exists(vf):
-        return 0, 1
-    with open(vf) as fh:
-        parts = fh.read().split()
-    return int(parts[0]), int(parts[1]) if len(parts) > 1 else 1
-
-
-def _write_version(state_dir, ver, base):
-    tmp = os.path.join(state_dir, "VERSION.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(f"{ver} {base}" if base > 1 else str(ver))
-    os.replace(tmp, os.path.join(state_dir, "VERSION"))
-
-
 def _write_state_delta(state_dir, ver, docs, posting_raw, stats, assign,
                        params, base=1):
-    for name, df in (
-        ("docs", docs),
-        ("posting_raw", posting_raw),
-        ("stats", stats),
-        ("assign", assign),
-    ):
-        df.write.mode("overwrite").parquet(
-            os.path.join(state_dir, name, f"ver={ver}")
-        )
-    pf = os.path.join(state_dir, "params.json")
-    # Rewrite params.json on every BASE write (ver == base): a base re-run
-    # into an existing --state-dir must refresh the frozen params, not keep
-    # stale ones beside a rebuilt base state. Increments (ver > base) never
-    # touch them.
-    if ver == base or not os.path.exists(pf):
-        with open(pf, "w") as fh:
-            json.dump(params, fh)
-    _write_version(state_dir, ver, base)
+    state.write_delta(
+        state_dir, ver,
+        {"docs": docs, "posting_raw": posting_raw, "stats": stats,
+         "assign": assign},
+        params, base,
+    )
 
 
 def _read_state(spark, state_dir, ver, base=1):
     """(params, docs, posting, stats, assign) reconstructed from the
-    live deltas: posting = raw union filtered to total df <= cap (equal
-    to chaining update_blocking_index, which re-filters the union on the
-    updated df); stats = per-key df sums; assign = latest version wins
-    per id."""
+    live deltas: posting = raw union filtered to total df <= cap (cap
+    membership depends only on total frequency, so this equals chaining
+    update_blocking_index, which re-filters the union on the updated
+    df); stats = per-key df sums; assign = latest version wins per id."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
-    with open(os.path.join(state_dir, "params.json")) as fh:
-        params = json.load(fh)
-
-    def deltas(name):
-        return spark.read.parquet(os.path.join(state_dir, name)).filter(
-            (F.col("ver") <= ver) & (F.col("ver") >= base)
-        )
-
+    params, deltas = state.read(spark, state_dir, ver, base)
     docs = deltas("docs").drop("ver")
     raw = deltas("posting_raw").drop("ver")
     stats = deltas("stats").groupBy("k").agg(F.sum("df").alias("df"))
     posting = raw.join(
         stats.filter(F.col("df") <= int(params["df_cap"])).select("k"), "k"
     ).select("k", "id")
-    w = Window.partitionBy("id").orderBy(F.col("ver").desc())
-    assign = (
-        deltas("assign")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter("_rn = 1")
-        .drop("_rn", "ver")
-    )
+    assign = state.latest_wins(deltas("assign"), "id")
     return params, docs, posting, stats, assign
+
+
+def _snapshot(spark, state_dir, ver, base):
+    """--compact-state tables. posting_raw is snapshotted still UNCAPPED
+    (a key under cap today may cross it later), so later deltas keep
+    reconstructing the cap correctly."""
+    _, docs, _, stats, assign = _read_state(spark, state_dir, ver, base)
+    _, deltas = state.read(spark, state_dir, ver, base)
+    raw = deltas("posting_raw").drop("ver")
+    return ({"docs": docs, "posting_raw": raw, "stats": stats,
+             "assign": assign}, ("docs", docs))
 
 
 def _load_docs(args, spark, need_gold):
@@ -246,49 +187,6 @@ def _load_docs(args, spark, need_gold):
     return docs.withColumn("content_sha", F.sha2("text", 256)), gold, gold_assign
 
 
-def _run_compact(args, spark):
-    """Fold every live state delta into one ver=N+1 snapshot and advance
-    the read base (same crash-safety argument as run_curation.py: the
-    snapshot lands first, then one atomic VERSION rename flips
-    version+base together). posting_raw is stored still-uncapped in the
-    snapshot so later deltas keep reconstructing the cap correctly."""
-    ver, vbase = _state_version(args.state_dir)
-    if ver < 1:
-        raise SystemExit("--compact-state requires an existing state")
-    params, docs, posting, stats, assign = _read_state(
-        spark, args.state_dir, ver, vbase
-    )
-    # re-read the RAW postings (the capped reconstruction must not be
-    # snapshotted — a key under cap today may cross it later)
-    from pyspark.sql import functions as F
-
-    raw = (
-        spark.read.parquet(os.path.join(args.state_dir, "posting_raw"))
-        .filter((F.col("ver") <= ver) & (F.col("ver") >= vbase))
-        .drop("ver")
-    )
-    ver2 = ver + 1
-    for name, df in (
-        ("docs", docs),
-        ("posting_raw", raw),
-        ("stats", stats),
-        ("assign", assign),
-    ):
-        df.write.mode("overwrite").parquet(
-            os.path.join(args.state_dir, name, f"ver={ver2}")
-        )
-    _write_version(args.state_dir, ver2, ver2)
-    report = {
-        "mode": "compact",
-        "state_version": ver2,
-        "base": ver2,
-        "folded_versions": ver - vbase + 1,
-        "docs": docs.count(),
-    }
-    print(json.dumps(report))
-    return 0
-
-
 def _run_increment(args, spark):
     batch, _, _ = _load_docs(args, spark, need_gold=False)
     report = _er_increment(spark, batch, args.state_dir, args.output)
@@ -310,9 +208,7 @@ def _er_increment(spark, batch, state_dir, output_dir):
     from kiez_spark.operators import clustering as C
     from kiez_spark.operators import er as ER
 
-    ver, vbase = _state_version(state_dir)
-    if ver < 1:
-        raise SystemExit("--increment requires a base run's --state-dir state")
+    ver, vbase = state.live_version(state_dir, "--increment")
     params, corpus_docs, posting, stats, assign = _read_state(
         spark, state_dir, ver, vbase
     )
@@ -345,7 +241,7 @@ def _er_increment(spark, batch, state_dir, output_dir):
         batch_nodes=batch.select("doc_id"),
     )
     merged = merged.localCheckpoint()
-    decisions = _survivors(merged)
+    decisions = C.decisions_from_assignment(merged)
     report["clusters"] = merged.select("component").distinct().count()
     report["survivors"] = decisions.filter("is_survivor").count()
 
@@ -378,60 +274,6 @@ def _er_increment(spark, batch, state_dir, output_dir):
     return report
 
 
-def _run_stream(args, spark):
-    """Continuous incremental linkage: a parquet-directory file stream of
-    (doc_id, text) batches, each micro-batch linked against the state
-    through the SAME `_er_increment` core (foreachBatch, availableNow).
-    Per-epoch decisions land under <output>/epoch=<id>/.
-
-    Delivery semantics: Structured Streaming's checkpoint gives
-    at-least-once foreachBatch execution, and at-least-once is SAFE by
-    construction here: _er_increment anti-joins re-delivered doc ids
-    against the corpus state, so a replayed epoch links zero docs and
-    leaves clusters and df stats untouched (tests/test_er_job.py)."""
-    from pyspark.sql import functions as F
-
-    if not args.state_dir:
-        raise SystemExit("--stream-input requires --state-dir")
-    reports = []
-
-    def handle(batch_df, epoch_id):
-        # EAGER barrier: the micro-batch frame is a LogicalRDD and the
-        # core's lazy localCheckpoints cannot rewrite a plan nesting one
-        # (same failure mode documented in jobs/run_curation.py) —
-        # materialize clean first, then attach the ingest sha invariant
-        docs = (
-            batch_df.select("doc_id", "text")
-            .withColumn("content_sha", F.sha2("text", 256))
-            .localCheckpoint()
-        )
-        rep = _er_increment(
-            spark, docs, args.state_dir,
-            os.path.join(args.output, f"epoch={epoch_id}"),
-        )
-        rep["epoch"] = epoch_id
-        reports.append(rep)
-        print(json.dumps(rep))
-
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(args.stream_input)
-    )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option(
-            "checkpointLocation",
-            args.checkpoint_dir or os.path.join(args.output, "_stream_ckpt"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    print(json.dumps({"mode": "stream", "epochs": len(reports)}))
-    return 0
-
-
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="parquet path of docs(doc_id, text)")
@@ -443,15 +285,11 @@ def main(argv=None) -> int:
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--state-dir", default=None,
                     help="persist index/params/assignments for increments")
-    ap.add_argument("--increment", action="store_true",
-                    help="link a new batch against the --state-dir state")
-    ap.add_argument("--stream-input", default=None,
-                    help="parquet dir consumed as a file stream; each "
-                         "micro-batch runs the --increment core "
-                         "(foreachBatch, availableNow)")
-    ap.add_argument("--compact-state", action="store_true",
-                    help="fold all live state deltas into one snapshot "
-                         "version and advance the read base")
+    state.add_mode_args(
+        ap, "link a new batch against the --state-dir state",
+        "parquet dir consumed as a file stream; each micro-batch runs the "
+        "--increment core (foreachBatch, availableNow)",
+    )
     ap.add_argument("--df-cap", type=int, default=64)
     ap.add_argument("--min-cbs", type=int, default=5)
     ap.add_argument("--top-n", type=int, default=10,
@@ -462,9 +300,7 @@ def main(argv=None) -> int:
     ap.add_argument("--evaluate-gold", action="store_true")
     ap.add_argument("--u-offsets", type=int, default=3,
                     help="random-pair offsets per row for u estimation")
-    args = ap.parse_args(argv)
-    if not args.compact_state and not args.output:
-        ap.error("--output is required")
+    args = state.parse_args(ap, argv)
 
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
@@ -477,15 +313,19 @@ def main(argv=None) -> int:
     spark = SparkSession.builder.appName("kiez-spark-er").getOrCreate()
 
     if args.stream_input:
-        return _run_stream(args, spark)
+        return state.run_stream(
+            spark, args.stream_input, "doc_id bigint, text string",
+            args.output, args.checkpoint_dir,
+            # the ingest sha invariant, attached as _load_docs does
+            lambda docs, out: _er_increment(
+                spark, docs.withColumn("content_sha", F.sha2("text", 256)),
+                args.state_dir, out,
+            ),
+        )
     if args.increment:
-        if not args.state_dir:
-            ap.error("--increment requires --state-dir")
         return _run_increment(args, spark)
     if args.compact_state:
-        if not args.state_dir:
-            ap.error("--compact-state requires --state-dir")
-        return _run_compact(args, spark)
+        return state.compact(spark, args.state_dir, _snapshot)
 
     docs, gold, gold_assign = _load_docs(
         args, spark, need_gold=args.evaluate_gold

@@ -34,6 +34,7 @@ try:  # pragma: no cover
 except ModuleNotFoundError:  # pragma: no cover
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from kiez_spark import state  # noqa: E402
 
 # ---------------------------------------------------------------------
 # INCREMENT MODE (embedding-space twin of jobs/run_er.py's production
@@ -54,13 +55,14 @@ except ModuleNotFoundError:  # pragma: no cover
 # The hubness rank gate of the batch pipeline is corpus-GLOBAL (ranks
 # shift as the corpus grows) and therefore not increment-exact; hubness
 # runs stay on the stage-checkpointed batch path above.
-# State layout/versioning is identical to jobs/run_er.py (ver=N dirs +
-# one atomic VERSION rename).
+# The state layout, versioning and crash safety: kiez_spark/state.py.
 #
 # SURVIVOR RULE DIFFERS BY MODE (deliberate, documented): state/
 # increment/stream modes elect keep_id = min(id) per component
-# (_min_id_survivors) — a LOCAL rule, stable under increments (a
-# cluster's survivor only changes when a lower id joins it). The batch
+# (clustering.decisions_from_assignment with no quality score: the
+# state assignment is min-id labelled, so keep_id = component) — a
+# LOCAL rule, stable under increments (a cluster's survivor only
+# changes when a lower id joins it). The batch
 # --write-decisions path elects by quality_features score (ties ->
 # min id), which needs the document TEXT — not part of the persisted
 # embedding state, and not increment-stable (a later batch's higher-
@@ -68,25 +70,6 @@ except ModuleNotFoundError:  # pragma: no cover
 # migrating from batch decisions to the state loop must expect keep_id
 # to change from best-quality to lowest-id for the same clusters.
 # ---------------------------------------------------------------------
-
-try:  # repo-root import (tests, python -m); same VERSION-file contract
-    from jobs.run_er import _state_version, _write_version
-except ModuleNotFoundError:  # pragma: no cover — bare spark-submit jobs/
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from run_er import _state_version, _write_version
-
-
-def _min_id_survivors(assign):
-    """State-mode survivor rule: keep_id = min(id) per component — see
-    the SURVIVOR RULE note above for why this differs from the batch
-    --write-decisions quality-score election."""
-    from pyspark.sql import functions as F
-
-    keep = assign.groupBy("component").agg(F.min("id").alias("keep_id"))
-    return assign.join(keep, "component").select(
-        "id", "component", "keep_id",
-        (F.col("id") == F.col("keep_id")).alias("is_survivor"),
-    )
 
 
 def _lsh_gated_pairs(sig_q, sig_x, emb_q, emb_x, params, exclude_self):
@@ -112,44 +95,22 @@ def _lsh_gated_pairs(sig_q, sig_x, emb_q, emb_x, params, exclude_self):
 
 
 def _write_link_state(state_dir, ver, emb, sig, assign, params, base=1):
-    for name, df in (("emb", emb), ("sig", sig), ("assign", assign)):
-        df.write.mode("overwrite").parquet(
-            os.path.join(state_dir, name, f"ver={ver}")
-        )
-    pf = os.path.join(state_dir, "params.json")
-    # Rewrite params.json on every BASE write (ver == base): a base re-run
-    # into an existing --state-dir must not keep stale frozen params while
-    # overwriting the ver=1 state built with new ones (increments would
-    # then sign/gate in a different LSH space than the state — silently).
-    # Increment writes (ver > base) never touch the frozen params.
-    if ver == base or not os.path.exists(pf):
-        with open(pf, "w") as fh:
-            json.dump(params, fh)
-    _write_version(state_dir, ver, base)
+    state.write_delta(
+        state_dir, ver, {"emb": emb, "sig": sig, "assign": assign},
+        params, base,
+    )
 
 
 def _read_link_state(spark, state_dir, ver, base=1):
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
+    params, deltas = state.read(spark, state_dir, ver, base)
+    return (params, deltas("emb").drop("ver"), deltas("sig").drop("ver"),
+            state.latest_wins(deltas("assign"), "id"))
 
-    with open(os.path.join(state_dir, "params.json")) as fh:
-        params = json.load(fh)
 
-    def deltas(name):
-        return spark.read.parquet(os.path.join(state_dir, name)).filter(
-            (F.col("ver") <= ver) & (F.col("ver") >= base)
-        )
-
-    emb = deltas("emb").drop("ver")
-    sig = deltas("sig").drop("ver")
-    w = Window.partitionBy("id").orderBy(F.col("ver").desc())
-    assign = (
-        deltas("assign")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter("_rn = 1")
-        .drop("_rn", "ver")
-    )
-    return params, emb, sig, assign
+def _snapshot(spark, state_dir, ver, base):
+    """--compact-state tables: the live deltas, assign latest-wins."""
+    _, emb, sig, assign = _read_link_state(spark, state_dir, ver, base)
+    return {"emb": emb, "sig": sig, "assign": assign}, ("rows", emb)
 
 
 def _derive_emb(files, dim):
@@ -175,8 +136,6 @@ def _sha_violations(files, emb):
 
 
 def _run_state_base(args, spark, files):
-    from pyspark.sql import functions as F
-
     from kiez_spark.operators import clustering as C
     from kiez_spark.operators import lsh as L
 
@@ -205,7 +164,7 @@ def _run_state_base(args, spark, files):
     assign = C.connected_components(
         pairs, nodes=emb.select("id"), pair_cols=("a_id", "b_id")
     ).localCheckpoint()
-    decisions = _min_id_survivors(assign)
+    decisions = C.decisions_from_assignment(assign)
     report = {
         "mode": "state_base",
         "rows": emb.count(),
@@ -232,9 +191,7 @@ def _linkage_increment(spark, files_batch, state_dir, output_dir):
     from kiez_spark.operators import clustering as C
     from kiez_spark.operators import lsh as L
 
-    ver, base = _state_version(state_dir)
-    if ver < 1:
-        raise SystemExit("--increment requires a base run's --state-dir state")
+    ver, base = state.live_version(state_dir, "--increment")
     params, emb_c, sig_c, assign = _read_link_state(spark, state_dir, ver, base)
 
     report = {"mode": "increment", "base_version": ver,
@@ -260,7 +217,7 @@ def _linkage_increment(spark, files_batch, state_dir, output_dir):
         batch_nodes=emb_b.select(F.col("id").alias("doc_id")),
     )
     merged = merged.localCheckpoint()
-    decisions = _min_id_survivors(merged)
+    decisions = C.decisions_from_assignment(merged)
     report["clusters"] = merged.select("component").distinct().count()
     report["survivors"] = decisions.filter("is_survivor").count()
     report["sha_violations"] = _sha_violations(files_batch, emb_b)
@@ -272,68 +229,6 @@ def _linkage_increment(spark, files_batch, state_dir, output_dir):
     report["new_version"] = ver + 1
     decisions.write.mode("overwrite").parquet(output_dir)
     return report
-
-
-def _run_link_stream(args, spark):
-    """Continuous incremental linkage over a parquet file stream of
-    repos_files batches (foreachBatch, availableNow) — one
-    _linkage_increment per micro-batch; replay-safe via the row_id
-    anti-join. Per-epoch decisions land under <output>/epoch=<id>/."""
-    if not args.state_dir:
-        raise SystemExit("--stream-input requires --state-dir")
-    reports = []
-
-    def handle(batch_df, epoch_id):
-        # EAGER barrier: micro-batch frames are LogicalRDDs; the core's
-        # lazy checkpoints cannot rewrite a plan nesting one
-        files = batch_df.select("row_id", "content").localCheckpoint()
-        rep = _linkage_increment(
-            spark, files, args.state_dir,
-            os.path.join(args.output, f"epoch={epoch_id}"),
-        )
-        rep["epoch"] = epoch_id
-        reports.append(rep)
-        print(json.dumps(rep))
-
-    stream = (
-        spark.readStream.schema("row_id bigint, content string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(args.stream_input)
-    )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option(
-            "checkpointLocation",
-            args.checkpoint_dir or os.path.join(args.output, "_stream_ckpt"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    print(json.dumps({"mode": "stream", "epochs": len(reports)}))
-    return 0
-
-
-def _run_link_compact(args, spark):
-    """Fold every live state delta into one ver=N+1 snapshot and advance
-    the read base (crash-safe: snapshot dirs land first, the single
-    VERSION rename flips version+base together)."""
-    ver, base = _state_version(args.state_dir)
-    if ver < 1:
-        raise SystemExit("--compact-state requires an existing state")
-    params, emb, sig, assign = _read_link_state(
-        spark, args.state_dir, ver, base
-    )
-    ver2 = ver + 1
-    for name, df in (("emb", emb), ("sig", sig), ("assign", assign)):
-        df.write.mode("overwrite").parquet(
-            os.path.join(args.state_dir, name, f"ver={ver2}")
-        )
-    _write_version(args.state_dir, ver2, ver2)
-    report = {"mode": "compact", "state_version": ver2, "base": ver2,
-              "folded_versions": ver - base + 1, "rows": emb.count()}
-    print(json.dumps(report))
-    return 0
 
 
 def main(argv=None) -> int:
@@ -363,14 +258,11 @@ def main(argv=None) -> int:
                     help="persist embeddings/LSH index/assignments as "
                          "ver=N deltas for increments (pair rule: LSH "
                          "collision + --max-dist gate)")
-    ap.add_argument("--increment", action="store_true",
-                    help="link a new batch against the --state-dir state")
-    ap.add_argument("--stream-input", default=None,
-                    help="parquet dir consumed as a file stream; each "
-                         "micro-batch runs the --increment core")
-    ap.add_argument("--compact-state", action="store_true",
-                    help="fold all live state deltas into one snapshot "
-                         "version and advance the read base")
+    state.add_mode_args(
+        ap, "link a new batch against the --state-dir state",
+        "parquet dir consumed as a file stream; each micro-batch runs the "
+        "--increment core",
+    )
     ap.add_argument("--lsh-tables", type=int, default=12)
     ap.add_argument("--lsh-bits", type=int, default=6)
     ap.add_argument("--lsh-bucket-width", type=float, default=None,
@@ -383,59 +275,55 @@ def main(argv=None) -> int:
                     "source-to-source); output = (src_id, tgt_id, dist). "
                     "With --synthetic, PATH 'mutated' aligns against a "
                     "one-token-edit copy with planted gold links.")
-    args = ap.parse_args(argv)
-    if not args.compact_state and not args.output:
-        ap.error("--output is required")
+    args = state.parse_args(ap, argv)
 
     from pyspark.sql import SparkSession
+
+    owns_session = SparkSession.getActiveSession() is None
+    spark = SparkSession.builder.appName("kiez-spark-linkage").getOrCreate()
+    try:
+        return _run(args, ap, spark)
+    finally:
+        if owns_session:
+            spark.stop()
+
+
+def _run(args, ap, spark):
+    from pyspark.sql import functions as F
 
     from kiez_spark import synth
     from kiez_spark.linkage import link_files
     from kiez_spark.operators import evaluate as E
 
-    owns_session = SparkSession.getActiveSession() is None
-    spark = SparkSession.builder.appName("kiez-spark-linkage").getOrCreate()
-
     if args.stream_input:
-        rc = _run_link_stream(args, spark)
-        if owns_session:
-            spark.stop()
-        return rc
+        return state.run_stream(
+            spark, args.stream_input, "row_id bigint, content string",
+            args.output, args.checkpoint_dir,
+            lambda files, out: _linkage_increment(
+                spark, files, args.state_dir, out
+            ),
+        )
     if args.compact_state:
-        if not args.state_dir:
-            ap.error("--compact-state requires --state-dir")
-        rc = _run_link_compact(args, spark)
-        if owns_session:
-            spark.stop()
-        return rc
+        return state.compact(spark, args.state_dir, _snapshot)
 
     if args.synthetic:
         files = synth.repos_files(spark, n=args.synthetic)
     elif args.input:
         files = spark.read.parquet(args.input)
         if "row_id" not in files.columns:
-            from pyspark.sql import functions as F
-
             files = files.withColumn("row_id", F.monotonically_increasing_id())
     else:
         ap.error("one of --input / --synthetic is required")
 
     if args.increment:
-        if not args.state_dir:
-            ap.error("--increment requires --state-dir")
         report = _linkage_increment(
             spark, files.select("row_id", "content"), args.state_dir,
             args.output,
         )
         print(json.dumps(report))
-        if owns_session:
-            spark.stop()
         return 0
     if args.state_dir:
-        rc = _run_state_base(args, spark, files)
-        if owns_session:
-            spark.stop()
-        return rc
+        return _run_state_base(args, spark, files)
 
     if args.target_input:
         from kiez_spark.linkage import align_files
@@ -445,8 +333,6 @@ def main(argv=None) -> int:
         else:
             tgt_files = spark.read.parquet(args.target_input)
             if "row_id" not in tgt_files.columns:
-                from pyspark.sql import functions as F
-
                 tgt_files = tgt_files.withColumn(
                     "row_id", F.monotonically_increasing_id()
                 )
@@ -479,8 +365,6 @@ def main(argv=None) -> int:
             ).first()
             report["pairwise_f1"] = f1.f1
         print(json.dumps(report))
-        if owns_session:
-            spark.stop()
         return 0
 
     res = link_files(
@@ -514,8 +398,6 @@ def main(argv=None) -> int:
         ).first()
         report["pairwise_f1"] = f1.f1
     print(json.dumps(report))
-    if owns_session:
-        spark.stop()
     return 0
 
 

@@ -30,6 +30,16 @@ def _run(spark, tmp_path, n, run_id):
     return json.loads(buf.getvalue().strip().splitlines()[-1]), out
 
 
+def _assert_min_id_components(spark, path):
+    """State-mode decisions: every component label is the minimum id of
+    its members, and keep_id is that label."""
+    df = spark.read.parquet(path)
+    grp = df.groupBy("component").agg(F.min("id").alias("min_id"))
+    assert grp.filter("component != min_id").count() == 0
+    assert df.filter("keep_id != component").count() == 0
+    assert df.filter("is_survivor != (id = component)").count() == 0
+
+
 def test_er_job_f1_sha_and_resume(spark, tmp_path):
     from kiez_spark import synth
 
@@ -130,6 +140,8 @@ def test_er_job_increment_chain(spark, tmp_path):
     # one survivor per entity, survivor = min id (matches the base rule)
     assert final.filter("is_survivor").count() == 440
     assert final.filter("is_survivor and id != keep_id").count() == 0
+    for out in ("o0", "o1", "o2"):
+        _assert_min_id_components(spark, str(tmp_path / out))
 
 
 def test_er_job_stream_equals_batch_increments(spark, tmp_path):
@@ -199,6 +211,8 @@ def test_er_job_stream_equals_batch_increments(spark, tmp_path):
         pred_cols=("u", "v"),
     ).collect()[0]
     assert (f1.tp, f1.fp, f1.fn) == (720, 0, 0)
+    for ep in epochs:
+        _assert_min_id_components(spark, f"{out}/epoch={ep['epoch']}")
 
     # replay safety: re-deliver batch 1 through the plain increment core
     # — every id already lives in the state, so it must be a no-op

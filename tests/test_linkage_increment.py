@@ -36,6 +36,16 @@ def _assignments(spark, path):
     }
 
 
+def _assert_min_id_components(spark, path):
+    """State-mode decisions: every component label is the minimum id of
+    its members, and keep_id is that label."""
+    df = spark.read.parquet(path)
+    grp = df.groupBy("component").agg(F.min("id").alias("min_id"))
+    assert grp.filter("component != min_id").count() == 0
+    assert df.filter("keep_id != component").count() == 0
+    assert df.filter("is_survivor != (id = component)").count() == 0
+
+
 def test_linkage_increment_chain_equals_full_state_run(spark, tmp_path):
     from kiez_spark import synth
     from kiez_spark.operators import evaluate as EV
@@ -77,6 +87,9 @@ def test_linkage_increment_chain_equals_full_state_run(spark, tmp_path):
                  "--max-dist", "12.0",
                  "--lsh-bucket-width", str(params["bucket_width"])])[-1]
     assert full["sha_violations"] == 0
+
+    for out in ("o0", "o1", "o2", "of"):
+        _assert_min_id_components(spark, str(tmp_path / out))
 
     # EXACT equality of the final clusterings (label-invariant)
     assert _assignments(spark, str(tmp_path / "o2")) == _assignments(
@@ -132,3 +145,4 @@ def test_linkage_stream_and_replay(spark, tmp_path):
     assert rep["batch_docs_new"] == 0
     assert rep["matched_pairs"] == 0
     assert rep["clusters"] == ep["clusters"]
+    _assert_min_id_components(spark, f"{out}/epoch={ep['epoch']}")
