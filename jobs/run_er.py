@@ -18,8 +18,9 @@ files(row_id, content)
                        every pair scored with the fitted log2 weights
                        and thresholded at posterior 0.5
                        (weight > log2((1-p)/p))
-  -> stage "clusters": matched pairs -> large/small-star connected
-                       components -> survivor election
+  -> stage "clusters": matched pairs -> connected components (driver
+                       finish, star rounds above _LOCAL_EDGES) ->
+                       survivor election
   -> optional --evaluate-gold: pairwise precision/recall/F1 vs the
                        planted clusters + a per-row content-sha256
                        invariant check across the pipeline.
@@ -207,6 +208,7 @@ def _er_increment(spark, batch, state_dir, output_dir):
 
     from kiez_spark.operators import clustering as C
     from kiez_spark.operators import er as ER
+    from kiez_spark.operators import evaluate as EV
 
     ver, vbase = state.live_version(state_dir, "--increment")
     params, corpus_docs, posting, stats, assign = _read_state(
@@ -242,8 +244,7 @@ def _er_increment(spark, batch, state_dir, output_dir):
     )
     merged = merged.localCheckpoint()
     decisions = C.decisions_from_assignment(merged)
-    report["clusters"] = merged.select("component").distinct().count()
-    report["survivors"] = decisions.filter("is_survivor").count()
+    report.update(EV.cluster_counts(decisions))
 
     # per-row sha invariant across corpus + batch after the merge
     report["sha_violations"] = (
@@ -413,8 +414,7 @@ def main(argv=None) -> int:
         )
 
     decisions = run_stage("clusters", build_clusters)
-    report["clusters"] = decisions.select("component").distinct().count()
-    report["survivors"] = decisions.filter("is_survivor").count()
+    report.update(EV.cluster_counts(decisions))
 
     # per-row sha invariant: every id's sha after the pipeline equals the
     # ingest sha (joined back through the decisions table)

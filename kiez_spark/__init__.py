@@ -9,7 +9,8 @@ see /root/reference/kiez/kiez.py:19) as idiomatic Spark DataFrame dataflow:
 - hubness reduction (CSLS, LocalScaling, NICDM, MutualProximity, DisSimLocal)
   = window-function k-NN statistics + broadcast joins + column expressions,
 - final top-k = rank windows with deterministic tie-breaks,
-- entity clustering = iterative connected components (large-star/small-star),
+- entity clustering = connected components (a driver-side numpy finish while
+  the edges fit, large-star/small-star rounds above that),
 - hubness analysis + hits@k evaluation = aggregations.
 
 Everything is DataFrame-first: math stays in Spark SQL expressions

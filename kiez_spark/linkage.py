@@ -6,8 +6,9 @@ repos_files(repo, path, commit, lang, content)
                           sha re-attached per query row
   -> stage "pairs":       distance threshold on RAW distance + candidate
                           rank gate; canonicalized unordered pairs
-  -> stage "clusters":    large-star/small-star connected components;
-                          singletons included; sha re-attached
+  -> stage "clusters":    connected components (driver finish while the
+                          edges fit, star rounds above); one left join
+                          onto the embeddings adds singletons and the sha
 
 Every stage checkpoints through StageCheckpointer (resume + lineage +
 metrics + sha invariant, see checkpoint.py). Pass checkpoint_dir=None to
@@ -70,9 +71,9 @@ def link_files(
 
     emb = run_stage("embeddings", lambda: derive_embeddings(files, dim=dim))
     if ckpt is None:
-        # un-checkpointed runs: the embedding table is consumed by four
-        # downstream plans (fit, query/cand vector joins, the cluster
-        # sha join, the CC node universe) — cut the lineage once, lazily,
+        # un-checkpointed runs: the embedding table is consumed by three
+        # downstream plans (fit, query/cand vector joins, the clusters
+        # join) — cut the lineage once, lazily,
         # so the kernel runs one time instead of per consumer. With a
         # checkpointer the parquet stage already provides this.
         emb = emb.localCheckpoint(eager=False)
@@ -130,12 +131,12 @@ def link_files(
     pairs = run_stage("pairs", build_pairs)
 
     def build_clusters() -> DataFrame:
-        assign = C.connected_components(
-            pairs, nodes=emb.select("id"), pair_cols=("src_id", "tgt_id")
+        # edge-incident ids only; one left join onto the embeddings gives
+        # every other id its singleton component
+        assign = C.connected_components(pairs, pair_cols=("src_id", "tgt_id"))
+        return emb.select("id", "content_sha").join(assign, "id", "left").select(
+            "id", F.coalesce("component", "id").alias("component"), "content_sha"
         )
-        return assign.join(
-            emb.select("id", "content_sha"), "id"
-        ).select("id", "component", "content_sha")
 
     clusters = run_stage("clusters", build_clusters)
     return LinkageResult(emb, cands, pairs, clusters, ckpt)

@@ -1,27 +1,58 @@
-"""Transitive clustering: connected components via large-star/small-star.
+"""Transitive clustering: connected components, contracted in Spark and
+finished on the driver.
 
 [ext] operator (BASELINE.json north_rule) — the reference is single-node
 and stops at neighbor lists; at cluster scale, matched pairs must be folded
-into entity groups. Implements the alternating large-star / small-star
-algorithm (Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC 2014 — public algorithm), which converges in O(log n) rounds vs
-O(diameter) for naive label propagation:
+into entity groups. ``connected_components`` runs in two phases, chosen
+only by the edge count it observes:
 
-  large-star: for each node u, connect every neighbor v > u to
-              m = min(N(u) ∪ {u})
-  small-star: orient edges to smaller ids; connect every v in
-              N≤(u) ∪ {u} except m to m = min(N≤(u) ∪ {u})
+1. **Collect when the edges fit.** The projected, self-edge-free pairs
+   are collected to the driver in one guarded Arrow action
+   (``limit(_LOCAL_EDGES + 1)``). At most ``_LOCAL_EDGES`` edges are
+   labelled on the driver with numpy (``_local_components``: min-label
+   hooking plus pointer jumping over dense ids), and the (id, component)
+   table goes back to Spark as a small local relation.
+2. **Star rounds above the threshold.** Otherwise the alternating
+   large-star / small-star rounds (Kiveris et al., "Connected Components
+   in MapReduce and Beyond", SoCC 2014) contract the edge set in Spark:
 
-Driver-side control flow Catalyst can't express (SURVEY.md §4): each round
-``localCheckpoint``s to truncate lineage (mandatory — the self-join loop
-otherwise compounds the plan exponentially) and convergence is detected by
-an edge-set checksum (count + xor of pair hashes), two scalars per round.
+     large-star: for each node u, connect every neighbor v > u to
+                 m = min(N(u) ∪ {u})
+     small-star: orient edges to smaller ids; connect every v in
+                 N≤(u) ∪ {u} except m to m = min(N≤(u) ∪ {u})
+
+   Each round ``localCheckpoint``s to truncate lineage (mandatory — the
+   self-join loop otherwise compounds the plan exponentially) and reports
+   an edge-set checksum (count + xor of pair hashes). As soon as the
+   count is at or below ``_LOCAL_EDGES`` the round's edges are collected
+   and finished on the driver; the rounds keep every edge-incident node
+   and its component, so the finish labels the input graph. Rounds that
+   reach a fixed point above the threshold end in Spark as before; running
+   out of ``max_iter`` rounds without one raises.
+
+This is the contract-then-solve-locally pattern of Łącki et al.,
+"Connected Components at Scale via Local Contractions" (2018). A round
+costs two window exchanges, a distinct, a checkpoint and a checksum job,
+and every job's plans are compiled and JIT-tiered on the driver, so on
+graphs that fit in driver memory one collect is far cheaper than the
+O(log n) rounds. Either way the component is the minimum member id, so
+the output does not depend on which phase finished it.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# Largest edge set finished on the driver, sized for driver memory: an
+# edge is two int64 Arrow columns, 16 bytes, so 2,000,000 edges collect
+# to ~32 MB (passing once through the driver JVM on their way to Python),
+# and the numpy finish adds a few int64 arrays of at most twice the edge
+# count (ids, inverse, labels): a small multiple of 32 MB, well inside a
+# 1-2 GB driver.
+_LOCAL_EDGES = 2_000_000
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -79,6 +110,69 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["cnt"]), int(row["sig"])
 
 
+def _local_components(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, component) for every id on the edges (u, v); component = min
+    id in its component. Ids are compressed with np.unique, so dense order
+    is id order and the min dense label is the min id. Each pass hooks
+    both endpoints and their current labels to the smaller label of the
+    edge, then pointer-jumps every label to its root; labels only fall
+    and always name a member of the same component, so the fixed point
+    (no edge joins two labels) labels each component with its min."""
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = inv[: len(u)], inv[len(u):]
+    label = np.arange(len(ids))
+    while True:
+        la, lb = label[a], label[b]
+        lo = np.minimum(la, lb)
+        new = label.copy()
+        for idx in (a, b, la, lb):
+            np.minimum.at(new, idx, lo)
+        while True:
+            jumped = new[new]
+            if np.array_equal(jumped, new):
+                break
+            new = jumped
+        if np.array_equal(new, label):
+            return ids, ids[label]
+        label = new
+
+
+def _finish_locally(spark, edges: pa.Table) -> DataFrame:
+    ids, comp = _local_components(
+        edges.column("u").to_numpy(), edges.column("v").to_numpy()
+    )
+    return spark.createDataFrame(
+        pa.table({"id": pa.array(ids, pa.int64()),
+                  "component": pa.array(comp, pa.int64())})
+    )
+
+
+def _star_rounds(edges: DataFrame, max_iter: int) -> DataFrame:
+    """Large/small-star rounds over a deduplicated, checkpointed edge set
+    until it fits on the driver (then finished there) or stops changing."""
+    prev = None  # first round always runs; no checksum job on the input
+    for _ in range(max_iter):
+        # per-round checkpoints are LAZY — the checksum action right after
+        # materializes them, folding what were two jobs per round (eager
+        # checkpoint, then checksum) into one
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
+        cur = _checksum(edges)
+        if cur[0] <= _LOCAL_EDGES:
+            return _finish_locally(edges.sparkSession, edges.toArrow())
+        if cur == prev:
+            # at the fixed point every edge points at its component root
+            member = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
+            roots = edges.select(F.col("v").alias("id"), F.col("v").alias("component"))
+            return member.unionByName(roots).groupBy("id").agg(
+                F.min("component").alias("component")
+            )
+        prev = cur
+    raise RuntimeError(
+        f"connected_components: no fixed point after {max_iter} star "
+        f"rounds; {cur[0]} edges remain"
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame | None = None,
@@ -88,35 +182,22 @@ def connected_components(
     """Cluster assignment (id, component); component = min id in component.
 
     pairs: edge list; nodes: optional (id) universe so isolated entities
-    get singleton clusters.
+    get singleton clusters. Without ``nodes`` only edge-incident ids are
+    returned. ``max_iter`` bounds the star rounds, which run only when
+    more than ``_LOCAL_EDGES`` edges arrive; RuntimeError if they run out.
     """
-    # initial checkpoint is EAGER: the next round's stars consume `edges`
-    # three times (sym union + join), so the upstream pair plan must be
-    # cut off before that job runs. Per-round checkpoints are LAZY — the
-    # checksum action right after materializes them, folding what were
-    # two jobs per round (eager checkpoint, then checksum) into one.
-    edges = (
-        pairs.select(
-            F.col(pair_cols[0]).cast("bigint").alias("u"),
-            F.col(pair_cols[1]).cast("bigint").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    prev = None  # first round always runs; no checksum job on the input
-    for _ in range(max_iter):
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        cur = _checksum(edges)
-        if cur == prev:
-            break
-        prev = cur
-    # after convergence every edge points at its component root
-    member = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    roots = edges.select(F.col("v").alias("id"), F.col("v").alias("component"))
-    assign = member.unionByName(roots).groupBy("id").agg(
-        F.min("component").alias("component")
-    )
+    edges = pairs.select(
+        F.col(pair_cols[0]).cast("bigint").alias("u"),
+        F.col(pair_cols[1]).cast("bigint").alias("v"),
+    ).filter(F.col("u") != F.col("v"))
+    collected = edges.limit(_LOCAL_EDGES + 1).toArrow()
+    if collected.num_rows <= _LOCAL_EDGES:
+        assign = _finish_locally(pairs.sparkSession, collected)
+    else:
+        # the checkpoint is EAGER: the first round's stars consume `edges`
+        # three times (sym union + join), so the upstream pair plan must
+        # be cut off before that job runs
+        assign = _star_rounds(edges.distinct().localCheckpoint(), max_iter)
     if nodes is not None:
         universe = nodes.select(F.col(nodes.columns[0]).cast("bigint").alias("id"))
         assign = (
@@ -168,7 +249,9 @@ def merge_components_with_delta(
     Scale: the corpus-wide assignments table is touched by one semi- and
     one anti-join on ``component`` (broadcastable — the touched-component
     list is bounded by the batch's edge count); only the touched subgraph
-    plus the batch enters the O(log n)-round iterative CC.
+    plus the batch enters ``connected_components``, which finishes it on
+    the driver while it fits in ``_LOCAL_EDGES`` edges and runs the star
+    rounds above that.
     """
     a_, b_ = pair_cols
     edges = new_edges.select(

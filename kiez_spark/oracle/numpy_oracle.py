@@ -254,3 +254,24 @@ def hits(nn_ind: np.ndarray, gold: dict, ks=(1, 5, 10)) -> dict:
                 c += 1
         out[kk] = c / len(gold)
     return out
+
+
+def components(edges, nodes=None) -> dict:
+    """{id: min id of its connected component} by union-find — the
+    reference for operators.clustering.connected_components. Self edges
+    connect nothing and are dropped, as there; with ``nodes`` the result
+    covers exactly those ids, without it the ids on the edges."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)  # a root is its set's min id
+    return {x: find(x) for x in (parent if nodes is None else nodes)}

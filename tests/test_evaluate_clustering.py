@@ -2,6 +2,7 @@
 and connected-components correctness."""
 
 import numpy as np
+import pytest
 
 from kiez_spark.operators import clustering as C
 from kiez_spark.operators import evaluate as E
@@ -51,39 +52,82 @@ def test_connected_components_chain_and_singletons(spark):
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 10: 10, 11: 10, 20: 20}
 
 
-def test_connected_components_random_vs_numpy(spark):
-    """Random graph vs a simple union-find oracle."""
+def _cc_graphs():
+    """(name, edges, nodes) covering the shapes the star rounds and the
+    driver finish must label alike."""
     rng = np.random.RandomState(3)
-    n = 120
-    edges = [(int(a), int(b)) for a, b in rng.randint(0, n, size=(100, 2)) if a != b]
+    rand = [(int(a), int(b)) for a, b in rng.randint(0, 120, size=(100, 2)) if a != b]
+    shapes = (
+        [(i, i + 1) for i in range(40)]  # chain 0..40
+        + [(69, i) for i in range(50, 69)]  # star, center is the max id
+        + [(200 + i, 200 + (i + 7) % 30) for i in range(30)]  # 30-cycle
+    )
+    shape_nodes = sorted({x for e in shapes for x in e} | {300, 301, 302})
+    messy = shapes + [(b, a) for a, b in shapes[::3]] + shapes[::5] + [
+        (i, i) for i in (0, 69, 300)
+    ]
+    return [
+        ("random", rand, list(range(120))),
+        ("shapes+isolated", shapes, shape_nodes),
+        ("duplicate/reversed/self", messy, shape_nodes),
+        ("no edges", [], [1, 2, 3]),
+        ("self loops only", [(i, i) for i in range(5)], list(range(7))),
+        ("nodes=None", messy, None),
+    ]
 
-    parent = list(range(n))
 
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
+def test_connected_components_random_vs_numpy(spark, monkeypatch):
+    """Every graph, three ways, vs the union-find reference: the driver
+    finish, Spark star rounds only (``_LOCAL_EDGES = 0``), and a threshold
+    between the input and converged edge counts, so the rounds run first
+    and hand the edges over to the driver."""
+    from kiez_spark.oracle import numpy_oracle as O
 
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    exp = {}
-    for i in range(n):
-        root = find(i)
-        exp[i] = min(exp.get(root, root), root)
-    # normalize: component id = min member id
-    comp_min: dict[int, int] = {}
-    for i in range(n):
-        r = find(i)
-        comp_min[r] = min(comp_min.get(r, i), i)
-    expected = {i: comp_min[find(i)] for i in range(n)}
+    default, calls = C._LOCAL_EDGES, []
+    for fn in ("_star_rounds", "_finish_locally"):
+        orig = getattr(C, fn)
+        monkeypatch.setattr(
+            C, fn, lambda *a, _f=orig, _n=fn: calls.append(_n) or _f(*a)
+        )
+    for name, edges, nodes in _cc_graphs():
+        expected = O.components(edges, nodes)
+        n_in = sum(a != b for a, b in edges)
+        # at the star fixed point every non-root id has one edge
+        incident = O.components(edges)
+        n_converged = len(incident) - len(set(incident.values()))
+        pairs = spark.createDataFrame(edges, "src_id bigint, tgt_id bigint")
+        node_df = (
+            None if nodes is None
+            else spark.createDataFrame([(i,) for i in nodes], "id bigint")
+        )
+        for mode, limit in (
+            ("driver", default), ("rounds", 0), ("hand-over", n_converged)
+        ):
+            monkeypatch.setattr(C, "_LOCAL_EDGES", limit)
+            calls.clear()
+            got = {
+                r.id: r.component
+                for r in C.connected_components(pairs, node_df).collect()
+            }
+            assert got == expected, (name, mode)
+            rounds = n_in > limit
+            assert ("_star_rounds" in calls) == rounds, (name, mode, calls)
+            if mode == "hand-over" and rounds:
+                assert calls == ["_star_rounds", "_finish_locally"], name
+        assert name != "random" or n_in > n_converged  # a real hand-over
 
-    pairs = spark.createDataFrame(edges, "src_id bigint, tgt_id bigint")
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "id bigint")
-    got = {r.id: r.component for r in C.connected_components(pairs, nodes).collect()}
-    assert got == expected
+
+def test_connected_components_max_iter_exhausted_raises(spark, monkeypatch):
+    """Star rounds that run out of ``max_iter`` without a fixed point
+    raise instead of labelling from unconverged edges."""
+    monkeypatch.setattr(C, "_LOCAL_EDGES", 0)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "src_id bigint, tgt_id bigint"
+    )
+    for max_iter in (1, 2):
+        match = rf"after {max_iter} star rounds; \d+ edges remain"
+        with pytest.raises(RuntimeError, match=match):
+            C.connected_components(pairs, max_iter=max_iter).collect()
 
 
 def test_clusters_to_pairs(spark):

@@ -67,3 +67,39 @@ def test_hubness_transforms_preserve_candidate_sets(seed):
         d0, i0 = O.knn(src, tgt, 6, "euclidean")
         for row in range(8):
             assert set(i[row]) <= set(i0[row]), method
+
+
+edge_lists = st.lists(
+    st.tuples(st.integers(0, 30), st.integers(0, 30)), max_size=40
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(edge_lists)
+def test_local_components_match_union_find(edges):
+    """The driver finish of connected_components labels every edge id
+    with its component's min id."""
+    from kiez_spark.operators import clustering as C
+
+    kept = [(a, b) for a, b in edges if a != b]
+    u = np.array([a for a, _ in kept], dtype=np.int64)
+    v = np.array([b for _, b in kept], dtype=np.int64)
+    ids, comp = C._local_components(u, v)
+    assert dict(zip(ids.tolist(), comp.tolist())) == O.components(edges)
+
+
+@settings(max_examples=8, deadline=None)
+@given(edge_lists, st.integers(0, 45))
+def test_connected_components_match_union_find(spark, edges, limit):
+    """Random edge lists and driver-edge limits: below the input's edge
+    count the star rounds run first, so the limit picks the phase that
+    finishes."""
+    from unittest import mock
+
+    from kiez_spark.operators import clustering as C
+
+    pairs = spark.createDataFrame(edges, "src_id bigint, tgt_id bigint")
+    nodes = spark.createDataFrame([(i,) for i in range(32)], "id bigint")
+    with mock.patch.object(C, "_LOCAL_EDGES", limit):
+        got = {r.id: r.component for r in C.connected_components(pairs, nodes).collect()}
+    assert got == O.components(edges, range(32))
