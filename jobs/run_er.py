@@ -208,7 +208,6 @@ def _er_increment(spark, batch, state_dir, output_dir):
 
     from kiez_spark.operators import clustering as C
     from kiez_spark.operators import er as ER
-    from kiez_spark.operators import evaluate as EV
 
     ver, vbase = state.live_version(state_dir, "--increment")
     params, corpus_docs, posting, stats, assign = _read_state(
@@ -244,7 +243,10 @@ def _er_increment(spark, batch, state_dir, output_dir):
     )
     merged = merged.localCheckpoint()
     decisions = C.decisions_from_assignment(merged)
-    report.update(EV.cluster_counts(decisions))
+    report.update(decisions.agg(
+        F.countDistinct("component").alias("clusters"),
+        F.count(F.when(F.col("is_survivor"), 1)).alias("survivors"),
+    ).first().asDict())
 
     # per-row sha invariant across corpus + batch after the merge
     report["sha_violations"] = (
@@ -414,7 +416,10 @@ def main(argv=None) -> int:
         )
 
     decisions = run_stage("clusters", build_clusters)
-    report.update(EV.cluster_counts(decisions))
+    report.update(decisions.agg(
+        F.countDistinct("component").alias("clusters"),
+        F.count(F.when(F.col("is_survivor"), 1)).alias("survivors"),
+    ).first().asDict())
 
     # per-row sha invariant: every id's sha after the pipeline equals the
     # ingest sha (joined back through the decisions table)

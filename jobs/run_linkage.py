@@ -135,18 +135,9 @@ def _sha_violations(files, emb):
     )
 
 
-def _assign_counts(assign):
-    """{"rows", "components"} of an (id, component) table, one aggregate
-    (every node has one row, so rows is the node count)."""
+def _run_state_base(args, spark, files):
     from pyspark.sql import functions as F
 
-    return assign.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.countDistinct("component").alias("components"),
-    ).first().asDict()
-
-
-def _run_state_base(args, spark, files):
     from kiez_spark.operators import clustering as C
     from kiez_spark.operators import lsh as L
 
@@ -176,8 +167,11 @@ def _run_state_base(args, spark, files):
         pairs, nodes=emb.select("id"), pair_cols=("a_id", "b_id")
     ).localCheckpoint()
     decisions = C.decisions_from_assignment(assign)
-    report = {"mode": "state_base", **_assign_counts(assign),
-              "sha_violations": _sha_violations(files, emb)}
+    # every node has one assignment row, so rows is the node count
+    report = {"mode": "state_base", **assign.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.countDistinct("component").alias("components"),
+    ).first().asDict(), "sha_violations": _sha_violations(files, emb)}
     _write_link_state(
         args.state_dir, 1, emb.select("id", "vec", "content_sha"), sig,
         assign.select("id", "component"), params,
@@ -196,7 +190,6 @@ def _linkage_increment(spark, files_batch, state_dir, output_dir):
     from pyspark.sql import functions as F
 
     from kiez_spark.operators import clustering as C
-    from kiez_spark.operators import evaluate as E
     from kiez_spark.operators import lsh as L
 
     ver, base = state.live_version(state_dir, "--increment")
@@ -226,7 +219,10 @@ def _linkage_increment(spark, files_batch, state_dir, output_dir):
     )
     merged = merged.localCheckpoint()
     decisions = C.decisions_from_assignment(merged)
-    report.update(E.cluster_counts(decisions))
+    report.update(decisions.agg(
+        F.countDistinct("component").alias("clusters"),
+        F.count(F.when(F.col("is_survivor"), 1)).alias("survivors"),
+    ).first().asDict())
     report["sha_violations"] = _sha_violations(files_batch, emb_b)
 
     _write_link_state(
@@ -381,7 +377,10 @@ def _run(args, ap, spark):
     )
     res.clusters.write.mode("overwrite").parquet(args.output)
 
-    report = _assign_counts(res.clusters)
+    report = res.clusters.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.countDistinct("component").alias("components"),
+    ).first().asDict()
     if args.write_decisions:
         from kiez_spark.operators.clustering import decisions_from_assignment
         from kiez_spark.operators.text_analysis import quality_features

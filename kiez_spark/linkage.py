@@ -7,8 +7,8 @@ repos_files(repo, path, commit, lang, content)
   -> stage "pairs":       distance threshold on RAW distance + candidate
                           rank gate; canonicalized unordered pairs
   -> stage "clusters":    connected components (driver finish while the
-                          edges fit, star rounds above); one left join
-                          onto the embeddings adds singletons and the sha
+                          edges fit, star rounds above) over the embeddings
+                          as node universe; singletons included, sha kept
 
 Every stage checkpoints through StageCheckpointer (resume + lineage +
 metrics + sha invariant, see checkpoint.py). Pass checkpoint_dir=None to
@@ -72,8 +72,8 @@ def link_files(
     emb = run_stage("embeddings", lambda: derive_embeddings(files, dim=dim))
     if ckpt is None:
         # un-checkpointed runs: the embedding table is consumed by three
-        # downstream plans (fit, query/cand vector joins, the clusters
-        # join) — cut the lineage once, lazily,
+        # downstream plans (fit, query/cand vector joins, the CC node
+        # universe) — cut the lineage once, lazily,
         # so the kernel runs one time instead of per consumer. With a
         # checkpointer the parquet stage already provides this.
         emb = emb.localCheckpoint(eager=False)
@@ -131,11 +131,9 @@ def link_files(
     pairs = run_stage("pairs", build_pairs)
 
     def build_clusters() -> DataFrame:
-        # edge-incident ids only; one left join onto the embeddings gives
-        # every other id its singleton component
-        assign = C.connected_components(pairs, pair_cols=("src_id", "tgt_id"))
-        return emb.select("id", "content_sha").join(assign, "id", "left").select(
-            "id", F.coalesce("component", "id").alias("component"), "content_sha"
+        return C.connected_components(
+            pairs, nodes=emb.select("id", "content_sha"),
+            pair_cols=("src_id", "tgt_id"),
         )
 
     clusters = run_stage("clusters", build_clusters)

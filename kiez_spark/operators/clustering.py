@@ -7,14 +7,16 @@ into entity groups. ``connected_components`` runs in two phases, chosen
 only by the edge count it observes:
 
 1. **Collect when the edges fit.** The projected, self-edge-free pairs
-   are collected to the driver in one guarded Arrow action
-   (``limit(_LOCAL_EDGES + 1)``). At most ``_LOCAL_EDGES`` edges are
-   labelled on the driver with numpy (``_local_components``: min-label
-   hooking plus pointer jumping over dense ids), and the (id, component)
-   table goes back to Spark as a small local relation.
+   are checkpointed once, and the checkpoint's pass counts them (an
+   observed metric). At most ``_LOCAL_EDGES`` edges are collected from
+   the checkpoint in one Arrow action and labelled on the driver with
+   numpy (``_local_components``: min-label hooking plus pointer jumping
+   over dense ids); the (id, component) table goes back to Spark as a
+   small local relation.
 2. **Star rounds above the threshold.** Otherwise the alternating
    large-star / small-star rounds (Kiveris et al., "Connected Components
-   in MapReduce and Beyond", SoCC 2014) contract the edge set in Spark:
+   in MapReduce and Beyond", SoCC 2014) start from the same checkpoint
+   and run in Spark until the edge set stops changing:
 
      large-star: for each node u, connect every neighbor v > u to
                  m = min(N(u) ∪ {u})
@@ -23,36 +25,38 @@ only by the edge count it observes:
 
    Each round ``localCheckpoint``s to truncate lineage (mandatory — the
    self-join loop otherwise compounds the plan exponentially) and reports
-   an edge-set checksum (count + xor of pair hashes). As soon as the
-   count is at or below ``_LOCAL_EDGES`` the round's edges are collected
-   and finished on the driver; the rounds keep every edge-incident node
-   and its component, so the finish labels the input graph. Rounds that
-   reach a fixed point above the threshold end in Spark as before; running
-   out of ``max_iter`` rounds without one raises.
+   an edge-set checksum (count + xor of pair hashes); two equal checksums
+   in a row mark the fixed point, and running out of ``max_iter`` rounds
+   without one raises.
 
 This is the contract-then-solve-locally pattern of Łącki et al.,
 "Connected Components at Scale via Local Contractions" (2018). A round
 costs two window exchanges, a distinct, a checkpoint and a checksum job,
-and every job's plans are compiled and JIT-tiered on the driver, so on
-graphs that fit in driver memory one collect is far cheaper than the
-O(log n) rounds. Either way the component is the minimum member id, so
-the output does not depend on which phase finished it.
+and every job's plans are compiled and JIT-tiered on the driver, so up
+to ``_LOCAL_EDGES`` edges one collect is cheaper than the O(log n)
+rounds (see the measurements at the constant). Either way the component
+is the minimum member id, so the output does not depend on which phase
+finished it.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-# Largest edge set finished on the driver, sized for driver memory: an
-# edge is two int64 Arrow columns, 16 bytes, so 2,000,000 edges collect
-# to ~32 MB (passing once through the driver JVM on their way to Python),
-# and the numpy finish adds a few int64 arrays of at most twice the edge
-# count (ids, inverse, labels): a small multiple of 32 MB, well inside a
-# 1-2 GB driver.
-_LOCAL_EDGES = 2_000_000
+# Largest edge set finished on the driver. Measured with tools/cc_scale.py
+# (4-vCPU host, 4g driver, CC plus one aggregate over its result): at 1M
+# edges the driver finish took 8.7 s on many small components and 8.9 s
+# on a giant component, against 11.2-12.1 s and 24-26 s of star rounds,
+# with a Python peak 133 MB above the baseline (the edges are 16 MB of
+# Arrow) and a JVM peak no higher than the rounds'. At 2M it still took
+# 15-17 s against 18 s (small components) and 13-15 s against 36-39 s,
+# but the local result is a LocalRelation that every further job reading
+# it ships again, ~7 s at 2M rows (~3 s at 1M), so a second reader turns
+# the small-components case into a loss there.
+_LOCAL_EDGES = 1_000_000
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -148,8 +152,8 @@ def _finish_locally(spark, edges: pa.Table) -> DataFrame:
 
 
 def _star_rounds(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Large/small-star rounds over a deduplicated, checkpointed edge set
-    until it fits on the driver (then finished there) or stops changing."""
+    """Large/small-star rounds over a checkpointed edge set until it
+    stops changing; RuntimeError after ``max_iter`` rounds."""
     prev = None  # first round always runs; no checksum job on the input
     for _ in range(max_iter):
         # per-round checkpoints are LAZY — the checksum action right after
@@ -157,8 +161,6 @@ def _star_rounds(edges: DataFrame, max_iter: int) -> DataFrame:
         # checkpoint, then checksum) into one
         edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
         cur = _checksum(edges)
-        if cur[0] <= _LOCAL_EDGES:
-            return _finish_locally(edges.sparkSession, edges.toArrow())
         if cur == prev:
             # at the fixed point every edge points at its component root
             member = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
@@ -181,28 +183,40 @@ def connected_components(
 ) -> DataFrame:
     """Cluster assignment (id, component); component = min id in component.
 
-    pairs: edge list; nodes: optional (id) universe so isolated entities
-    get singleton clusters. Without ``nodes`` only edge-incident ids are
+    pairs: edge list; nodes: optional (id, ...) universe so isolated
+    entities get singleton clusters; its other columns ride along after
+    ``component``. Without ``nodes`` only edge-incident ids are
     returned. ``max_iter`` bounds the star rounds, which run only when
-    more than ``_LOCAL_EDGES`` edges arrive; RuntimeError if they run out.
+    more than ``_LOCAL_EDGES`` edges arrive (self-edges dropped,
+    duplicates counted); RuntimeError if they run out.
     """
-    edges = pairs.select(
-        F.col(pair_cols[0]).cast("bigint").alias("u"),
-        F.col(pair_cols[1]).cast("bigint").alias("v"),
-    ).filter(F.col("u") != F.col("v"))
-    collected = edges.limit(_LOCAL_EDGES + 1).toArrow()
-    if collected.num_rows <= _LOCAL_EDGES:
-        assign = _finish_locally(pairs.sparkSession, collected)
+    # EAGER checkpoint: its one pass over the pair plan also counts the
+    # edges (an observed metric, no job of its own), and both phases read
+    # the checkpoint, so the Spark path neither recomputes the pairs nor
+    # collects them first
+    seen = Observation()
+    edges = (
+        pairs.select(
+            F.col(pair_cols[0]).cast("bigint").alias("u"),
+            F.col(pair_cols[1]).cast("bigint").alias("v"),
+        )
+        .filter(F.col("u") != F.col("v"))
+        .observe(seen, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    if seen.get["n"] <= _LOCAL_EDGES:
+        assign = _finish_locally(pairs.sparkSession, edges.toArrow())
     else:
-        # the checkpoint is EAGER: the first round's stars consume `edges`
-        # three times (sym union + join), so the upstream pair plan must
-        # be cut off before that job runs
-        assign = _star_rounds(edges.distinct().localCheckpoint(), max_iter)
+        # no distinct first: duplicate edges cannot change a star's min,
+        # and the first round's output is already deduplicated
+        assign = _star_rounds(edges, max_iter)
     if nodes is not None:
-        universe = nodes.select(F.col(nodes.columns[0]).cast("bigint").alias("id"))
-        assign = (
-            universe.join(assign, "id", "left")
-            .select("id", F.coalesce("component", F.col("id")).alias("component"))
+        rest = nodes.columns[1:]
+        universe = nodes.select(
+            F.col(nodes.columns[0]).cast("bigint").alias("id"), *rest
+        )
+        assign = universe.join(assign, "id", "left").select(
+            "id", F.coalesce("component", F.col("id")).alias("component"), *rest
         )
     return assign
 

@@ -209,13 +209,3 @@ def clusters_to_pairs(assignments: DataFrame, id_col: str = "id",
         .select("u", "v")
         .distinct()
     )
-
-
-def cluster_counts(decisions: DataFrame) -> dict:
-    """{"clusters", "survivors"} of a decision table (id, component,
-    is_survivor) from one aggregate: the distinct components and the
-    survivor rows a job reports after clustering."""
-    return decisions.agg(
-        F.countDistinct("component").alias("clusters"),
-        F.count(F.when(F.col("is_survivor"), 1)).alias("survivors"),
-    ).first().asDict()

@@ -78,9 +78,8 @@ def _cc_graphs():
 
 def test_connected_components_random_vs_numpy(spark, monkeypatch):
     """Every graph, three ways, vs the union-find reference: the driver
-    finish, Spark star rounds only (``_LOCAL_EDGES = 0``), and a threshold
-    between the input and converged edge counts, so the rounds run first
-    and hand the edges over to the driver."""
+    finish at the default ``_LOCAL_EDGES`` and at a limit equal to the
+    input's edge count, and the Spark star rounds at one edge less."""
     from kiez_spark.oracle import numpy_oracle as O
 
     default, calls = C._LOCAL_EDGES, []
@@ -92,16 +91,15 @@ def test_connected_components_random_vs_numpy(spark, monkeypatch):
     for name, edges, nodes in _cc_graphs():
         expected = O.components(edges, nodes)
         n_in = sum(a != b for a, b in edges)
-        # at the star fixed point every non-root id has one edge
-        incident = O.components(edges)
-        n_converged = len(incident) - len(set(incident.values()))
         pairs = spark.createDataFrame(edges, "src_id bigint, tgt_id bigint")
         node_df = (
             None if nodes is None
             else spark.createDataFrame([(i,) for i in nodes], "id bigint")
         )
-        for mode, limit in (
-            ("driver", default), ("rounds", 0), ("hand-over", n_converged)
+        for mode, limit, path in (
+            ("default", default, "_finish_locally"),
+            ("at the limit", n_in, "_finish_locally"),
+            ("one edge above", n_in - 1, "_star_rounds"),
         ):
             monkeypatch.setattr(C, "_LOCAL_EDGES", limit)
             calls.clear()
@@ -110,11 +108,38 @@ def test_connected_components_random_vs_numpy(spark, monkeypatch):
                 for r in C.connected_components(pairs, node_df).collect()
             }
             assert got == expected, (name, mode)
-            rounds = n_in > limit
-            assert ("_star_rounds" in calls) == rounds, (name, mode, calls)
-            if mode == "hand-over" and rounds:
-                assert calls == ["_star_rounds", "_finish_locally"], name
-        assert name != "random" or n_in > n_converged  # a real hand-over
+            assert calls == [path], (name, mode, calls)
+
+
+def test_connected_components_spark_path_runs_pairs_once(spark, monkeypatch):
+    """Above the threshold the pass that counts the pairs is the one the
+    star rounds start from: every pair row is produced once, not once
+    for the size test and again for the rounds."""
+    from pyspark.sql import functions as F
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(x):
+        seen.add(1)
+        return x
+
+    # nondeterministic, so the optimizer cannot evaluate it twice per row
+    # (once for the self-edge filter, once for the projection)
+    counted = F.udf(count, "bigint").asNondeterministic()
+    edges = [(i, i + 1) for i in range(30)] + [(100 + i, 100) for i in range(1, 9)]
+    # ~10 rows in each of 4 partitions against a limit of 12: a size test
+    # that stops reading a partition after _LOCAL_EDGES + 1 rows still
+    # reads each one to its end (a Python worker stopped early drops its
+    # accumulator updates), and the 38 rows take the Spark path
+    monkeypatch.setattr(C, "_LOCAL_EDGES", 12)
+    pairs = (
+        spark.createDataFrame(edges, "src_id bigint, tgt_id bigint")
+        .repartition(4)
+        .select(counted("src_id").alias("src_id"), "tgt_id")
+    )
+    got = {r.id: r.component for r in C.connected_components(pairs).collect()}
+    assert got == {**{i: 0 for i in range(31)}, **{100 + i: 100 for i in range(9)}}
+    assert seen.value == len(edges)
 
 
 def test_connected_components_max_iter_exhausted_raises(spark, monkeypatch):

@@ -91,9 +91,9 @@ def test_local_components_match_union_find(edges):
 @settings(max_examples=8, deadline=None)
 @given(edge_lists, st.integers(0, 45))
 def test_connected_components_match_union_find(spark, edges, limit):
-    """Random edge lists and driver-edge limits: below the input's edge
-    count the star rounds run first, so the limit picks the phase that
-    finishes."""
+    """Random edge lists and driver-edge limits: a limit below the
+    input's edge count sends it through the star rounds, any other
+    through the driver finish."""
     from unittest import mock
 
     from kiez_spark.operators import clustering as C
