@@ -247,8 +247,9 @@ def main(argv=None) -> int:
     ap.add_argument("--n-candidates", type=int, default=10)
     ap.add_argument("--hubness", default="csls")
     ap.add_argument("--metric", default="euclidean")
+    # no "blocked": the job has no blocking column to pass as block_col
     ap.add_argument("--tier", default="pandas",
-                    choices=["expr", "pandas", "blocked", "lsh"])
+                    choices=["expr", "pandas", "lsh"])
     ap.add_argument("--dim", type=int, default=32)
     ap.add_argument("--max-dist", type=float, default=None)
     ap.add_argument("--evaluate-gold", action="store_true",

@@ -4,9 +4,9 @@ SURVEY.md §2 as a (spark_fn, oracle_sql) pair.
 Each Spark callable takes (spark, sf_dir) and returns a DataFrame whose
 column names AND values (doubles rounded to 6 decimals on both sides)
 match the DuckDB oracle SQL exactly. Oracles are omitted only for
-operators whose randomness/hashing cannot be expressed in SQL (LSH
-projections, xxhash-based IVF centroids, binary frame kernels) — the
-driver records rows-only checks for those.
+operators whose randomness cannot be expressed in SQL (LSH
+projections, EM posteriors) — the driver records rows-only checks for
+those.
 
 Cross-engine determinism contract:
 - token hash: Spark conv(substr(md5,1,15),16,10) == DuckDB
@@ -37,9 +37,6 @@ from kiez_spark.operators import dedup as D
 from kiez_spark.operators import evaluate as E
 from kiez_spark.operators import knn as K
 from kiez_spark.operators import lsh as L
-from kiez_spark.operators import multimodal as M
-from kiez_spark.operators import packing as PK
-from kiez_spark.operators import similarity as SIM
 from kiez_spark.operators import skew as SK
 from kiez_spark.operators import text_analysis as TA
 from kiez_spark.pipeline import HubnessKnn, PipelineConfig
@@ -1833,70 +1830,6 @@ FROM agg
 # ------------------------------------------------------- generic relational
 
 
-_GAP_MINUTES = 30.0
-_GAP_US = int(_GAP_MINUTES * 60 * 1_000_000)
-
-
-def q_sessionize(spark, sf_dir):
-    """Per-user 30-min-gap sessionization (lag flag + running sum over
-    one exchange) vs the identical DuckDB window construction; the gap
-    compare runs on integer microseconds on both engines."""
-    from kiez_spark.operators import events as EV
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return EV.sessionize(ev, gap_minutes=_GAP_MINUTES).select(
-        "event_id", "user_id", "session_idx", "is_session_start"
-    )
-
-
-_SESS_SQL = f"""
-sess AS (
-  WITH s AS (
-    SELECT event_id, user_id, epoch_us(ts) AS us,
-      CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-             OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > {_GAP_US}
-           THEN 1 ELSE 0 END AS new_sess
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-  )
-  SELECT event_id, user_id, us,
-    (sum(new_sess) OVER (PARTITION BY user_id ORDER BY us, event_id
-                         ROWS UNBOUNDED PRECEDING))::INT AS session_idx,
-    new_sess = 1 AS is_session_start
-  FROM s
-)
-"""
-
-SQL_SESSIONIZE = f"""
-WITH {_SESS_SQL}
-SELECT event_id, user_id, session_idx, is_session_start FROM sess
-"""
-
-
-def q_session_stats(spark, sf_dir):
-    """One row per session: event count, span micros, duration."""
-    from kiez_spark.operators import events as EV
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    s = EV.session_stats(ev, gap_minutes=_GAP_MINUTES)
-    return s.select(
-        "user_id", "session_idx", "n_events",
-        EV.ts_micros(F.col("start_ts")).alias("start_us"),
-        EV.ts_micros(F.col("end_ts")).alias("end_us"),
-        "duration_sec",
-    )
-
-
-SQL_SESSION_STATS = f"""
-WITH {_SESS_SQL}
-SELECT user_id, session_idx, count(*) AS n_events,
-       min(us) AS start_us, max(us) AS end_us,
-       round((max(us) - min(us)) / 1000000.0, 6) AS duration_sec
-FROM sess
-GROUP BY user_id, session_idx
-"""
-
-
 def q_events_hourly(spark, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return (
@@ -2008,128 +1941,6 @@ LIMIT 10
 """
 
 
-def q_multimodal_meta(spark, sf_dir):
-    blobs = M.pack_blobs(_docs(spark, sf_dir))
-    return blobs.select("doc_id", "media_type", "n_bytes", "sha")
-
-
-SQL_MULTIMODAL_META = """
-SELECT doc_id, 'application/octet-stream' AS media_type,
-       octet_length(encode(text))::BIGINT AS n_bytes,
-       sha256(text) AS sha
-FROM documents
-"""
-
-
-def q_decode_ppm(spark, sf_dir):
-    """REAL image decode under the oracle gate: synthesize binary P6 PPM
-    files from the text column (pure Spark binary-concat exprs), decode
-    them with the pure-python P6 parser (multimodal.decode_image,
-    fake=False), and check the parsed dimensions + mean gray level
-    against DuckDB byte arithmetic on the same payload — gray of an RGB
-    triple is the byte mean, so the image mean equals the payload's
-    byte-value mean."""
-    blobs = M.synth_ppm_blobs(_docs(spark, sf_dir))
-    # hash the exact integer-division micro-mean (byte sum / byte count),
-    # not a rounded double ratio (1-ulp cross-engine hazard)
-    return M.decode_image(blobs).select(
-        "doc_id", "height", "width",
-        F.expr(
-            "(px_sum div px_n) * 1000000"
-            " + ((px_sum % px_n) * 1000000) div px_n"
-        ).cast("bigint").alias("mean_px_micro"),
-    )
-
-
-SQL_DECODE_PPM = """
-WITH p AS (
-  SELECT doc_id, rpad(substr(text, 1, 192), 192, ' ') AS payload
-  FROM documents
-),
-s AS (
-  SELECT doc_id,
-         list_sum(list_transform(generate_series(1, 192),
-                                 i -> unicode(substr(payload, i, 1))))
-           ::BIGINT AS px_sum,
-         192::BIGINT AS px_n
-  FROM p
-)
-SELECT doc_id, 8::INT AS height, 8::INT AS width,
-       ((px_sum // px_n) * 1000000
-        + ((px_sum % px_n) * 1000000) // px_n)::BIGINT AS mean_px_micro
-FROM s
-"""
-
-
-def q_decode_wav(spark, sf_dir):
-    """REAL audio decode under the oracle gate: synthesize PCM16 mono
-    RIFF/WAVE blobs whose sample values equal the text's byte values
-    (low byte = text, high byte = 0), walk the chunk list with the
-    pure-python parser, and check rate/channels/sample stats against
-    DuckDB byte arithmetic."""
-    blobs = M.synth_wav_blobs(_docs(spark, sf_dir))
-    # mean ships as an exact integer-division micro value (sample sum /
-    # count); rms keeps 6-dp rounding — its sqrt makes it continuous, so
-    # the rounding-boundary hazard of exact integer ratios doesn't apply
-    return M.decode_audio(blobs).select(
-        "doc_id", "sample_rate", "n_channels", "n_samples",
-        F.expr(
-            "(amp_sum div n_samples) * 1000000"
-            " + ((amp_sum % n_samples) * 1000000) div n_samples"
-        ).cast("bigint").alias("mean_amp_micro"),
-        F.round("rms", 6).alias("rms"),
-    )
-
-
-SQL_DECODE_WAV = """
-WITH p AS (
-  SELECT doc_id, rpad(substr(text, 1, 128), 128, ' ') AS payload
-  FROM documents
-),
-s AS (
-  SELECT doc_id,
-         list_transform(generate_series(1, 128),
-                        i -> unicode(substr(payload, i, 1))) AS vals
-  FROM p
-)
-SELECT doc_id, 8000::INT AS sample_rate, 1::INT AS n_channels,
-       128::BIGINT AS n_samples,
-       ((list_sum(vals)::BIGINT // 128) * 1000000
-        + ((list_sum(vals)::BIGINT % 128) * 1000000) // 128)::BIGINT
-         AS mean_amp_micro,
-       round(sqrt(list_avg(list_transform(vals, v -> v * v))), 6) AS rms
-FROM s
-"""
-
-
-def q_quantize_embeddings(spark, sf_dir):
-    """int8-range scalar quantization codes (8x fewer bytes per
-    embedding on every shuffle) — integer-exact vs the DuckDB twin:
-    both engines run the identical f64 expression before the floor, so
-    codes match bit-for-bit."""
-    from kiez_spark.operators import quantize as Q
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return Q.quantize_embeddings(emb).select("id", "qvec")
-
-
-SQL_QUANTIZE_EMBEDDINGS = """
-WITH v AS (SELECT vec_id AS id, embedding::DOUBLE[] AS vec FROM embeddings),
-ex AS (
-  SELECT id, unnest(vec) AS val, generate_subscripts(vec, 1) AS pos FROM v
-),
-mm AS (SELECT pos, min(val) AS mn, max(val) AS mx FROM ex GROUP BY pos),
-q AS (
-  SELECT e.id, e.pos,
-         CASE WHEN mm.mx > mm.mn
-              THEN least(255, floor((e.val - mm.mn) / (mm.mx - mm.mn) * 256))::INT
-              ELSE 0 END AS code
-  FROM ex e JOIN mm USING (pos)
-)
-SELECT id, list(code ORDER BY pos) AS qvec FROM q GROUP BY id
-"""
-
-
 def q_lsh_recall_report(spark, sf_dir):
     """Exact-vs-approximate agreement as a first-class result (the
     reference's faiss Flat-vs-ANN test semantic, test_faiss.py:22-46):
@@ -2147,33 +1958,6 @@ def q_lsh_recall_report(spark, sf_dir):
     return spark.createDataFrame(
         [(round(overall, 6), round(near, 6))],
         "recall_overall double, recall_near double",
-    )
-
-
-def q_ivf_recall_report(spark, sf_dir):
-    """Exact-vs-IVF agreement at two operating points: the baseline
-    single-assignment index (16 cells, nprobe 4) and the tuned
-    multi-assignment one (nprobe 6, n_assign 2 — each index vector in
-    its 2 closest cells). The driver embeddings are near-random (the
-    hard case for IVF), so the tuned point is what a production corpus
-    of this shape would run."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    exact = SIM.cosine_topk(emb, k=TOP_K, tier="pandas").select(
-        "query_id", "cand_id"
-    )
-    total = exact.count()
-
-    def recall_of(**kw):
-        approx = SIM.ivf_topk(emb, k=TOP_K, n_cells=16, **kw)
-        return round(
-            approx.select("query_id", "cand_id").intersect(exact).count()
-            / total,
-            6,
-        )
-
-    return spark.createDataFrame(
-        [(recall_of(nprobe=4), recall_of(nprobe=6, n_assign=2))],
-        "recall_base double, recall_tuned double",
     )
 
 
@@ -2281,69 +2065,6 @@ def q_online_neardup_flags(spark, sf_dir):
     return tbl.select("doc_id", "first_id").distinct()
 
 
-def q_stream_enrich(spark, sf_dir):
-    """Stream-static enrichment: a two-micro-batch document stream joins
-    each batch against the static token-count dimension (broadcast,
-    stateless) — output must equal the batch join."""
-    from kiez_spark.streaming import enrich as EN
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    static = TA.token_counts(_docs(spark, sf_dir)).select(
-        "doc_id", "n_tokens"
-    )
-    half = 250
-    tbl = _stream_batches_to_memory(
-        spark,
-        "doc_id bigint, text string",
-        [docs.filter(F.col("doc_id") < half),
-         docs.filter(F.col("doc_id") >= half)],
-        lambda s: EN.enrich_stream(s, static).select(
-            "doc_id", F.sha2("text", 256).alias("sha"), "n_tokens"
-        ),
-    )
-    return tbl.select("doc_id", "sha", "n_tokens")
-
-
-SQL_STREAM_ENRICH = f"""
-SELECT doc_id, sha256(text) AS sha,
-       len({_TOKENS_SQL.format(col="text")})::INT AS n_tokens
-FROM documents
-"""
-
-
-def q_events_hourly_stream(spark, sf_dir):
-    """Watermarked event-time windowed aggregation through a REAL
-    two-micro-batch file stream (append mode): only windows the final
-    watermark closed are emitted — the oracle applies the identical
-    cutoff (window end <= max event time; the input's ts is monotone in
-    event_id, so the id-split batches respect the 0s watermark and no
-    row is late-dropped)."""
-    from kiez_spark.streaming import windows as W
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "event_type", "value"
-    )
-    n_half = 5000
-    tbl = _stream_batches_to_memory(
-        spark,
-        "event_id bigint, ts timestamp_ntz, event_type string, value double",
-        [ev.filter(F.col("event_id") < n_half),
-         ev.filter(F.col("event_id") >= n_half)],
-        lambda s: W.hourly_agg_stream(s),
-    )
-    return tbl.select("hour", "event_type", "n", "sum_value")
-
-
-SQL_EVENTS_HOURLY_STREAM = """
-WITH mx AS (SELECT max(ts) AS m FROM events)
-SELECT date_trunc('hour', ts) AS hour, event_type,
-       count(*) AS n, round(sum(value), 6) AS sum_value
-FROM events, mx
-WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <= m
-GROUP BY 1, 2
-"""
-
-
 SQL_ONLINE_NEARDUP_FLAGS = f"""
 WITH {_SIGS2_SQL.replace("FROM docs2", "FROM docs2 WHERE doc_id % 100000 < 100")},
 grp AS (
@@ -2366,45 +2087,6 @@ def q_lsh_knn_cosine(spark, sf_dir):
     )
     nn = K.topk(cands, TOP_K)
     return nn.select("query_id", "cand_id", "rank", F.round("dist", 6).alias("dist"))
-
-
-def q_ivf_topk(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return SIM.ivf_topk(emb, k=TOP_K, n_cells=16, nprobe=4).select(
-        "query_id", "cand_id", "rank", F.round("dist", 6).alias("dist")
-    )
-
-
-def q_frame_sample(spark, sf_dir):
-    """Equally-spaced byte-window 'frame' sampling over the blob column;
-    the window positions and lengths are pure integer arithmetic, so the
-    kernel's output is fully oracle-checkable (window offsets + sizes
-    against DuckDB integer math on the same utf-8 byte lengths)."""
-    blobs = M.pack_blobs(_docs(spark, sf_dir))
-    frames = M.frame_sample(blobs, n_frames=4)
-    return frames.select("doc_id", "frame_idx", F.length("frame").alias("n_bytes"))
-
-
-# textual twin of multimodal.frame_sample's kernel arithmetic:
-# step = max(1, (len - 64) // 3); lo_i = min(i*step, max(0, len-1));
-# n_bytes_i = min(64, len - lo_i); rows only for len > 0
-SQL_FRAME_SAMPLE = """
-WITH b AS (
-  SELECT doc_id, octet_length(encode(text))::BIGINT AS len FROM documents
-),
-s AS (
-  SELECT doc_id, len, greatest(1, (len - 64) // 3) AS step
-  FROM b WHERE len > 0
-),
-f AS (
-  SELECT doc_id, i AS frame_idx,
-         least(i * step, greatest(0, len - 1)) AS lo, len
-  FROM s, unnest([0, 1, 2, 3]) AS t(i)
-)
-SELECT doc_id, frame_idx::INT AS frame_idx,
-       least(64, len - lo)::BIGINT AS n_bytes
-FROM f
-"""
 
 
 def q_linkage_f1_lsh(spark, sf_dir):
@@ -3015,48 +2697,6 @@ r AS (
 )
 SELECT doc_id, lang FROM r
 WHERE rnk <= CASE lang {_STRAT_CASE} ELSE 0 END
-"""
-
-
-_PACK_CAP = 256
-
-
-def q_pack_chunks(spark, sf_dir):
-    """GPT-style token-stream packing: per-language streams concatenated
-    in doc_id order and cut every 256 tokens; docs straddle boundaries.
-    The Spark side runs the DISTRIBUTED two-phase prefix sum
-    (operators/packing.py — per-partition local cumsum + broadcast
-    offsets, no single-task per-stream sort); the oracle is the naive
-    window SQL, which is exactly what the distributed plan must equal."""
-    return PK.pack_chunks(
-        _docs(spark, sf_dir), _PACK_CAP, stream_col="lang"
-    )
-
-
-SQL_PACK_CHUNKS = f"""
-WITH toks AS (
-  SELECT lang AS stream, doc_id,
-         len({_TOKENS_SQL.format(col='text')})::BIGINT AS n_tok
-  FROM documents WHERE lang IS NOT NULL
-),
-cum AS (
-  SELECT stream, doc_id, n_tok,
-         coalesce(sum(n_tok) OVER (
-           PARTITION BY stream ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-           AS start
-  FROM toks WHERE n_tok > 0
-),
-x AS (
-  SELECT stream, doc_id, n_tok, start,
-         unnest(range(start // {_PACK_CAP},
-                      (start + n_tok - 1) // {_PACK_CAP} + 1)) AS chunk_id
-  FROM cum
-)
-SELECT stream, chunk_id, doc_id,
-       greatest(0, chunk_id * {_PACK_CAP} - start)::INT AS begin_tok,
-       least(n_tok, (chunk_id + 1) * {_PACK_CAP} - start)::INT AS end_tok
-FROM x
 """
 
 
@@ -4162,7 +3802,6 @@ QUERIES = {
     "quality_filter": (q_quality_filter, SQL_QUALITY_FILTER),
     "sample_by_hash": (q_sample_by_hash, SQL_SAMPLE_BY_HASH),
     "stratified_sample": (q_stratified_sample, SQL_STRATIFIED_SAMPLE),
-    "pack_chunks": (q_pack_chunks, SQL_PACK_CHUNKS),
     "decontaminate": (q_decontaminate, SQL_DECONTAMINATE),
     "lev_blocked_pairs": (q_lev_blocked_pairs, SQL_LEV_BLOCKED_PAIRS),
     "jaro_winkler_pairs": (q_jaro_winkler_pairs, SQL_JARO_WINKLER_PAIRS),
@@ -4179,23 +3818,12 @@ QUERIES = {
     "url_dedup_groups": (q_url_dedup_groups, SQL_URL_DEDUP_GROUPS),
     "hash_split": (q_hash_split, SQL_HASH_SPLIT),
     "events_hourly": (q_events_hourly, SQL_EVENTS_HOURLY),
-    "sessionize": (q_sessionize, SQL_SESSIONIZE),
-    "session_stats": (q_session_stats, SQL_SESSION_STATS),
     "tpch_q1": (q_tpch_q1, SQL_TPCH_Q1),
     "tpch_q3": (q_tpch_q3, SQL_TPCH_Q3),
-    "multimodal_meta": (q_multimodal_meta, SQL_MULTIMODAL_META),
-    "decode_ppm": (q_decode_ppm, SQL_DECODE_PPM),
-    "decode_wav": (q_decode_wav, SQL_DECODE_WAV),
     "dedup_stream": (q_dedup_stream, SQL_DEDUP_STREAM),
     "online_neardup_flags": (q_online_neardup_flags, SQL_ONLINE_NEARDUP_FLAGS),
-    "events_hourly_stream": (q_events_hourly_stream, SQL_EVENTS_HOURLY_STREAM),
-    "stream_enrich": (q_stream_enrich, SQL_STREAM_ENRICH),
-    "quantize_embeddings": (q_quantize_embeddings, SQL_QUANTIZE_EMBEDDINGS),
     "lsh_knn_cosine": (q_lsh_knn_cosine, None),
     "lsh_recall_report": (q_lsh_recall_report, None),
-    "ivf_recall_report": (q_ivf_recall_report, None),
-    "ivf_topk": (q_ivf_topk, None),
-    "frame_sample": (q_frame_sample, SQL_FRAME_SAMPLE),
     "linkage_f1": (q_linkage_f1, SQL_LINKAGE_F1),
     "alignment_f1": (q_alignment_f1, SQL_ALIGNMENT_F1),
     "alignment_hits": (q_alignment_hits, SQL_ALIGNMENT_HITS),

@@ -88,14 +88,13 @@ def knn_join_expr(
     vec_col: str = "vec",
     block_col: str | None = None,
     exclude_self: bool = False,
-    broadcast_index: bool = True,
     metric_params: dict | None = None,
 ) -> DataFrame:
     """Exact kNN as a declarative join: Catalyst sees everything.
 
-    With ``block_col`` the join is an equi-join on the blocking key (shuffle
-    or broadcast hash join — Catalyst picks); without it, a broadcast nested
-    loop over the (small) indexed side.
+    The (small) indexed side is always broadcast: with ``block_col`` the
+    join is a broadcast hash join on the blocking key; without it, a
+    broadcast nested loop.
 
     ``metric_params``: {'V': [...]} for metric='seuclidean' (per-dim
     variances, the sklearn contract). The inputs are scaled ONCE per row
@@ -123,9 +122,7 @@ def knn_join_expr(
     else:
         dist = distance_expr(F.col("q.vec"), F.col("x.vec"), metric)
     q = q.alias("q")
-    x = x.alias("x")
-    if broadcast_index:
-        x = F.broadcast(x)
+    x = F.broadcast(x.alias("x"))
     if block_col:
         joined = q.join(x, F.col("q.block") == F.col("x.block"))
     else:

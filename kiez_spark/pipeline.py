@@ -78,6 +78,8 @@ class PipelineConfig:
             )
         if self.tier not in TIERS:
             raise ValueError(f"unknown tier {self.tier!r}")
+        if self.tier == "blocked" and not self.block_col:
+            raise ValueError("tier='blocked' requires block_col")
         if self.tier == "lsh" and self.hubness in ("mp_empiric", "dsl"):
             # these transforms aggregate STRUCTURE from the reverse table
             # (sparse reverse rows / candidate centroids) with no meaningful
@@ -178,8 +180,6 @@ class HubnessKnn:
             # engine tie-break -- no extra rank window (saves a shuffle)
             return cands
         if c.tier == "blocked":
-            if not c.block_col:
-                raise ValueError("blocked tier requires block_col")
             cands = K.knn_join_blocked(
                 queries, index, k, metric,
                 id_col=c.id_col, vec_col=c.vec_col,

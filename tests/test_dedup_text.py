@@ -1,18 +1,15 @@
-"""Dedup + text-analysis + multimodal + similarity operators over the
-driver-provided documents/embeddings tables and planted synthetic dups."""
+"""Dedup + text-analysis operators over the driver-provided documents
+table and planted synthetic dups."""
 
 import hashlib
 import re
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from kiez_spark import synth
 from kiez_spark.functions import text as T
 from kiez_spark.operators import dedup as D
-from kiez_spark.operators import multimodal as M
-from kiez_spark.operators import similarity as SIM
 from kiez_spark.operators import text_analysis as TA
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -21,11 +18,6 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
 
 
 @pytest.fixture(scope="module")
@@ -291,40 +283,6 @@ def test_bm25_topk(spark, docs):
     assert got[3].bm25 > got[2].bm25
 
 
-def test_multimodal_plumbing(spark, docs):
-    blobs = M.pack_blobs(docs.limit(50))
-    assert blobs.filter(F.col("n_bytes") != F.length(F.col("blob"))).count() == 0
-    feats = M.decode_image(blobs, fake=True).collect()
-    assert len(feats) == 50
-    assert all(len(r.feat) == 8 for r in feats)
-    assert all(abs(sum(r.feat) - 1.0) < 1e-9 for r in feats)
-    # non-PPM bytes through the REAL path: NotImplementedError is
-    # raised in the worker and surfaces wrapped by Spark
-    with pytest.raises(Exception, match="only binary PPM"):
-        M.decode_image(blobs).collect()
-    frames = M.frame_sample(blobs, n_frames=4)
-    per_doc = frames.groupBy("doc_id").count().agg(F.min("count")).first()[0]
-    assert per_doc == 4
-
-
-def test_similarity_ivf_vs_exact(spark, emb):
-    exact = SIM.cosine_topk(emb, k=5)
-    approx = SIM.ivf_topk(emb, k=5, n_cells=8, nprobe=4)
-    hit = approx.select("query_id", "cand_id").intersect(
-        exact.select("query_id", "cand_id")
-    )
-    recall = hit.count() / exact.count()
-    assert recall > 0.5, f"IVF recall {recall}"  # nprobe=half the cells
-    # nprobe = n_cells must be exhaustive = exact
-    full = SIM.ivf_topk(emb, k=5, n_cells=8, nprobe=8)
-    assert (
-        full.select("query_id", "cand_id")
-        .exceptAll(exact.select("query_id", "cand_id"))
-        .count()
-        == 0
-    )
-
-
 def test_minhash_lsh_join_incremental(spark, dup_docs):
     """Asymmetric new-batch x corpus join: each mutated doc must hit its
     source, and corpus x corpus pairs must never appear."""
@@ -426,61 +384,6 @@ def test_curation_ops(spark):
     assert ids_small < ids1
     with pytest.raises(ValueError):
         CUR.sample_by_hash(big, 1.5)
-
-
-def test_real_ppm_decode(spark, docs):
-    """The REAL decode path: synthesized binary P6 PPMs parse to the
-    right dims and features; non-PPM blobs still raise; the parser
-    honors netpbm comments and whitespace."""
-    import numpy as np
-
-    blobs = M.synth_ppm_blobs(docs.limit(20))
-    feats = M.decode_image(blobs).collect()
-    assert len(feats) == 20
-    assert all(r.height == 8 and r.width == 8 for r in feats)
-    assert all(abs(sum(r.feat) - 1.0) < 1e-9 for r in feats)
-    # python cross-check of one blob
-    raw = bytes(blobs.orderBy("doc_id").first().blob)
-    w, h, gray, psum = M._parse_ppm(raw)
-    got = next(r for r in feats if r.doc_id == blobs.orderBy("doc_id").first().doc_id)
-    assert (w, h) == (8, 8) and abs(got.mean_px - float(np.mean(gray))) < 1e-9
-    # the exact-integer pair reproduces the mean: px_sum/px_n == mean_px
-    assert got.px_sum == psum and got.px_n == 8 * 8 * 3
-    assert abs(got.px_sum / got.px_n - got.mean_px) < 1e-12
-    # comment + wide whitespace header variant
-    body = bytes(range(2 * 3 * 3)) * 1
-    ppm = b"P6\n# a comment\n 3\t2 \n255\n" + body
-    w2, h2, g2, psum2 = M._parse_ppm(ppm)
-    assert (w2, h2) == (3, 2) and len(g2) == 6 and psum2 == sum(body)
-    # non-PPM magic -> honest NotImplementedError
-    with pytest.raises(NotImplementedError):
-        M._parse_ppm(b"\x89PNG....")
-
-
-def test_real_wav_decode(spark, docs):
-    """The REAL audio path: PCM16 RIFF/WAVE round-trip — sample values
-    equal the source text bytes; truncated/foreign containers raise."""
-    import numpy as np
-
-    blobs = M.synth_wav_blobs(docs.limit(20))
-    out = M.decode_audio(blobs).orderBy("doc_id").collect()
-    assert len(out) == 20
-    assert all(
-        r.sample_rate == 8000 and r.n_channels == 1 and r.n_samples == 128
-        for r in out
-    )
-    first_doc = docs.orderBy("doc_id").first()
-    padded = (first_doc.text[:128] + " " * 128)[:128].encode()
-    want = np.frombuffer(padded, dtype=np.uint8).astype(np.float64)
-    got = next(r for r in out if r.doc_id == first_doc.doc_id)
-    assert abs(got.mean_amp - float(want.mean())) < 1e-9
-    assert abs(got.rms - float(np.sqrt((want**2).mean()))) < 1e-9
-    with pytest.raises(Exception):
-        M.decode_audio(
-            spark.createDataFrame(
-                [(1, bytearray(b"OggS not a wav"))], "doc_id bigint, blob binary"
-            )
-        ).collect()
 
 
 def test_hash_split_partitions_exactly(spark):

@@ -1,12 +1,5 @@
-"""Token-stream packing (distributed prefix sum), stratified sampling,
-and benchmark decontamination — the round-5 training-data additions.
-
-The load-bearing property for prefix_sum/pack_chunks is PARTITIONING
-INDEPENDENCE: the two-phase (local cumsum + broadcast offsets) plan must
-produce exactly the per-stream window result no matter how the input is
-laid out — that identity is what the DuckDB oracle (naive window SQL)
-certifies at the driver gate, and what these tests pin at unit scale.
-"""
+"""Stratified sampling and benchmark decontamination (curation
+operators)."""
 
 from __future__ import annotations
 
@@ -14,13 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from kiez_spark.operators import curation as CUR
-from kiez_spark.operators import packing as PK
 
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    # deterministic mini-corpus: 3 streams, token counts 1..n, including
-    # a doc bigger than the pack capacity used below
+    # deterministic mini-corpus: 3 language strata, token counts 1..29
     rows = []
     did = 0
     for lang, n_docs in [("en", 13), ("de", 7), ("fr", 1)]:
@@ -29,69 +20,6 @@ def docs(spark):
             rows.append((did, " ".join(f"w{did}t{j}" for j in range(n_tok)), lang))
             did += 1
     return spark.createDataFrame(rows, "doc_id bigint, text string, lang string")
-
-
-def _expected_prefix(rows):
-    """Driver-side reference: exclusive cumsum per stream in id order."""
-    acc, out = {}, {}
-    for did, stream, n in sorted(rows):
-        out[did] = acc.get(stream, 0)
-        acc[stream] = acc.get(stream, 0) + n
-    return out
-
-
-def test_prefix_sum_matches_reference_and_is_layout_independent(spark, docs):
-    base = docs.select(
-        "lang", "doc_id", F.size(F.split("text", " ")).cast("long").alias("n")
-    )
-    ref_rows = [(r["doc_id"], r["lang"], r["n"]) for r in base.collect()]
-    want = _expected_prefix([(d, s, n) for d, s, n in ref_rows])
-    for layout in [base, base.repartition(1), base.repartition(16, "doc_id")]:
-        got = {
-            r["doc_id"]: r["p"]
-            for r in PK.prefix_sum(
-                layout, "lang", "doc_id", "n", "p", num_partitions=5
-            ).collect()
-        }
-        assert got == want
-
-
-def test_pack_chunks_partition_of_stream(spark, docs):
-    cap = 16
-    out = PK.pack_chunks(docs, cap).collect()
-    # every chunk except each stream's last holds exactly cap tokens,
-    # and per-doc spans tile [0, n_tok) without gap or overlap
-    per_chunk: dict = {}
-    per_doc: dict = {}
-    for r in out:
-        assert 0 <= r["begin_tok"] < r["end_tok"]
-        per_chunk.setdefault((r["stream"], r["chunk_id"]), 0)
-        per_chunk[(r["stream"], r["chunk_id"])] += r["end_tok"] - r["begin_tok"]
-        per_doc.setdefault(r["doc_id"], []).append((r["begin_tok"], r["end_tok"]))
-    last = {}
-    for (stream, cid), tok in per_chunk.items():
-        last[stream] = max(last.get(stream, -1), cid)
-    for (stream, cid), tok in per_chunk.items():
-        if cid != last[stream]:
-            assert tok == cap, (stream, cid, tok)
-        else:
-            assert 0 < tok <= cap
-    n_tok = {
-        r["doc_id"]: r["n"]
-        for r in docs.select(
-            "doc_id", F.size(F.split("text", " ")).alias("n")
-        ).collect()
-    }
-    for did, spans in per_doc.items():
-        spans.sort()
-        assert spans[0][0] == 0 and spans[-1][1] == n_tok[did]
-        for (_, e0), (b1, _) in zip(spans, spans[1:]):
-            assert e0 == b1
-
-
-def test_pack_chunks_rejects_bad_capacity(docs):
-    with pytest.raises(ValueError):
-        PK.pack_chunks(docs, 0)
 
 
 def test_stratified_sample_quotas_and_prefix_stability(spark, docs):

@@ -49,6 +49,34 @@ def test_resolver_aliases():
     assert eng.config.tier == "pandas" and eng.config.hubness == "csls"
 
 
+def test_blocked_tier_requires_block_col():
+    """tier='blocked' without a block_col fails at configuration, not
+    at the first kneighbors call."""
+    with pytest.raises(ValueError, match="block_col"):
+        PipelineConfig(tier="blocked")
+    with pytest.raises(ValueError, match="block_col"):
+        resolver.make_engine("blocked")
+    eng = resolver.make_engine("blocked", block_col="block")
+    assert eng.config.tier == "blocked"
+
+
+def test_run_linkage_rejects_blocked_tier_before_spark(monkeypatch):
+    """run_linkage has no blocking column, so --tier blocked is an
+    argparse error (exit 2) raised before any Spark session starts."""
+    from pyspark.sql import SparkSession
+
+    import jobs.run_linkage as job
+
+    def no_spark(self):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_spark)
+    with pytest.raises(SystemExit) as exc:
+        job.main(["--synthetic", "200", "--output", "unused",
+                  "--tier", "blocked"])
+    assert exc.value.code == 2
+
+
 def test_config_from_json(tmp_path):
     p = tmp_path / "conf.json"
     p.write_text(json.dumps({"n_candidates": 7, "k": 3, "hubness": "nicdm"}))

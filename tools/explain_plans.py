@@ -199,23 +199,6 @@ def main() -> int:
         "incremental join must never cross-join the two corpora"
     )
 
-    # 9. sessionize: ONE hash exchange on user_id serves both window
-    #    frames (lag flag + running sum) — no extra shuffle, no global
-    #    sort, no SinglePartition.
-    from kiez_spark.operators import events as EV
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    p9 = plan_of(EV.sessionize(ev))
-    ok &= check(
-        "sessionize: single user_id exchange for both windows",
-        p9,
-        ["hashpartitioning(user_id"],
-        dump,
-    )
-    n_ex9 = len(re.findall(r"\(\d+\) Exchange", p9))
-    assert n_ex9 == 1, f"sessionize must shuffle exactly once: {n_ex9}"
-    assert "Exchange SinglePartition" not in p9
-
     # 10. salted blocked join: the salt-count table joins via BROADCAST
     #     on both sides and the kernel cogroups on the salted block key.
     from kiez_spark.operators import skew as SK
@@ -246,19 +229,6 @@ def main() -> int:
         p11,
         ["FlatMapCoGroupsInPandas", "hashpartitioning(block",
          "WindowGroupLimit"],
-        dump,
-    )
-
-    # 12. quantize: the 1-row bounds table reaches every row via a
-    #     broadcast NLJ — per-dim bounds must never shuffle the corpus.
-    from kiez_spark.operators import quantize as Q
-
-    embq = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    p12 = plan_of(Q.quantize_embeddings(embq))
-    ok &= check(
-        "quantize: broadcast bounds",
-        p12,
-        ["BroadcastNestedLoopJoin"],
         dump,
     )
 
@@ -306,27 +276,6 @@ def main() -> int:
         dump,
     )
     assert "SortMergeJoin" not in p16, "corpus side must not shuffle-join"
-
-    # 17. prefix_sum (pack_chunks core): the two-phase plan — python
-    #     local-cumsum stage + broadcast offset join — with NO window
-    #     operator anywhere (a Window node would mean the naive
-    #     single-task-per-stream sort snuck back in)
-    from kiez_spark.operators import packing as PK
-
-    toks17 = docs.select(
-        "lang", "doc_id", F.col("n_chars").cast("long").alias("n")
-    )
-    p17 = plan_of(
-        PK.prefix_sum(toks17, "lang", "doc_id", "n", checkpoint=False)
-    )
-    ok &= check(
-        "prefix_sum: mapInPandas + broadcast offsets, no Window",
-        p17,
-        ["MapInPandas", "BroadcastHashJoin"],
-        dump,
-    )
-    assert "Window" not in p17, "prefix_sum must not plan a stream window"
-    spark.catalog.clearCache()  # release the checkpoint=False persist
 
     # 18. incremental blocking: batch-incident pairs are key equi-joins
     #     through the persisted index — no cartesian product anywhere,
