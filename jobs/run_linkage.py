@@ -249,7 +249,7 @@ def main(argv=None) -> int:
     ap.add_argument("--metric", default="euclidean")
     # no "blocked": the job has no blocking column to pass as block_col
     ap.add_argument("--tier", default="pandas",
-                    choices=["expr", "pandas", "lsh"])
+                    choices=["pandas", "lsh"])
     ap.add_argument("--dim", type=int, default=32)
     ap.add_argument("--max-dist", type=float, default=None)
     ap.add_argument("--evaluate-gold", action="store_true",

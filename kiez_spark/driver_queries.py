@@ -166,17 +166,6 @@ def q_knn_euclidean(spark, sf_dir):
     )
 
 
-def q_knn_euclidean_expr(spark, sf_dir):
-    """Same kNN through the declarative (Catalyst-visible) tier —
-    cross-tier agreement is itself part of the contract
-    (tests/neighbors/test_faiss.py:22-46 semantics)."""
-    emb = _emb(spark, sf_dir)
-    nn = K.knn_join_expr(emb, emb, TOP_K, "euclidean", exclude_self=True)
-    return nn.select(
-        "query_id", "cand_id", F.col("rank"), F.round("dist", 6).alias("dist")
-    )
-
-
 SQL_KNN_EUCLIDEAN = f"""
 WITH {_PAIRS_SQL}
 SELECT qid AS query_id, cid AS cand_id, r::INT AS rank, round(d, 6) AS dist
@@ -824,7 +813,7 @@ FROM final WHERE r <= {TOP_K}
 
 def q_k_occurrence(spark, sf_dir):
     emb = _emb(spark, sf_dir)
-    nn = K.knn_join_expr(emb, emb, TOP_K, "euclidean", exclude_self=True)
+    nn = K.knn_join_pandas(emb, emb, TOP_K, "euclidean", exclude_self=True)
     n = _nrows(sf_dir, "embeddings")
     return A.k_occurrence(nn, n, TOP_K).select("entity_id", "k_occ")
 
@@ -841,7 +830,7 @@ FROM ids LEFT JOIN counts ON ids.entity_id = counts.cid
 
 def q_hubness_measures(spark, sf_dir):
     emb = _emb(spark, sf_dir)
-    nn = K.knn_join_expr(emb, emb, TOP_K, "euclidean", exclude_self=True)
+    nn = K.knn_join_pandas(emb, emb, TOP_K, "euclidean", exclude_self=True)
     n = _nrows(sf_dir, "embeddings")
     m = A.hubness_score(nn, n_queries=n, target_samples=n, k=TOP_K,
                         return_value="all", n_cols=TOP_K)
@@ -852,7 +841,7 @@ def q_atkinson_eps1(spark, sf_dir):
     """Atkinson with the reference's eps=1 geometric-mean branch
     (estimation.py:145-148); exercises the parametrized eps path."""
     emb = _emb(spark, sf_dir)
-    nn = K.knn_join_expr(emb, emb, TOP_K, "euclidean", exclude_self=True)
+    nn = K.knn_join_pandas(emb, emb, TOP_K, "euclidean", exclude_self=True)
     n = _nrows(sf_dir, "embeddings")
     m = A.hubness_score(nn, n_queries=n, target_samples=n, k=TOP_K,
                         return_value="atkinson", atkinson_eps=1.0,
@@ -965,7 +954,7 @@ ORDER BY cid
 
 def q_hits_at_k(spark, sf_dir):
     emb = _emb(spark, sf_dir)
-    nn = K.knn_join_expr(emb, emb, N_CAND, "euclidean", exclude_self=True)
+    nn = K.knn_join_pandas(emb, emb, N_CAND, "euclidean", exclude_self=True)
     # deterministic gold: each entity -> smallest other id with same label
     a = emb.select(F.col("id").alias("src_id"), F.col("label").alias("la"))
     b = emb.select(F.col("id").alias("oid"), F.col("label").alias("lb"))
@@ -3736,7 +3725,6 @@ SELECT a_id, b_id FROM pairs
 
 QUERIES = {
     "knn_exact_euclidean": (q_knn_euclidean, SQL_KNN_EUCLIDEAN),
-    "knn_exact_expr_tier": (q_knn_euclidean_expr, SQL_KNN_EUCLIDEAN),
     "knn_exact_cosine": (q_knn_cosine, SQL_KNN_COSINE),
     "knn_exact_manhattan": (q_knn_manhattan, SQL_KNN_MANHATTAN),
     "knn_exact_minkowski3": (q_knn_minkowski3, SQL_KNN_MINKOWSKI3),

@@ -1,8 +1,9 @@
 """Vector math as Spark SQL column expressions over ARRAY<DOUBLE>.
 
-These stay JVM-side (whole-stage codegen) — the hot candidate-scoring path
-never crosses into Python unless the pandas-UDF matrix kernel tier is
-chosen explicitly (see operators/knn.py).
+These stay JVM-side (whole-stage codegen). They score pairs that are
+already known — the LSH rescore (operators/lsh.py ``_rescore``) and the
+linkage distance gate (linkage.py); all-pairs kNN runs in the numpy
+kernels of operators/knn.py.
 
 Metric semantics mirror the reference's metric normalizations
 (/root/reference/kiez/neighbors/approximate/faiss.py:122-156,
@@ -109,12 +110,12 @@ def correlation(a: Column, b: Column) -> Column:
 
     Accuracy limitation of the algebraic form: when vectors carry a large
     common offset (|mean| >> spread) the cov/var subtractions cancel
-    catastrophically, so this expr tier can disagree with the
+    catastrophically, so this expression can disagree with the
     row-centered pandas/blocked kernels beyond the usual 1e-9 parity on
     such data (roughly |mean|/spread > 1e6). The ratio is clamped into
     [-1, 1] below so even degenerate inputs stay in the valid distance
     range [0, 2]; offset-heavy corpora should center the vectors upstream
-    or use the pandas/blocked tiers (which center rows exactly)."""
+    (the pandas/blocked kernels center rows exactly)."""
     d = F.size(a).cast("double")
     sa = F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x)
     sb = F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x)

@@ -47,7 +47,7 @@ def _row_w():
 def _row_stat(s2t: DataFrame, agg_fn, precomputed: str):
     """Per-query candidate-set statistic: use the kernel-emitted column
     when the candidate table carries it (pandas tier — saves a window
-    shuffle), else a window aggregate (expr/blocked/lsh tiers)."""
+    shuffle), else a window aggregate (blocked/lsh tiers)."""
     if precomputed in s2t.columns:
         return F.col(precomputed)
     return agg_fn("dist").over(_row_w())
@@ -326,7 +326,9 @@ def dis_sim_local(
         .select(
             F.col("c.query_id").alias("query_id"),
             F.col("c.cand_id").alias("cand_id"),
-            (d2 - F.col("di.delta") - F.col("dj.delta")).alias("dist"),
+            # delta_i + delta_j first: symmetric, so the two directions
+            # of a single-source pair get bit-equal values
+            (d2 - (F.col("di.delta") + F.col("dj.delta"))).alias("dist"),
         )
     ).persist()
     min_row = pairs.agg(F.min("dist").alias("mind"))

@@ -1,21 +1,23 @@
 """k-NN candidate generation — the engine's similarity-join layer.
 
 Replaces the reference's pluggable NN backends (sklearn/faiss/nmslib/ngt/
-annoy, /root/reference/kiez/neighbors/) with three Spark-native tiers:
+annoy in kiez/neighbors/) with two exact Spark-native
+kNN joins, plus the approximate LSH tier in operators/lsh.py:
 
-1. ``knn_join_expr``   — pure DataFrame cross/block join + distance column
-   expression + rank window. Whole-stage-codegen, fully Catalyst-visible
-   (predicate pushdown, AQE skew split). The "exact, SQL-expressible" tier
-   used for DuckDB-oracle correctness checks.
-2. ``knn_join_pandas`` — broadcast the indexed side as a dense numpy matrix,
+1. ``knn_join_pandas`` — broadcast the indexed side as a dense numpy matrix,
    stream query partitions through an Arrow-batched ``mapInPandas`` matrix
-   kernel (BLAS via numpy). The fast exact tier when the indexed side fits
-   in executor memory (~1e6 x 64 doubles = 512 MB — beyond that, block).
-3. ``knn_join_blocked`` — cogrouped ``applyInPandas`` per blocking key:
-   both sides shuffle once on the key, the kernel solves the block-local
-   kNN. This is the 100 TB path: no global cross join ever materializes;
-   combine with LSH bucketing (operators/lsh.py) for recall, and salting
-   (operators/skew.py) for hot keys.
+   kernel (``_BruteKnnKernel``, BLAS via numpy). The engine's one exact
+   all-pairs kNN, for an indexed side that fits in executor memory
+   (~1e6 x 64 doubles = 512 MB — beyond that, block).
+2. ``knn_join_blocked`` — cogrouped ``applyInPandas`` per blocking key:
+   both sides shuffle once on the key, the per-block kernel
+   (``_topk_block``) solves the block-local kNN. No global cross join
+   ever materializes; the LSH tier feeds its buckets through it, and
+   salting (operators/skew.py) splits hot keys.
+
+The reference for both is the numpy oracle (oracle/numpy_oracle.py
+``dist_matrix``/``knn``) and the DuckDB oracle SQL of the registered
+queries.
 
 Candidate tables use the long format (query_id, cand_id, dist) — the Spark
 equivalent of the reference's aligned (n_queries, k) matrices
@@ -40,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kiez_spark.functions.vectors import distance_expr, vec_as_double
+from kiez_spark.functions.vectors import vec_as_double
 
 CAND_SCHEMA = "query_id bigint, cand_id bigint, dist double"
 CAND_RANKED_SCHEMA = (
@@ -76,65 +78,6 @@ def _prep(df: DataFrame, id_col: str, vec_col: str, block_col: str | None):
     if block_col:
         cols.append(F.col(block_col).alias("block"))
     return df.select(*cols)
-
-
-def knn_join_expr(
-    queries: DataFrame,
-    index: DataFrame,
-    k: int,
-    metric: str = "euclidean",
-    *,
-    id_col: str = "id",
-    vec_col: str = "vec",
-    block_col: str | None = None,
-    exclude_self: bool = False,
-    metric_params: dict | None = None,
-) -> DataFrame:
-    """Exact kNN as a declarative join: Catalyst sees everything.
-
-    The (small) indexed side is always broadcast: with ``block_col`` the
-    join is a broadcast hash join on the blocking key; without it, a
-    broadcast nested loop.
-
-    ``metric_params``: {'V': [...]} for metric='seuclidean' (per-dim
-    variances, the sklearn contract). The inputs are scaled ONCE per row
-    (1/sqrt(V)) and the metric folds to euclidean — cheaper than a
-    per-pair weighted expression.
-    """
-    queries, index, metric = apply_metric_rewrites(
-        queries, index, metric, metric_params, vec_col
-    )
-    q = _prep(queries, id_col, vec_col, block_col)
-    x = _prep(index, id_col, vec_col, block_col)
-    if metric in ("cosine", "cos"):
-        # per-id norms ride the row projections so each pair pays one
-        # interpreted array traversal (the dot), not three; operand
-        # shape matches cosine_distance exactly — f64-identical (the
-        # lsh._rescore convention)
-        from kiez_spark.functions.vectors import dot, l2_norm
-
-        q = q.withColumn("_n", l2_norm(F.col("vec")))
-        x = x.withColumn("_n", l2_norm(F.col("vec")))
-        denom = F.col("q._n") * F.col("x._n")
-        dist = F.when(denom == 0.0, F.lit(1.0)).otherwise(
-            F.lit(1.0) - dot(F.col("q.vec"), F.col("x.vec")) / denom
-        )
-    else:
-        dist = distance_expr(F.col("q.vec"), F.col("x.vec"), metric)
-    q = q.alias("q")
-    x = F.broadcast(x.alias("x"))
-    if block_col:
-        joined = q.join(x, F.col("q.block") == F.col("x.block"))
-    else:
-        joined = q.crossJoin(x)
-    if exclude_self:
-        joined = joined.filter(F.col("q.id") != F.col("x.id"))
-    cands = joined.select(
-        F.col("q.id").alias("query_id"),
-        F.col("x.id").alias("cand_id"),
-        dist.alias("dist"),
-    )
-    return topk(cands, k)
 
 
 def _metric_p(metric: str) -> float | None:
@@ -212,6 +155,16 @@ def _is_bool_metric(metric: str) -> bool:
     k+cushion margin; the f64 rerank divides exact integers and is
     bit-exact with the SQL oracle)."""
     return metric in ("jaccard", "dice")
+
+
+def check_metric(metric: str) -> None:
+    """Raise ValueError unless the kernels' dispatch accepts ``metric``:
+    the input rewrites (seuclidean/mahalanobis -> euclidean, correlation
+    -> cosine), the boolean family, or a name ``_metric_p`` resolves."""
+    if metric in ("seuclidean", "mahalanobis", "correlation"):
+        return
+    if not _is_bool_metric(metric):
+        _metric_p(metric)
 
 
 def _binarize(m: np.ndarray) -> np.ndarray:
@@ -316,63 +269,6 @@ def _center_rows(m: np.ndarray) -> np.ndarray:
     with zero per-metric kernel code. Zero-variance rows become zero
     vectors and take the zero-norm cosine convention (distance 1.0)."""
     return m - m.mean(axis=1, keepdims=True)
-
-
-def _dist_matrix(qm: np.ndarray, xm: np.ndarray, metric: str) -> np.ndarray:
-    """Batched distance kernel, float64 BLAS (element-wise dim loop for
-    the non-GEMM minkowski family — the reference's sklearn backend takes
-    any p, sklearn_nearest_neighbors.py:51-101)."""
-    if metric == "correlation":
-        return _dist_matrix(_center_rows(qm), _center_rows(xm), "cosine")
-    if _is_bool_metric(metric):
-        bq, bx = _binarize(qm), _binarize(xm)
-        ctt = bq @ bx.T
-        return _bool_dist(
-            ctt, bq.sum(axis=1)[:, None], bx.sum(axis=1)[None, :],
-            metric, _CANBERRA_TINY,
-        )
-    p = _metric_p(metric)
-    if p is not None:
-        ham = _is_hamming(metric)
-        canb = _is_canberra(metric)
-        bc = _is_braycurtis(metric)
-        acc = np.zeros((qm.shape[0], xm.shape[0]), dtype=np.float64)
-        den_acc = np.zeros_like(acc) if bc else None
-        for dcol in range(qm.shape[1]):
-            diff = np.abs(qm[:, dcol][:, None] - xm[:, dcol][None, :])
-            if ham:
-                np.sign(diff, out=diff)
-            elif canb:
-                den = np.abs(qm[:, dcol])[:, None] + np.abs(xm[:, dcol])[None, :]
-                diff /= np.maximum(den, _CANBERRA_TINY)
-            elif bc:
-                den_acc += np.abs(
-                    qm[:, dcol][:, None] + xm[:, dcol][None, :]
-                )
-            if p == np.inf:
-                np.maximum(acc, diff, out=acc)
-            else:
-                acc += diff if p == 1.0 else diff**p
-        if ham:
-            acc /= qm.shape[1]
-        elif bc:
-            acc /= np.maximum(den_acc, _CANBERRA_TINY)
-        return acc ** (1.0 / p) if _p_needs_power(p) else acc
-    if metric in ("euclidean", "minkowski", "l2", "sqeuclidean"):
-        sq = (
-            (qm * qm).sum(axis=1)[:, None]
-            + (xm * xm).sum(axis=1)[None, :]
-            - 2.0 * qm @ xm.T
-        )
-        np.maximum(sq, 0.0, out=sq)
-        return sq if metric == "sqeuclidean" else np.sqrt(sq)
-    if metric in ("cosine", "cos"):
-        qn = np.linalg.norm(qm, axis=1)
-        xn = np.linalg.norm(xm, axis=1)
-        qn[qn == 0] = 1.0
-        xn[xn == 0] = 1.0
-        return 1.0 - (qm / qn[:, None]) @ (xm / xn[:, None]).T
-    raise ValueError(f"unsupported metric: {metric}")
 
 
 def _topk_block(
@@ -950,11 +846,14 @@ class _BruteKnnKernel:
                 np.take(self.xm[:, dcol], cols, out=t2)
                 t1 *= t2
                 acc += t1
+            # (q^2 + x^2) - 2qx, the oracle's association: q^2 + x^2 is
+            # commutative, so d(i, j) == d(j, i) bit for bit in a
+            # self-join (ulp asymmetry turns into ~1e-8 after DSL's sqrt)
             q2 = (qm * qm).sum(axis=1)
-            acc *= -2.0
             np.take(q2, rows, out=t1)
-            acc += t1
-            np.take(self.x2, cols, out=t1)
+            np.take(self.x2, cols, out=t2)
+            t1 += t2
+            acc *= -2.0
             acc += t1
             np.maximum(acc, 0.0, out=acc)
             if self.metric != "sqeuclidean":
@@ -1022,8 +921,8 @@ def collect_index(
     """Driver-side index materialization (the engine's 'fit'/index-build
     step — analogous to the reference's NNAlgorithm._fit). Callers doing
     multiple kNN passes over the same indexed side (e.g. the reverse
-    hubness query in single-source mode) should collect once and pass
-    ``index_np`` to knn_join_pandas."""
+    hubness query in single-source mode) should collect once, broadcast
+    the result and pass it as ``index_bc`` to knn_join_pandas."""
     x = _prep(index, id_col, vec_col, None).toPandas()
     return x["id"].to_numpy(np.int64), np.stack(x["vec"].to_numpy())
 
@@ -1037,8 +936,6 @@ def knn_join_pandas(
     id_col: str = "id",
     vec_col: str = "vec",
     exclude_self: bool = False,
-    n_partitions: int | None = None,
-    index_np: tuple[np.ndarray, np.ndarray] | None = None,
     index_bc=None,
     cache_token: str | None = None,
     metric_params: dict | None = None,
@@ -1072,29 +969,16 @@ def knn_join_pandas(
                 " xm * 1/sqrt(V)) and pass metric='euclidean'"
             )
         # ONE source of truth for param validation + the DF-side input
-        # rewrite (shared with knn_join_expr/knn_join_blocked/pipeline);
-        # only the numpy-index fold is unique to this tier. Validation
-        # happens inside apply_metric_rewrites before index_np is touched.
-        orig_metric = metric
+        # rewrite (shared with knn_join_blocked/pipeline)
         queries, index, metric = apply_metric_rewrites(
             queries, index, metric, metric_params, vec_col
         )
-        if index_np is not None:
-            ids_, xm_ = index_np
-            if orig_metric == "mahalanobis":
-                L = mahalanobis_chol(metric_params["VI"])
-                index_np = (ids_, xm_.astype(np.float64) @ L)
-            else:
-                s_ = 1.0 / np.sqrt(
-                    np.asarray(metric_params["V"], dtype=np.float64)
-                )
-                index_np = (ids_, xm_ * s_[None, :])
 
     spark = queries.sparkSession
     if index_bc is None:
-        if index_np is None:
-            index_np = collect_index(index, id_col, vec_col)
-        index_bc = spark.sparkContext.broadcast(index_np)
+        index_bc = spark.sparkContext.broadcast(
+            collect_index(index, id_col, vec_col)
+        )
     bc = index_bc
     # a caller-stable token lets repeated passes over the same index (the
     # reverse hubness query; warmups) reuse the worker-side kernel state
@@ -1110,17 +994,15 @@ def knn_join_pandas(
     # scheduling + Arrow round-trip (measured: 2k rows at 96 tasks 1.2 s
     # vs 24 tasks 0.52 s on local[24]). The byte estimate is a
     # driver-side plan statistic — no job.
-    target_parts = n_partitions
-    if target_parts is None:
-        par = spark.sparkContext.defaultParallelism
-        hi = par * 4
-        try:
-            est = int(
-                queries._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-            target_parts = max(par, min(hi, est >> 19))
-        except Exception:
-            target_parts = hi
+    par = spark.sparkContext.defaultParallelism
+    hi = par * 4
+    try:
+        est = int(
+            queries._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+        target_parts = max(par, min(hi, est >> 19))
+    except Exception:
+        target_parts = hi
     if q.rdd.getNumPartitions() < target_parts:
         q = q.repartition(target_parts)
 

@@ -24,7 +24,17 @@ import numpy as np
 _SQRT2 = math.sqrt(2.0)
 
 
+# 0-denominator floor of canberra/braycurtis/jaccard/dice, the engine-wide
+# convention: 0/0 terms come out 0, never nan
+_TINY = 1e-300
+
+
 def dist_matrix(q: np.ndarray, x: np.ndarray, metric: str) -> np.ndarray:
+    """(len(q), len(x)) float64 distances for every metric name the kNN
+    kernels accept, written from the scipy/sklearn formulas. The
+    element-wise family broadcasts a (len(q), len(x), d) array: sized
+    for test inputs. seuclidean/mahalanobis are euclidean over inputs
+    the caller has scaled (x / sqrt(V), x @ cholesky(VI))."""
     q = np.asarray(q, dtype=np.float64)
     x = np.asarray(x, dtype=np.float64)
     if metric in ("euclidean", "minkowski", "l2", "sqeuclidean"):
@@ -34,12 +44,40 @@ def dist_matrix(q: np.ndarray, x: np.ndarray, metric: str) -> np.ndarray:
         np.maximum(sq, 0.0, out=sq)
         return sq if metric == "sqeuclidean" else np.sqrt(sq)
     if metric in ("cosine", "cos"):
+        # zero vectors take distance 1.0 (the engine convention)
         qn = np.linalg.norm(q, axis=1)
         xn = np.linalg.norm(x, axis=1)
         qn[qn == 0] = 1.0
         xn[xn == 0] = 1.0
         return 1.0 - (q / qn[:, None]) @ (x / xn[:, None]).T
-    raise ValueError(metric)
+    if metric == "correlation":
+        return dist_matrix(
+            q - q.mean(1, keepdims=True), x - x.mean(1, keepdims=True), "cosine"
+        )
+    if metric in ("jaccard", "dice"):
+        bq = (q != 0).astype(np.float64)
+        bx = (x != 0).astype(np.float64)
+        ctt = bq @ bx.T
+        s = bq.sum(1)[:, None] + bx.sum(1)[None, :]
+        den = s - ctt if metric == "jaccard" else s
+        return (s - 2.0 * ctt) / np.maximum(den, _TINY)
+    diff = np.abs(q[:, None, :] - x[None, :, :])
+    if metric in ("manhattan", "l1", "cityblock"):
+        return diff.sum(2)
+    if metric in ("chebyshev", "linf", "l_inf"):
+        return diff.max(2)
+    if metric == "hamming":
+        return np.sign(diff).sum(2) / q.shape[1]
+    if metric == "canberra":
+        den = np.abs(q)[:, None, :] + np.abs(x)[None, :, :]
+        return (diff / np.maximum(den, _TINY)).sum(2)
+    if metric == "braycurtis":
+        den = np.abs(q[:, None, :] + x[None, :, :]).sum(2)
+        return diff.sum(2) / np.maximum(den, _TINY)
+    if metric.startswith("minkowski_"):
+        p = float(metric.split("_", 1)[1])
+        return (diff**p).sum(2) ** (1.0 / p)
+    raise ValueError(f"unsupported metric: {metric}")
 
 
 def knn(

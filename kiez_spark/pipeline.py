@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import json
 import warnings
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
@@ -29,7 +29,7 @@ from kiez_spark.operators import hubness as H
 from kiez_spark.operators import knn as K
 
 HUBNESS_METHODS = ("none", "csls", "ls", "nicdm", "mp_normal", "mp_empiric", "dsl")
-TIERS = ("expr", "pandas", "blocked", "lsh")
+TIERS = ("pandas", "blocked", "lsh")
 
 
 @dataclass
@@ -42,7 +42,7 @@ class PipelineConfig:
     # requires {'V': [per-dim variances]}
     metric_params: dict | None = None
     hubness: str = "none"
-    tier: str = "expr"
+    tier: str = "pandas"
     block_col: str | None = None
     id_col: str = "id"
     vec_col: str = "vec"
@@ -61,7 +61,6 @@ class PipelineConfig:
     lsh_bits: int | None = None
     lsh_bucket_width: float | None = None
     lsh_seed: int = 42
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self):
         if not isinstance(self.n_candidates, int) or isinstance(self.n_candidates, bool):
@@ -92,9 +91,12 @@ class PipelineConfig:
                 f"hubness={self.hubness!r} requires a complete reverse"
                 " candidate table and cannot run on tier='lsh' (empty"
                 " reverse candidate lists would silently drop forward"
-                " pairs); use tier='expr'/'pandas'/'blocked', or a"
+                " pairs); use tier='pandas'/'blocked', or a"
                 " fallback-capable transform (csls/ls/nicdm/mp_normal)."
             )
+        # a misspelled metric would otherwise fail only inside a
+        # Python-worker task, after a Spark job has started
+        K.check_metric(self.metric)
         if self.metric == "seuclidean" and not (
             self.metric_params and "V" in self.metric_params
         ):
@@ -150,12 +152,6 @@ class HubnessKnn:
         if metric in ("seuclidean", "mahalanobis"):
             queries, index, metric = K.apply_metric_rewrites(
                 queries, index, metric, c.metric_params, c.vec_col
-            )
-        if c.tier == "expr":
-            return K.knn_join_expr(
-                queries, index, k, metric,
-                id_col=c.id_col, vec_col=c.vec_col,
-                block_col=c.block_col, exclude_self=exclude_self,
             )
         if c.tier == "pandas":
             # index build = the 'fit' step: collect each side's numpy copy

@@ -4,8 +4,9 @@ The reference resolves algorithm/reduction names through class_resolver
 (kiez/kiez.py:114-129, neighbors/util.py:18-39), defaulting to Faiss when
 installed and SklearnNN otherwise. Here the 'backends' are execution
 tiers, so reference backend names map onto the tier with the matching
-role: exact backends -> the exact tiers, graph/tree ANN backends -> the
-LSH tier.
+role: exact backends -> the pandas tier (the engine's one exact
+all-pairs kNN; the retired name ``expr`` resolves there too),
+graph/tree ANN backends -> the LSH tier.
 """
 
 from __future__ import annotations
@@ -37,11 +38,11 @@ HUBNESS_ALIASES = {
 ALGORITHM_ALIASES = {
     "auto": "pandas",        # reference default = Faiss-if-installed
     "faiss": "pandas",       # Flat == exact; our fast exact tier
-    "sklearnnearestneighbors": "expr",
-    "sklearnnn": "expr",
+    "sklearnnearestneighbors": "pandas",
+    "sklearnnn": "pandas",
     "exact": "pandas",
     "brute": "pandas",
-    "expr": "expr",
+    "expr": "pandas",
     "pandas": "pandas",
     "blocked": "blocked",
     "nmslib": "lsh",         # HNSW-class ANN -> LSH approximate tier

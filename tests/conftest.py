@@ -35,3 +35,24 @@ def source_df(spark, source_target):
 @pytest.fixture(scope="session")
 def target_df(spark, source_target):
     return to_vec_df(spark, source_target[1]).cache()
+
+
+@pytest.fixture(scope="session")
+def oracle_nn_df(spark):
+    """Factory for the exact self-join top-k (self excluded) from the
+    numpy oracle, as a (query_id, cand_id, dist) table over ``ids``
+    (ascending, so the oracle's index tie-break is the id tie-break)."""
+    from kiez_spark.oracle import numpy_oracle as O
+
+    def build(ids, mat, k, metric):
+        dist, ind = O.knn(mat, mat, k, metric, exclude_self=True)
+        rows = [
+            (int(ids[i]), int(ids[j]), float(d))
+            for i in range(len(ids))
+            for j, d in zip(ind[i], dist[i])
+        ]
+        return spark.createDataFrame(
+            rows, "query_id bigint, cand_id bigint, dist double"
+        )
+
+    return build

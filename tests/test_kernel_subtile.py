@@ -5,15 +5,16 @@ slab-threshold + resident-sub-tile + f32-pre-cut machinery
 (knn.py query_chunk) is never engaged there. Here the index is 9500 rows
 — slab of 8192 plus sub-tile blocks — and every metric family (GEMM,
 cosine, and the full element-wise tail incl. the dual-accumulator
-braycurtis) must reproduce the naive full-matrix f64 top-k exactly,
-with the deterministic (dist, id) tie-break. Pure numpy: no Spark
-session, runs in seconds.
+braycurtis) must reproduce the numpy oracle's full-matrix f64 top-k
+exactly, with the deterministic (dist, id) tie-break. Pure numpy: no
+Spark session, runs in seconds.
 """
 
 import numpy as np
 import pytest
 
 from kiez_spark.operators import knn as K
+from kiez_spark.oracle import numpy_oracle as O
 
 N_INDEX = 9500  # > tile (8192): forces slab + sub-tile streaming
 N_QUERY = 40
@@ -37,7 +38,7 @@ def data():
 
 
 def naive_topk(q_ids, qm, x_ids, xm, k, metric):
-    d = K._dist_matrix(qm, xm, metric)
+    d = O.dist_matrix(qm, xm, metric)
     out = {}
     for i in range(len(q_ids)):
         order = np.lexsort((x_ids, d[i]))[:k]
@@ -102,3 +103,20 @@ def test_subtile_kernel_exclude_self(data):
     got = kern.query(x_ids[pick], xm[pick])
     assert not any(got["query_id"] == got["cand_id"])
     assert len(got) == len(pick) * K_NN
+
+
+def test_self_join_distances_symmetric():
+    """In a self-join the euclidean rerank gives d(i, j) and d(j, i) the
+    same bits, so a transform that cancels near zero (DSL's shift, then
+    sqrt) cannot turn a 1-ulp asymmetry into a ~1e-8 difference between
+    the two directions of one pair."""
+    rng = np.random.RandomState(42)
+    xm = rng.rand(300, 16)
+    ids = np.arange(300, dtype=np.int64)
+    got = K._BruteKnnKernel(ids, xm, 10, "euclidean", exclude_self=True).query(
+        ids, xm
+    )
+    d = {(a, b): v for a, b, v in zip(got["query_id"], got["cand_id"], got["dist"])}
+    mutual = [(a, b) for (a, b) in d if a < b and (b, a) in d]
+    assert len(mutual) > 100
+    assert all(d[(a, b)] == d[(b, a)] for a, b in mutual)

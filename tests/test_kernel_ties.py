@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 
 from kiez_spark.operators import knn as K
+from kiez_spark.oracle import numpy_oracle as O
 
 
 def _collect(df):
@@ -21,20 +22,29 @@ def _collect(df):
     }
 
 
+def _oracle(mat, k, metric, exclude_self):
+    """Numpy-oracle top-k of a self-join over row-index ids."""
+    dist, ind = O.knn(mat, mat, k, metric, exclude_self=exclude_self)
+    return {
+        (i, r + 1): (int(ind[i, r]), float(dist[i, r]))
+        for i in range(len(mat))
+        for r in range(k)
+    }
+
+
 @pytest.mark.parametrize("metric", ["euclidean", "sqeuclidean", "manhattan"])
 @pytest.mark.parametrize("exclude_self", [True, False])
 def test_massive_ties_pandas_matches_expr(spark, metric, exclude_self):
     """Vectors drawn from a tiny discrete set: almost every distance value
     is shared by many pairs, so selection must rely on the deterministic
-    (dist, cand_id) tie-break everywhere."""
+    (dist, cand_id) tie-break everywhere. The reference is the numpy
+    oracle (the name predates it; kept for test-id continuity)."""
     rng = np.random.RandomState(5)
     mat = rng.randint(0, 3, size=(120, 4)).astype(np.float64)
     rows = [(i, [float(x) for x in mat[i]]) for i in range(120)]
     df = spark.createDataFrame(rows, "id bigint, vec array<double>")
     k = 7
-    exp = _collect(
-        K.knn_join_expr(df, df, k, metric, exclude_self=exclude_self)
-    )
+    exp = _oracle(mat, k, metric, exclude_self)
     got = _collect(
         K.knn_join_pandas(df, df, k, metric, exclude_self=exclude_self)
     )
@@ -58,12 +68,12 @@ def test_all_identical_vectors(spark):
 
 def test_small_index_smaller_than_cushion(spark):
     """n < k + cushion: slab covers the whole index; pre-cut is skipped
-    (width <= sel); results still exact vs the expr tier."""
+    (width <= sel); results still exact vs the numpy oracle."""
     rng = np.random.RandomState(9)
     mat = rng.rand(12, 3)
     rows = [(i, [float(x) for x in mat[i]]) for i in range(12)]
     df = spark.createDataFrame(rows, "id bigint, vec array<double>")
-    exp = _collect(K.knn_join_expr(df, df, 11, "euclidean", exclude_self=True))
+    exp = _oracle(mat, 11, "euclidean", exclude_self=True)
     got = _collect(K.knn_join_pandas(df, df, 11, "euclidean", exclude_self=True))
     assert got.keys() == exp.keys()
     for key in exp:

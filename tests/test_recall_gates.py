@@ -14,19 +14,22 @@ from kiez_spark.operators import lsh as L
 
 
 @pytest.fixture(scope="module")
-def clustered_df(spark):
+def clustered_pts():
     """300 points in 12 tight gaussian clusters (dim 16, seed 7) — the
     regime LSH bucketing is built for."""
     rng = np.random.RandomState(7)
     centers = rng.randn(12, 16) * 4.0
-    pts = centers[np.arange(300) % 12] + rng.randn(300, 16) * 0.15
-    rows = [(i, [float(x) for x in pts[i]]) for i in range(300)]
+    return centers[np.arange(300) % 12] + rng.randn(300, 16) * 0.15
+
+
+@pytest.fixture(scope="module")
+def clustered_df(spark, clustered_pts):
+    rows = [(i, [float(x) for x in p]) for i, p in enumerate(clustered_pts)]
     return spark.createDataFrame(rows, "id bigint, vec array<double>").cache()
 
 
-def test_lsh_recall_floor(spark, clustered_df):
-    exact = K.knn_join_expr(clustered_df, clustered_df, 5, "cosine",
-                            exclude_self=True)
+def test_lsh_recall_floor(spark, clustered_pts, clustered_df, oracle_nn_df):
+    exact = oracle_nn_df(np.arange(300), clustered_pts, 5, "cosine")
     approx = K.topk(
         L.lsh_candidates(clustered_df, clustered_df, "cosine",
                          n_tables=8, n_bits=8, seed=42, exclude_self=True),

@@ -42,7 +42,7 @@ def test_resolver_aliases():
     assert resolver.resolve_hubness(None) == "none"
     assert resolver.resolve_algorithm("Faiss") == "pandas"
     assert resolver.resolve_algorithm("NMSLIB") == "lsh"
-    assert resolver.resolve_algorithm("SklearnNearestNeighbors") == "expr"
+    assert resolver.resolve_algorithm("SklearnNearestNeighbors") == "pandas"
     with pytest.raises(ValueError):
         resolver.resolve_hubness("bogus")
     eng = resolver.make_engine("Faiss", "CSLS", n_candidates=8, k=3)
@@ -62,7 +62,8 @@ def test_blocked_tier_requires_block_col():
 
 def test_run_linkage_rejects_blocked_tier_before_spark(monkeypatch):
     """run_linkage has no blocking column, so --tier blocked is an
-    argparse error (exit 2) raised before any Spark session starts."""
+    argparse error (exit 2) raised before any Spark session starts; so
+    is the retired --tier expr."""
     from pyspark.sql import SparkSession
 
     import jobs.run_linkage as job
@@ -71,10 +72,11 @@ def test_run_linkage_rejects_blocked_tier_before_spark(monkeypatch):
         raise AssertionError("a Spark session was started")
 
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_spark)
-    with pytest.raises(SystemExit) as exc:
-        job.main(["--synthetic", "200", "--output", "unused",
-                  "--tier", "blocked"])
-    assert exc.value.code == 2
+    for tier in ("blocked", "expr"):
+        with pytest.raises(SystemExit) as exc:
+            job.main(["--synthetic", "200", "--output", "unused",
+                      "--tier", tier])
+        assert exc.value.code == 2, tier
 
 
 def test_config_from_json(tmp_path):
@@ -100,10 +102,10 @@ def test_minkowski_p(spark):
     df = spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [3.0, 4.0])], "id bigint, vec array<double>"
     )
-    nn = K.knn_join_expr(df, df, k=1, metric="minkowski_3", exclude_self=True)
+    nn = K.knn_join_pandas(df, df, k=1, metric="minkowski_3", exclude_self=True)
     got = nn.first().dist
     assert got == pytest.approx((27 + 64) ** (1 / 3), rel=1e-12)
-    nn1 = K.knn_join_expr(df, df, k=1, metric="manhattan", exclude_self=True)
+    nn1 = K.knn_join_pandas(df, df, k=1, metric="manhattan", exclude_self=True)
     assert nn1.first().dist == pytest.approx(7.0)
 
 

@@ -1,6 +1,7 @@
 """Synthetic generator, LSH tier recall, end-to-end linkage F1,
 checkpoint/resume, and salted blocking."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -24,6 +25,15 @@ def emb(spark, files):
     return synth.derive_embeddings(files, dim=32).cache()
 
 
+@pytest.fixture(scope="module")
+def exact_nn(emb, oracle_nn_df):
+    """Numpy-oracle exact top-k over ``emb``: k, metric -> table."""
+    rows = emb.select("id", "vec").orderBy("id").collect()
+    ids = np.array([r["id"] for r in rows])
+    mat = np.array([r["vec"] for r in rows], dtype=np.float64)
+    return lambda k, metric: oracle_nn_df(ids, mat, k, metric)
+
+
 def test_synth_deterministic_and_skewed(spark, files):
     again = synth.repos_files(spark, n=N, cluster_size=4, dup_fraction=0.6)
     assert files.exceptAll(again).count() == 0
@@ -37,9 +47,9 @@ def test_synth_deterministic_and_skewed(spark, files):
     assert gp.count() == (n_dup // 4) * 6  # C(4,2)=6 per cluster
 
 
-def test_embeddings_separate_clusters(spark, files, emb):
+def test_embeddings_separate_clusters(spark, files, exact_nn):
     """Intra-cluster distances must be far below inter-cluster ones."""
-    nn = K.knn_join_expr(emb, emb, k=3, metric="euclidean", exclude_self=True)
+    nn = exact_nn(3, "euclidean")
     gold = synth.gold_clusters(files)
     j = (
         nn.join(gold.withColumnRenamed("id", "query_id").withColumnRenamed("component", "qc"), "query_id")
@@ -50,12 +60,12 @@ def test_embeddings_separate_clusters(spark, files, emb):
     assert intra < 12.0 < inter
 
 
-def test_lsh_cosine_recall(spark, emb):
+def test_lsh_cosine_recall(spark, emb, exact_nn):
     """LSH must recover the *near* pairs (the ones that matter for
     linkage) — exact top-k truncated to truly-close distances. Far
     rank-4/5 pairs of singleton rows are unreachable for any LSH family
     by construction and are excluded from the recall denominator."""
-    exact = K.knn_join_expr(emb, emb, k=5, metric="cosine", exclude_self=True)
+    exact = exact_nn(5, "cosine")
     near = exact.filter(F.col("dist") < 0.1)
     approx_c = L.lsh_candidates(
         emb, emb, "cosine", n_tables=8, n_bits=12, exclude_self=True
@@ -65,8 +75,8 @@ def test_lsh_cosine_recall(spark, emb):
     assert rec > 0.95, f"cosine LSH near-pair recall too low: {rec}"
 
 
-def test_lsh_euclidean_recall(spark, emb):
-    exact = K.knn_join_expr(emb, emb, k=5, metric="euclidean", exclude_self=True)
+def test_lsh_euclidean_recall(spark, emb, exact_nn):
+    exact = exact_nn(5, "euclidean")
     near = exact.filter(F.col("dist") < 12.0)
     approx_c = L.lsh_candidates(
         emb, emb, "euclidean", n_tables=12, n_bits=6, bucket_width=32.0,
