@@ -11,11 +11,11 @@ documents(doc_id, text)
   -> stage "curated":    surviving docs + deterministic train/val/test
                          hash split
 
-Every stage checkpoints through StageCheckpointer (resume + per-stage
-rows/signature metrics + per-partition lineage); re-running with the
-same --checkpoint-dir picks up after the last complete stage. The JSON
-report prints per-stage row counts and the drop-reason histogram — the
-monitoring surface of a production curation run.
+Every stage runs through StageCheckpointer (with --checkpoint-dir:
+resume + per-stage rows/signature metrics + per-partition lineage). The
+JSON report prints the stages' row counts, the split counts observed on
+the output write and the drop-reason histogram — the monitoring surface
+of a production curation run.
 
 Usage (local smoke):
   spark-submit jobs/run_curation.py --synthetic 2000 \\
@@ -103,6 +103,73 @@ def _frozen_params(args):
     }
 
 
+def _split_weights(spec):
+    """--splits "train:0.9,val:0.05,test:0.05" -> {name: weight}."""
+    return {
+        name: float(w)
+        for name, w in (part.split(":") for part in spec.split(","))
+    }
+
+
+def _scrubbed(docs):
+    """Scrubbed docs plus the ingest content_sha: one row per doc."""
+    from pyspark.sql import functions as F
+
+    from kiez_spark.operators import curation as CUR
+
+    return CUR.scrub_text(docs).join(
+        docs.select("doc_id", F.sha2("text", 256).alias("content_sha")),
+        "doc_id",
+    )
+
+
+def _first_per_sha(kept):
+    """Exact dedup: the min-id doc of each identical-content group."""
+    from pyspark.sql import functions as F
+
+    first = kept.groupBy("content_sha").agg(F.min("doc_id").alias("doc_id"))
+    return kept.join(first.select("doc_id"), "doc_id")
+
+
+def _clean(exact):
+    """(doc_id, text, content_sha) with the scrubbed text."""
+    return exact.selectExpr("doc_id", "clean_text AS text", "content_sha")
+
+
+def _elect(assign, txt):
+    """Quality-ranked survivor decisions over an (id, component) table."""
+    from kiez_spark.operators import clustering as C
+    from kiez_spark.operators.text_analysis import quality_features
+
+    qual = quality_features(txt, id_col="doc_id", text_col="text")
+    return C.decisions_from_assignment(
+        assign.select("id", "component"),
+        quality=qual.select("doc_id", "quality"),
+    )
+
+
+def _split(exact, decisions, weights):
+    """The survivors of ``exact`` with their deterministic hash split."""
+    from kiez_spark.operators import curation as CUR
+
+    survivors = decisions.filter("is_survivor").selectExpr("id AS doc_id")
+    return CUR.hash_split(_clean(exact.join(survivors, "doc_id")), weights)
+
+
+def _write_curated(curated, weights, output_dir):
+    """Write ``curated`` hive-partitioned by split (training readers prune
+    to their split's directory) and return the non-zero per-split row
+    counts observed on the write."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    seen = Observation()
+    curated.observe(
+        seen, *(F.count(F.when(F.col("split") == n, 1)).alias(n) for n in weights)
+    ).write.mode("overwrite").partitionBy("split").parquet(output_dir)
+    return {n: c for n, c in seen.get.items() if c}
+
+
 def _write_state_delta(state_dir, ver, seen, assign, tombstones,
                        params_src, D, base=1):
     """Append version ``ver``'s delta: every distinct-content doc that
@@ -143,7 +210,7 @@ def _snapshot(spark, state_dir, ver, base):
     _, index, shas, assign = _read_state(spark, state_dir, ver, base)
     tombstones = spark.createDataFrame([], "doc_id bigint")
     return ({"index": index, "shas": shas, "assign": assign,
-             "tombstones": tombstones}, ("docs", shas))
+             "tombstones": tombstones}, ("docs", "shas"))
 
 
 def _run_increment(args, spark):
@@ -175,44 +242,44 @@ def _curate_increment(spark, docs, state_dir, output_dir):
     against the full-run count."""
     from pyspark.sql import functions as F
 
+    from kiez_spark.checkpoint import StageCheckpointer
     from kiez_spark.operators import clustering as C
     from kiez_spark.operators import curation as CUR
     from kiez_spark.operators import dedup as D
-    from kiez_spark.operators.text_analysis import quality_features
 
     ver, base = state.live_version(state_dir, "--increment")
     params, corpus_index, corpus_shas, corpus_assign = _read_state(
         spark, state_dir, ver, base
     )
 
+    # in-memory stages: each is materialised once, counted by that pass
+    stages = StageCheckpointer(spark, None)
+    scrubbed = stages.stage("scrubbed", lambda: _scrubbed(docs))
+    # one scrubbed row per doc, so its count is the batch size
     report = {"mode": "increment", "base_version": ver,
-              "batch_docs": docs.count()}
-
-    scrubbed = CUR.scrub_text(docs).join(
-        docs.select("doc_id", F.sha2("text", 256).alias("content_sha")),
-        "doc_id",
-    ).localCheckpoint(eager=False)
+              "batch_docs": stages.rows["scrubbed"]}
     clean = scrubbed.select("doc_id", F.col("clean_text").alias("text"))
     quality = CUR.quality_filter(
         clean,
         min_tokens=params["min_tokens"],
         min_uniq_frac=params["min_uniq_frac"],
     )
-    kept = scrubbed.join(quality.filter("keep").select("doc_id"), "doc_id")
-    report["after_quality"] = kept.count()
+    kept = stages.stage(
+        "kept",
+        lambda: scrubbed.join(quality.filter("keep").select("doc_id"), "doc_id"),
+    )
+    report["after_quality"] = stages.rows["kept"]
 
     # exact dedup: min-id survivor within the batch, then drop anything
     # whose content already exists in the corpus (sha anti-join — one
     # broadcast-or-shuffle join keyed on the hash, never on text)
-    batch_first = (
-        kept.groupBy("content_sha").agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
+    exact = stages.stage(
+        "exact",
+        lambda: _first_per_sha(kept).join(
+            corpus_shas.select("content_sha"), "content_sha", "left_anti"
+        ),
     )
-    exact = kept.join(batch_first, "doc_id")
-    exact = exact.join(
-        corpus_shas.select("content_sha"), "content_sha", "left_anti"
-    ).localCheckpoint(eager=False)
-    report["after_exact_dedup"] = exact.count()
+    report["after_exact_dedup"] = stages.rows["exact"]
 
     # near-dup vs corpus: banded equi-join of the batch signatures
     # against the STORED index (batch x corpus only) — frozen
@@ -264,11 +331,11 @@ def _curate_increment(spark, docs, state_dir, output_dir):
         .localCheckpoint(eager=False)
     )
     touched = comp_bridge.select("component").distinct()
-    fresh_assign = assign.join(
-        touched, "component", "left_anti"
-    ).localCheckpoint(eager=False)
+    fresh_assign = stages.stage(
+        "fresh", lambda: assign.join(touched, "component", "left_anti")
+    )
     report["dropped_neardup_vs_corpus"] = (
-        report["after_exact_dedup"] - fresh_assign.count()
+        report["after_exact_dedup"] - stages.rows["fresh"]
     )
 
     # merge events: a batch component bridging >= 2 shipped survivors is
@@ -297,10 +364,13 @@ def _curate_increment(spark, docs, state_dir, output_dir):
     merge_canon = merge_cc.select(
         F.col("id").alias("_sid"), F.col("component").alias("_canon")
     )
-    tombstones = merge_canon.filter("_sid != _canon").select(
-        F.col("_sid").alias("doc_id")
-    ).localCheckpoint(eager=False)
-    report["merged_survivors"] = tombstones.count()
+    tombstones = stages.stage(
+        "tombstones",
+        lambda: merge_canon.filter("_sid != _canon").select(
+            F.col("_sid").alias("doc_id")
+        ),
+    )
+    report["merged_survivors"] = stages.rows["tombstones"]
     # corpus docs whose survivor was tombstoned re-point to the canonical
     repointed = (
         corpus_assign.join(
@@ -321,36 +391,16 @@ def _curate_increment(spark, docs, state_dir, output_dir):
         F.col("id").alias("doc_id"), "survivor_id"
     )
 
-    qual = quality_features(txt, id_col="doc_id", text_col="text")
-    decisions = C.decisions_from_assignment(
-        fresh_assign.select(F.col("id"), F.col("component")),
-        quality=qual.select("doc_id", "quality"),
-    ).localCheckpoint(eager=False)
+    decisions = _elect(fresh_assign, txt).localCheckpoint(eager=False)
     report["neardup_groups_gt1"] = (
         decisions.groupBy("component").count().filter("count > 1").count()
     )
-    survivors = decisions.filter("is_survivor").select(
-        F.col("id").alias("doc_id")
+    weights = _split_weights(params["splits"])
+    split_counts = _write_curated(
+        _split(exact, decisions, weights), weights, output_dir
     )
-
-    weights = {}
-    for part in params["splits"].split(","):
-        name, w = part.split(":")
-        weights[name] = float(w)
-    curated = CUR.hash_split(
-        exact.join(survivors, "doc_id").select(
-            "doc_id", F.col("clean_text").alias("text"), "content_sha"
-        ),
-        weights,
-    ).localCheckpoint(eager=False)
-    curated.write.mode("overwrite").partitionBy("split").parquet(output_dir)
-    report["curated_docs"] = curated.count()
-    report["split_counts"] = {
-        r.split: r.cnt
-        for r in curated.groupBy("split").agg(
-            F.count(F.lit(1)).alias("cnt")
-        ).collect()
-    }
+    report["curated_docs"] = sum(split_counts.values())
+    report["split_counts"] = split_counts
 
     new_assign = (
         decisions.select(
@@ -360,15 +410,7 @@ def _curate_increment(spark, docs, state_dir, output_dir):
         .unionByName(repointed)
     )
     _write_state_delta(
-        state_dir,
-        ver + 1,
-        exact.select(
-            "doc_id", F.col("clean_text").alias("text"), "content_sha"
-        ),
-        new_assign,
-        tombstones,
-        params,
-        D,
+        state_dir, ver + 1, _clean(exact), new_assign, tombstones, params, D,
         base=base,
     )
     report["state_version"] = ver + 1
@@ -429,7 +471,6 @@ def _run_batch(args, ap, spark):
     from kiez_spark.operators import clustering as C
     from kiez_spark.operators import curation as CUR
     from kiez_spark.operators import dedup as D
-    from kiez_spark.operators.text_analysis import quality_features
 
     if args.synthetic:
         from kiez_spark import synth
@@ -445,30 +486,10 @@ def _run_batch(args, ap, spark):
     else:
         ap.error("one of --input / --synthetic is required")
 
-    ckpt = (
-        StageCheckpointer(spark, args.checkpoint_dir)
-        if args.checkpoint_dir
-        else None
-    )
-
-    def run_stage(name, build):
-        if ckpt:
-            return ckpt.stage(name, build)
-        # un-checkpointed runs: each stage feeds several report actions
-        # (counts, histograms, the final write) — cut the lineage once,
-        # lazily, so the scrub/dedup plans run one time instead of per
-        # action (the same guard link_files applies to its embeddings)
-        return build().localCheckpoint(eager=False)
-
-    report: dict = {"input_docs": docs.count()}
-
-    scrubbed = run_stage(
-        "scrubbed",
-        lambda: CUR.scrub_text(docs).join(
-            docs.select("doc_id", F.sha2("text", 256).alias("content_sha")),
-            "doc_id",
-        ),
-    )
+    ckpt = StageCheckpointer(spark, args.checkpoint_dir)
+    scrubbed = ckpt.stage("scrubbed", lambda: _scrubbed(docs))
+    # one scrubbed row per doc, so its count is the input size
+    report: dict = {"input_docs": ckpt.rows["scrubbed"]}
 
     def build_quality():
         clean = scrubbed.select("doc_id", F.col("clean_text").alias("text"))
@@ -477,7 +498,7 @@ def _run_batch(args, ap, spark):
             min_uniq_frac=args.min_uniq_frac,
         )
 
-    quality = run_stage("quality", build_quality)
+    quality = ckpt.stage("quality", build_quality)
     report["drop_reasons"] = {
         r.reason: r.cnt
         for r in quality.groupBy("reason").agg(
@@ -487,19 +508,11 @@ def _run_batch(args, ap, spark):
     kept = scrubbed.join(
         quality.filter("keep").select("doc_id"), "doc_id"
     )
-    report["after_quality"] = kept.count()
+    # keep == (reason == "ok")
+    report["after_quality"] = report["drop_reasons"].get("ok", 0)
 
-    def build_exact():
-        # min-id survivor per identical-content group; uniques pass thru
-        w_first = (
-            kept.groupBy("content_sha")
-            .agg(F.min("doc_id").alias("doc_id"))
-            .select("doc_id")
-        )
-        return kept.join(w_first, "doc_id")
-
-    exact = run_stage("exact", build_exact)
-    report["after_exact_dedup"] = exact.count()
+    exact = ckpt.stage("exact", lambda: _first_per_sha(kept))
+    report["after_exact_dedup"] = ckpt.rows["exact"]
 
     def build_neardup():
         txt = exact.select("doc_id", F.col("clean_text").alias("text"))
@@ -512,48 +525,23 @@ def _run_batch(args, ap, spark):
             shingle_n=_SHINGLE_N, threshold=args.jaccard_threshold,
             seed=_MINHASH_SEED,
         ).select("src_id", "tgt_id")
-        assign = C.connected_components(
+        return _elect(C.connected_components(
             pairs, nodes=exact.select("doc_id"), pair_cols=("src_id", "tgt_id")
-        )
-        qual = quality_features(txt, id_col="doc_id", text_col="text")
-        decisions = C.decisions_from_assignment(
-            assign.select(F.col("id"), F.col("component")),
-            quality=qual.select("doc_id", "quality"),
-        )
-        return decisions
+        ), txt)
 
-    decisions = run_stage("neardup", build_neardup)
+    decisions = ckpt.stage("neardup", build_neardup)
     report["neardup_groups_gt1"] = (
         decisions.groupBy("component").count().filter("count > 1").count()
     )
-
-    def build_curated():
-        survivors = decisions.filter("is_survivor").select(
-            F.col("id").alias("doc_id")
-        )
-        weights = {}
-        for part in args.splits.split(","):
-            name, w = part.split(":")
-            weights[name] = float(w)
-        return CUR.hash_split(
-            exact.join(survivors, "doc_id").select(
-                "doc_id", F.col("clean_text").alias("text"), "content_sha"
-            ),
-            weights,
-        )
-
-    curated = run_stage("curated", build_curated)
-    # hive-partition by split: downstream training readers scan only
-    # their split's directory (partition pruning at the file listing)
-    curated.write.mode("overwrite").partitionBy("split").parquet(args.output)
-    report["curated_docs"] = curated.count()
+    weights = _split_weights(args.splits)
+    curated = ckpt.stage("curated", lambda: _split(exact, decisions, weights))
+    split_counts = _write_curated(curated, weights, args.output)
+    report["curated_docs"] = sum(split_counts.values())
     if args.state_dir:
         _write_state_delta(
             args.state_dir,
             1,
-            exact.select(
-                "doc_id", F.col("clean_text").alias("text"), "content_sha"
-            ),
+            _clean(exact),
             decisions.select(
                 F.col("id").alias("doc_id"),
                 F.col("keep_id").alias("survivor_id"),
@@ -563,13 +551,8 @@ def _run_batch(args, ap, spark):
             D,
         )
         report["state_version"] = 1
-    report["split_counts"] = {
-        r.split: r.cnt
-        for r in curated.groupBy("split").agg(
-            F.count(F.lit(1)).alias("cnt")
-        ).collect()
-    }
-    if ckpt:
+    report["split_counts"] = split_counts
+    if args.checkpoint_dir:
         report["lineage_consistent"] = ckpt.lineage_consistent()
     print(json.dumps(report))
     return 0

@@ -21,13 +21,13 @@ files(row_id, content)
   -> stage "clusters": matched pairs -> connected components (driver
                        finish, star rounds above _LOCAL_EDGES) ->
                        survivor election
-  -> optional --evaluate-gold: pairwise precision/recall/F1 vs the
-                       planted clusters + a per-row content-sha256
-                       invariant check across the pipeline.
+  -> optional --evaluate-gold: pairwise precision/recall/F1 and B-cubed
+                       vs the planted clusters.
 
-Every stage checkpoints through StageCheckpointer (resume + per-stage
-rows/signature metrics); re-running with the same --checkpoint-dir picks
-up after the last complete stage.
+One aggregate over the docs counts them. Every stage runs through
+StageCheckpointer (with --checkpoint-dir: resume + per-stage
+rows/signature metrics); the report's counts are the stages' row counts
+and metrics observed on the output write.
 
 INCREMENT MODE (the 10^12-file production loop — never re-cluster from
 scratch): a base run with --state-dir persists the blocking index (raw
@@ -162,7 +162,7 @@ def _snapshot(spark, state_dir, ver, base):
     _, deltas = state.read(spark, state_dir, ver, base)
     raw = deltas("posting_raw").drop("ver")
     return ({"docs": docs, "posting_raw": raw, "stats": stats,
-             "assign": assign}, ("docs", docs))
+             "assign": assign}, ("docs", "docs"))
 
 
 def _load_docs(args, spark, need_gold):
@@ -184,7 +184,7 @@ def _load_docs(args, spark, need_gold):
     else:
         raise SystemExit("one of --input / --synthetic is required")
     # the per-row invariant the north rule demands carried through every
-    # stage: sha256(content) at ingest, re-checked after clustering
+    # stage: sha256(content) at ingest
     return docs.withColumn("content_sha", F.sha2("text", 256)), gold, gold_assign
 
 
@@ -206,6 +206,7 @@ def _er_increment(spark, batch, state_dir, output_dir):
     the per-key df stats (the cap contract stays exact)."""
     from pyspark.sql import functions as F
 
+    from kiez_spark.checkpoint import materialise, sha_violations
     from kiez_spark.operators import clustering as C
     from kiez_spark.operators import er as ER
 
@@ -214,55 +215,40 @@ def _er_increment(spark, batch, state_dir, output_dir):
         spark, state_dir, ver, vbase
     )
 
-    report = {"mode": "increment", "base_version": ver,
-              "batch_docs": batch.count()}
-    batch = batch.join(
-        corpus_docs.select("doc_id"), "doc_id", "left_anti"
-    ).localCheckpoint(eager=False)
-    report["batch_docs_new"] = batch.count()
+    batch, counts = state.drop_known(batch, "doc_id", corpus_docs.select("doc_id"))
+    report = {"mode": "increment", "base_version": ver, **counts}
 
     inc = ER.incremental_blocking_pairs(
         batch, _keys_expr(), posting, stats,
         df_cap=params["df_cap"], min_cbs=params["min_cbs"],
     )
-    docs_all = corpus_docs.unionByName(batch).localCheckpoint(eager=False)
+    # per-row sha invariant across corpus + batch: the stored shas
+    # against their stored texts, checked by the pass that materialises
+    # the comparator's doc table
+    docs_all, sha = materialise(
+        corpus_docs.unionByName(batch), sha_violations()
+    )
     compared = _agreements(docs_all, inc, params["lev_bound"])
-    report["candidate_pairs"] = compared.count()
 
     fs_fields = {f: (params["m"][f], params["u"][f]) for f in params["fields"]}
-    matched = (
-        ER.fs_scores(compared, fs_fields)
-        .filter(F.col("weight_micro") > params["threshold_micro"])
-        .select("a_id", "b_id")
+    is_match = F.col("weight_micro") > params["threshold_micro"]
+    scored, counts = materialise(
+        ER.fs_scores(compared, fs_fields).select("a_id", "b_id", is_match.alias("m")),
+        F.count(F.lit(1)).alias("candidate_pairs"),
+        F.count(F.when(F.col("m"), 1)).alias("matched_pairs"),
     )
-    report["matched_pairs"] = matched.count()
+    report.update(counts)
+    matched = scored.filter("m").select("a_id", "b_id")
 
     merged, changed = C.merge_components_with_delta(
         assign.select("id", "component"), matched,
         batch_nodes=batch.select("doc_id"),
     )
-    merged = merged.localCheckpoint()
+    merged, counts = materialise(merged, C.n_components().alias("clusters"))
     decisions = C.decisions_from_assignment(merged)
-    report.update(decisions.agg(
-        F.countDistinct("component").alias("clusters"),
-        F.count(F.when(F.col("is_survivor"), 1)).alias("survivors"),
-    ).first().asDict())
-
-    # per-row sha invariant across corpus + batch after the merge
-    report["sha_violations"] = (
-        merged.join(
-            docs_all.select(F.col("doc_id").alias("id"), "content_sha"), "id"
-        )
-        .join(
-            docs_all.select(
-                F.col("doc_id").alias("id"),
-                F.sha2("text", 256).alias("sha_recheck"),
-            ),
-            "id",
-        )
-        .filter(F.col("content_sha") != F.col("sha_recheck"))
-        .count()
-    )
+    # min-id decisions keep one survivor per cluster
+    report["clusters"] = report["survivors"] = counts["clusters"]
+    report.update(sha)
 
     # delta state write: O(batch) rows, never the corpus — the capped
     # posting table is reconstructed at read from (raw union, summed df)
@@ -305,10 +291,10 @@ def main(argv=None) -> int:
                     help="random-pair offsets per row for u estimation")
     args = state.parse_args(ap, argv)
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
     from pyspark.sql import functions as F
 
-    from kiez_spark.checkpoint import StageCheckpointer
+    from kiez_spark.checkpoint import StageCheckpointer, sha_violations
     from kiez_spark.operators import clustering as C
     from kiez_spark.operators import er as ER
     from kiez_spark.operators import evaluate as EV
@@ -334,18 +320,14 @@ def main(argv=None) -> int:
         args, spark, need_gold=args.evaluate_gold
     )
 
-    ckpt = (
-        StageCheckpointer(spark, args.checkpoint_dir)
-        if args.checkpoint_dir
-        else None
-    )
-
-    def run_stage(name, build):
-        if ckpt:
-            return ckpt.stage(name, build)
-        return build().localCheckpoint(eager=False)
-
-    report: dict = {"input_docs": docs.count()}
+    # one aggregate over the ingest scan. In a batch run content_sha is
+    # sha2(text) of this same scan, so sha_violations reads 0 by
+    # construction; the increment checks stored shas against stored texts
+    ingest = docs.agg(
+        F.count(F.lit(1)).alias("input_docs"), sha_violations()
+    ).first()
+    report: dict = {"input_docs": ingest["input_docs"]}
+    ckpt = StageCheckpointer(spark, args.checkpoint_dir)
 
     def build_blocked():
         return ER.metablocking_pairs(
@@ -354,10 +336,10 @@ def main(argv=None) -> int:
             top_n=args.top_n if args.top_n > 0 else None,
         )
 
-    blocked = run_stage("blocked", build_blocked)
-    report["candidate_pairs"] = blocked.count()
+    blocked = ckpt.stage("blocked", build_blocked)
+    report["candidate_pairs"] = ckpt.rows["blocked"]
 
-    compared = run_stage(
+    compared = ckpt.stage(
         "compared", lambda: _agreements(docs, blocked, args.lev_bound, ("cbs",))
     )
 
@@ -365,8 +347,8 @@ def main(argv=None) -> int:
     # meta-blocking is high-precision, so the candidate set may hold no
     # non-match class at all and free two-class EM would be degenerate
     # (the Splink fixed-u protocol; see er.fs_em docstring).
-    # n_rows threaded from the already-computed input count so the
-    # u-estimation pairing adds no full-corpus scalar scan of its own
+    # n_rows threaded from the ingest count so the u-estimation pairing
+    # adds no full-corpus scalar scan of its own
     u_probs = ER.fs_u_probabilities(
         _agreements(
             docs,
@@ -404,8 +386,8 @@ def main(argv=None) -> int:
             .select("a_id", "b_id", "weight_micro", "a_sha", "b_sha")
         )
 
-    matched = run_stage("matched", build_matched)
-    report["matched_pairs"] = matched.count()
+    matched = ckpt.stage("matched", build_matched)
+    report["matched_pairs"] = ckpt.rows["matched"]
     report["fs_threshold_micro"] = threshold_micro
 
     def build_clusters():
@@ -415,27 +397,14 @@ def main(argv=None) -> int:
             pair_cols=("a_id", "b_id"),
         )
 
-    decisions = run_stage("clusters", build_clusters)
-    report.update(decisions.agg(
-        F.countDistinct("component").alias("clusters"),
-        F.count(F.when(F.col("is_survivor"), 1)).alias("survivors"),
-    ).first().asDict())
-
-    # per-row sha invariant: every id's sha after the pipeline equals the
-    # ingest sha (joined back through the decisions table)
-    violations = (
-        decisions.join(docs.select(F.col("doc_id").alias("id"), "content_sha"), "id")
-        .join(
-            docs.select(
-                F.col("doc_id").alias("id"),
-                F.sha2("text", 256).alias("sha_recheck"),
-            ),
-            "id",
-        )
-        .filter(F.col("content_sha") != F.col("sha_recheck"))
-        .count()
-    )
-    report["sha_violations"] = violations
+    decisions = ckpt.stage("clusters", build_clusters)
+    summary = Observation()
+    decisions.observe(
+        summary, C.n_components().alias("clusters")
+    ).write.mode("overwrite").parquet(args.output)
+    # min-id decisions keep one survivor per cluster
+    report["clusters"] = report["survivors"] = summary.get["clusters"]
+    report["sha_violations"] = ingest["sha_violations"]
 
     if gold is not None:
         pred = EV.clusters_to_pairs(decisions.select("id", "component"))
@@ -458,8 +427,6 @@ def main(argv=None) -> int:
             "recall": round(b3.b3_recall, 6),
             "f1": round(b3.b3_f1, 6),
         }
-
-    decisions.write.mode("overwrite").parquet(args.output)
 
     if args.state_dir:
         raw = ER.blocking_postings_raw(docs, _keys_expr())

@@ -110,40 +110,37 @@ def _read_link_state(spark, state_dir, ver, base=1):
 def _snapshot(spark, state_dir, ver, base):
     """--compact-state tables: the live deltas, assign latest-wins."""
     _, emb, sig, assign = _read_link_state(spark, state_dir, ver, base)
-    return {"emb": emb, "sig": sig, "assign": assign}, ("rows", emb)
+    return {"emb": emb, "sig": sig, "assign": assign}, ("rows", "emb")
 
 
 def _derive_emb(files, dim):
-    from kiez_spark.synth import derive_embeddings
-
-    return derive_embeddings(files, dim=dim)
-
-
-def _sha_violations(files, emb):
-    """Cross-path invariant: the embedding kernel's hashlib sha256 per
-    row must equal the JVM's sha2(content) — a real python-vs-JVM
-    content integrity check, not a tautology."""
+    """(embeddings as an eager localCheckpoint, {"sha_violations": n}):
+    the same pass checks the kernel's hashlib sha256 per row against the
+    JVM's sha2(content), a real python-vs-JVM integrity check."""
     from pyspark.sql import functions as F
 
-    return (
-        files.select(
-            F.col("row_id").alias("id"), F.sha2("content", 256).alias("_jvm")
-        )
-        .join(emb.select("id", "content_sha"), "id")
-        .filter(F.col("_jvm") != F.col("content_sha"))
-        .count()
+    from kiez_spark.checkpoint import materialise, sha_violations
+    from kiez_spark.synth import derive_embeddings
+
+    emb, sha = materialise(
+        derive_embeddings(files, dim=dim).join(
+            files.select(F.col("row_id").alias("id"), "content"), "id"
+        ),
+        sha_violations("content"),
     )
+    return emb.drop("content"), sha
 
 
 def _run_state_base(args, spark, files):
     from pyspark.sql import functions as F
 
+    from kiez_spark.checkpoint import materialise
     from kiez_spark.operators import clustering as C
     from kiez_spark.operators import lsh as L
 
     if args.max_dist is None:
         raise SystemExit("--state-dir requires --max-dist (the pair gate)")
-    emb = _derive_emb(files, args.dim).localCheckpoint()
+    emb, sha = _derive_emb(files, args.dim)
     is_cos = args.metric in ("cosine", "cos")
     bw = args.lsh_bucket_width
     if bw is None and not is_cos:
@@ -163,15 +160,15 @@ def _run_state_base(args, spark, files):
         seed=params["seed"],
     ).localCheckpoint()
     pairs = _lsh_gated_pairs(sig, sig, emb, emb, params, exclude_self=True)
-    assign = C.connected_components(
-        pairs, nodes=emb.select("id"), pair_cols=("a_id", "b_id")
-    ).localCheckpoint()
-    decisions = C.decisions_from_assignment(assign)
     # every node has one assignment row, so rows is the node count
-    report = {"mode": "state_base", **assign.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.countDistinct("component").alias("components"),
-    ).first().asDict(), "sha_violations": _sha_violations(files, emb)}
+    assign, summary = materialise(
+        C.connected_components(
+            pairs, nodes=emb.select("id"), pair_cols=("a_id", "b_id")
+        ),
+        F.count(F.lit(1)).alias("rows"), C.n_components().alias("components"),
+    )
+    decisions = C.decisions_from_assignment(assign)
+    report = {"mode": "state_base", **summary, **sha}
     _write_link_state(
         args.state_dir, 1, emb.select("id", "vec", "content_sha"), sig,
         assign.select("id", "component"), params,
@@ -189,20 +186,16 @@ def _linkage_increment(spark, files_batch, state_dir, output_dir):
     replay is a no-op (same argument as jobs/run_er.py)."""
     from pyspark.sql import functions as F
 
+    from kiez_spark.checkpoint import materialise
     from kiez_spark.operators import clustering as C
     from kiez_spark.operators import lsh as L
 
     ver, base = state.live_version(state_dir, "--increment")
     params, emb_c, sig_c, assign = _read_link_state(spark, state_dir, ver, base)
 
-    report = {"mode": "increment", "base_version": ver,
-              "batch_docs": files_batch.count()}
-    files_batch = files_batch.join(
-        emb_c.select(F.col("id").alias("row_id")), "row_id", "left_anti"
-    ).localCheckpoint()
-    report["batch_docs_new"] = files_batch.count()
-
-    emb_b = _derive_emb(files_batch, params["dim"]).localCheckpoint()
+    files_batch, counts = state.drop_known(files_batch, "row_id", emb_c.select("id"))
+    report = {"mode": "increment", "base_version": ver, **counts}
+    emb_b, sha = _derive_emb(files_batch, params["dim"])
     sig_b = L.signatures(
         emb_b, params["metric"], n_tables=params["n_tables"],
         n_bits=params["n_bits"], bucket_width=params["bucket_width"],
@@ -210,20 +203,21 @@ def _linkage_increment(spark, files_batch, state_dir, output_dir):
     ).localCheckpoint()
     cross = _lsh_gated_pairs(sig_b, sig_c, emb_b, emb_c, params, False)
     intra = _lsh_gated_pairs(sig_b, sig_b, emb_b, emb_b, params, True)
-    matched = cross.unionByName(intra).distinct()
-    report["matched_pairs"] = matched.count()
+    matched, counts = materialise(
+        cross.unionByName(intra).distinct(),
+        F.count(F.lit(1)).alias("matched_pairs"),
+    )
+    report.update(counts)
 
     merged, changed = C.merge_components_with_delta(
         assign.select("id", "component"), matched,
         batch_nodes=emb_b.select(F.col("id").alias("doc_id")),
     )
-    merged = merged.localCheckpoint()
+    merged, counts = materialise(merged, C.n_components().alias("clusters"))
     decisions = C.decisions_from_assignment(merged)
-    report.update(decisions.agg(
-        F.countDistinct("component").alias("clusters"),
-        F.count(F.when(F.col("is_survivor"), 1)).alias("survivors"),
-    ).first().asDict())
-    report["sha_violations"] = _sha_violations(files_batch, emb_b)
+    # min-id decisions keep one survivor per cluster
+    report["clusters"] = report["survivors"] = counts["clusters"]
+    report.update(sha)
 
     _write_link_state(
         state_dir, ver + 1, emb_b.select("id", "vec", "content_sha"),
@@ -293,11 +287,13 @@ def main(argv=None) -> int:
 
 
 def _run(args, ap, spark):
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from kiez_spark import synth
     from kiez_spark.linkage import link_files
     from kiez_spark.operators import evaluate as E
+    from kiez_spark.operators import clustering as C
 
     if args.stream_input:
         return state.run_stream(
@@ -347,8 +343,8 @@ def _run(args, ap, spark):
             checkpoint_dir=args.checkpoint_dir,
         )
         ares.matches.write.mode("overwrite").parquet(args.output)
-        report = {"matches": ares.matches.count()}
-        if args.checkpoint_dir and ares.checkpointer:
+        report = {"matches": ares.checkpointer.rows["matches"]}
+        if args.checkpoint_dir:
             # source and target are distinct corpora: enforce the sha
             # invariant within each space, not across them. forward
             # carries the src shas, backward the tgt shas (align_files
@@ -376,24 +372,23 @@ def _run(args, ap, spark):
         hubness=args.hubness, metric=args.metric, tier=args.tier,
         max_dist=args.max_dist, checkpoint_dir=args.checkpoint_dir,
     )
-    res.clusters.write.mode("overwrite").parquet(args.output)
-
-    report = res.clusters.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.countDistinct("component").alias("components"),
-    ).first().asDict()
+    summary = Observation()
+    res.clusters.observe(
+        summary, C.n_components().alias("components")
+    ).write.mode("overwrite").parquet(args.output)
+    report = {"rows": res.checkpointer.rows["clusters"], **summary.get}
     if args.write_decisions:
-        from kiez_spark.operators.clustering import decisions_from_assignment
         from kiez_spark.operators.text_analysis import quality_features
 
         qual = quality_features(files, id_col="row_id", text_col="content")
-        decisions = decisions_from_assignment(
+        decisions = C.decisions_from_assignment(
             res.clusters.select("id", "component"),
             quality=qual.select("doc_id", "quality"),
         )
         decisions.write.mode("overwrite").parquet(args.write_decisions)
-        report["survivors"] = decisions.filter("is_survivor").count()
-    if res.checkpointer:
+        # the election keeps one survivor per component
+        report["survivors"] = report["components"]
+    if args.checkpoint_dir:
         report["sha_invariant_ok"] = res.checkpointer.sha_invariant_ok()
     if args.evaluate_gold and args.synthetic:
         f1 = E.pairwise_f1(

@@ -1,15 +1,18 @@
-"""Per-stage checkpointing with lineage + metrics — resume-from-checkpoint.
-
-north_rule: "each stage checkpoints per-partition lineage and metrics to
-enable resume-from-checkpoint". A stage costs its parquet write plus one
+"""The jobs' one stage runner: each stage is materialised once and that
+pass counts its rows (``rows[name]``). Without a directory the stage is
+an eager ``localCheckpoint()`` (``materialise``; an observation under a
+lazy one reads 0 after the first action). With one, north_rule: "each
+stage checkpoints per-partition lineage and metrics to enable
+resume-from-checkpoint" — a stage costs its parquet write plus one
 aggregate over the re-read files; every count and signature comes from
-one of the two.
+one of the two:
 
 - ``<dir>/<stage>``: the stage output. ``stage()`` short-circuits when the
   directory already holds a _SUCCESS marker: it is read back instead of
   recomputed, so a killed run resumes from the last complete stage;
   outputs are byte-stable because every operator in this engine is
-  deterministic (tie-breaks included).
+  deterministic (tie-breaks included). A resumed stage's ``rows`` come
+  from its parquet footers.
 - ``<dir>/_metrics``: one row per written stage (``METRICS_SCHEMA``).
   ``rows`` and ``sig`` (xor of xxhash64 row hashes over all columns, an
   order-insensitive content signature) are observed on the write itself
@@ -41,8 +44,9 @@ import uuid
 from typing import Callable
 
 import pyarrow as pa
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 METRICS_SCHEMA = (
@@ -113,11 +117,31 @@ def _read_side(out: DataFrame) -> tuple[list[tuple[int, int, int]], int]:
     return [tuple(r) for r in parts], shas.get["sha_sig"]
 
 
+def sha_violations(text: str = "text", sha: str = "content_sha") -> Column:
+    """The jobs' one per-row sha check, as an observable aggregate: rows
+    whose ``sha`` is not the JVM's sha256 of ``text``, null-safe. ``sha``
+    may come from another path (the embedding kernel's hashlib) or from
+    stored state."""
+    return F.count(
+        F.when(~F.sha2(F.col(text), 256).eqNullSafe(F.col(sha)), 1)
+    ).alias("sha_violations")
+
+
+def materialise(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    """``df`` as an eager localCheckpoint, and the aggregates ``metrics``
+    observed by that same pass."""
+    seen = Observation()
+    out = df.observe(seen, *metrics).localCheckpoint()
+    return out, seen.get
+
+
 class StageCheckpointer:
-    def __init__(self, spark: SparkSession, base_dir: str):
+    def __init__(self, spark: SparkSession, base_dir: str | None):
         self.spark = spark
         self.base_dir = base_dir
-        os.makedirs(base_dir, exist_ok=True)
+        self.rows: dict[str, int] = {}
+        if base_dir:
+            os.makedirs(base_dir, exist_ok=True)
 
     def _path(self, stage: str) -> str:
         return os.path.join(self.base_dir, stage)
@@ -126,9 +150,16 @@ class StageCheckpointer:
         return os.path.exists(os.path.join(self._path(stage), "_SUCCESS"))
 
     def stage(self, name: str, build: Callable[[], DataFrame]) -> DataFrame:
-        """Run-or-resume one stage. ``build`` is only invoked on a miss."""
+        """Run-or-resume one stage. ``build`` is only invoked on a miss;
+        ``rows[name]`` is set either way."""
+        if not self.base_dir:
+            out, seen = materialise(build(), F.count(F.lit(1)).alias("rows"))
+            self.rows[name] = seen["rows"]
+            return out
         path = self._path(name)
         if self.is_complete(name):
+            # the parquet footers hold the count: no Spark job
+            self.rows[name] = pads.dataset(path, format="parquet").count_rows()
             return self.spark.read.parquet(path)
         t0 = time.time()
         df = build()
@@ -140,6 +171,7 @@ class StageCheckpointer:
         out = self.spark.read.schema(df.schema).parquet(path)
         parts, sha_sig = _read_side(out)
         totals = written.get
+        self.rows[name] = totals["rows"]
         self._append(
             "_metrics",
             METRICS_SCHEMA,

@@ -10,9 +10,10 @@ repos_files(repo, path, commit, lang, content)
                           edges fit, star rounds above) over the embeddings
                           as node universe; singletons included, sha kept
 
-Every stage checkpoints through StageCheckpointer (resume + lineage +
-metrics + sha invariant, see checkpoint.py). Pass checkpoint_dir=None to
-run purely in-memory (tests).
+Every stage runs once through StageCheckpointer (checkpoint.py): a
+parquet checkpoint with checkpoint_dir (resume + lineage + metrics + sha
+invariant), an eager localCheckpoint without. The hubness engine's cache
+is released once the stage that read it is materialised.
 
 Matching rule: a candidate pair is a match when its *raw* distance is
 <= max_dist AND it survived the hubness-reduced top-k (rank <= k). The
@@ -29,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kiez_spark.checkpoint import StageCheckpointer
+from kiez_spark.functions.vectors import distance_expr
 from kiez_spark.operators import clustering as C
 from kiez_spark.pipeline import HubnessKnn, PipelineConfig
 from kiez_spark.synth import derive_embeddings
@@ -40,7 +42,7 @@ class LinkageResult:
     candidates: DataFrame
     pairs: DataFrame
     clusters: DataFrame
-    checkpointer: StageCheckpointer | None
+    checkpointer: StageCheckpointer
 
 
 def link_files(
@@ -64,39 +66,26 @@ def link_files(
     lsh_bits: int = 6,
     lsh_bucket_width: float = 32.0,
 ) -> LinkageResult:
-    ckpt = StageCheckpointer(spark, checkpoint_dir) if checkpoint_dir else None
-
-    def run_stage(name, build):
-        return ckpt.stage(name, build) if ckpt else build()
-
-    emb = run_stage("embeddings", lambda: derive_embeddings(files, dim=dim))
-    if ckpt is None:
-        # un-checkpointed runs: the embedding table is consumed by three
-        # downstream plans (fit, query/cand vector joins, the CC node
-        # universe) — cut the lineage once, lazily,
-        # so the kernel runs one time instead of per consumer. With a
-        # checkpointer the parquet stage already provides this.
-        emb = emb.localCheckpoint(eager=False)
+    ckpt = StageCheckpointer(spark, checkpoint_dir)
+    emb = ckpt.stage("embeddings", lambda: derive_embeddings(files, dim=dim))
+    eng = HubnessKnn(
+        PipelineConfig(
+            n_candidates=n_candidates,
+            k=k,
+            metric=metric,
+            hubness=hubness,
+            tier=tier,
+            lsh_tables=lsh_tables,
+            lsh_bits=lsh_bits,
+            lsh_bucket_width=lsh_bucket_width,
+        )
+    )
 
     def build_candidates() -> DataFrame:
-        eng = HubnessKnn(
-            PipelineConfig(
-                n_candidates=n_candidates,
-                k=k,
-                metric=metric,
-                hubness=hubness,
-                tier=tier,
-                lsh_tables=lsh_tables,
-                lsh_bits=lsh_bits,
-                lsh_bucket_width=lsh_bucket_width,
-            )
-        )
         eng.fit(emb.select("id", "vec"))
         nn = eng.kneighbors(k)
         # hubness-reduced rank + the RAW distance for absolute gating,
         # + the sha invariant of the query row
-        from kiez_spark.functions.vectors import distance_expr
-
         qv = emb.select(F.col("id").alias("query_id"), F.col("vec").alias("_qv"),
                         F.col("content_sha"))
         xv = emb.select(F.col("id").alias("cand_id"), F.col("vec").alias("_xv"))
@@ -113,7 +102,8 @@ def link_files(
             )
         )
 
-    cands = run_stage("candidates", build_candidates)
+    cands = ckpt.stage("candidates", build_candidates)
+    eng.release()
 
     def build_pairs() -> DataFrame:
         p = cands.filter(F.col("rank") <= k)
@@ -128,7 +118,7 @@ def link_files(
             .distinct()
         )
 
-    pairs = run_stage("pairs", build_pairs)
+    pairs = ckpt.stage("pairs", build_pairs)
 
     def build_clusters() -> DataFrame:
         return C.connected_components(
@@ -136,7 +126,7 @@ def link_files(
             pair_cols=("src_id", "tgt_id"),
         )
 
-    clusters = run_stage("clusters", build_clusters)
+    clusters = ckpt.stage("clusters", build_clusters)
     return LinkageResult(emb, cands, pairs, clusters, ckpt)
 
 
@@ -146,7 +136,7 @@ class AlignmentResult:
     tgt_embeddings: DataFrame
     forward: DataFrame
     matches: DataFrame
-    checkpointer: StageCheckpointer | None
+    checkpointer: StageCheckpointer
 
 
 def align_files(
@@ -183,17 +173,13 @@ def align_files(
     be MUTUAL best (also rank-1 in the independently hubness-reduced
     target->source direction; the standard reciprocal-best filter that
     trades recall for precision), optionally gated on raw distance.
-    Stages checkpoint like link_files (resume + lineage + metrics).
+    Stages run through the checkpointer like link_files.
     """
-    ckpt = StageCheckpointer(spark, checkpoint_dir) if checkpoint_dir else None
+    ckpt = StageCheckpointer(spark, checkpoint_dir)
+    src_emb = ckpt.stage("src_embeddings", lambda: derive_embeddings(src_files, dim=dim))
+    tgt_emb = ckpt.stage("tgt_embeddings", lambda: derive_embeddings(tgt_files, dim=dim))
 
-    def run_stage(name, build):
-        return ckpt.stage(name, build) if ckpt else build()
-
-    src_emb = run_stage("src_embeddings", lambda: derive_embeddings(src_files, dim=dim))
-    tgt_emb = run_stage("tgt_embeddings", lambda: derive_embeddings(tgt_files, dim=dim))
-
-    def knn(a: DataFrame, b: DataFrame) -> DataFrame:
+    def knn(name: str, a: DataFrame, b: DataFrame) -> DataFrame:
         eng = HubnessKnn(
             PipelineConfig(
                 n_candidates=n_candidates, k=k, metric=metric,
@@ -202,17 +188,24 @@ def align_files(
                 lsh_bucket_width=lsh_bucket_width,
             )
         )
-        eng.fit(a.select("id", "vec"), b.select("id", "vec"))
-        # re-attach the query side's content_sha so the per-corpus sha
-        # invariant is checkable on this stage too (every query id emits
-        # a top-k group, so the DISTINCT sha set equals the embedding
-        # stage's — the same threading link_files does for its
-        # candidates stage)
-        return eng.kneighbors(k).join(
-            a.select(F.col("id").alias("query_id"), "content_sha"), "query_id"
-        )
 
-    fwd = run_stage("forward", lambda: knn(src_emb, tgt_emb))
+        def build() -> DataFrame:
+            eng.fit(a.select("id", "vec"), b.select("id", "vec"))
+            # re-attach the query side's content_sha so the per-corpus sha
+            # invariant is checkable on this stage too (every query id
+            # emits a top-k group, so the DISTINCT sha set equals the
+            # embedding stage's — the same threading link_files does for
+            # its candidates stage)
+            return eng.kneighbors(k).join(
+                a.select(F.col("id").alias("query_id"), "content_sha"),
+                "query_id",
+            )
+
+        out = ckpt.stage(name, build)
+        eng.release()
+        return out
+
+    fwd = knn("forward", src_emb, tgt_emb)
 
     def build_matches() -> DataFrame:
         best = fwd.filter(F.col("rank") == 1).select(
@@ -221,15 +214,13 @@ def align_files(
             "dist",
         )
         if mutual:
-            bwd = run_stage("backward", lambda: knn(tgt_emb, src_emb))
+            bwd = knn("backward", tgt_emb, src_emb)
             bwd_best = bwd.filter(F.col("rank") == 1).select(
                 F.col("cand_id").alias("src_id"),
                 F.col("query_id").alias("tgt_id"),
             )
             best = best.join(bwd_best, ["src_id", "tgt_id"])
         if max_dist is not None:
-            from kiez_spark.functions.vectors import distance_expr
-
             qv = src_emb.select(F.col("id").alias("src_id"), F.col("vec").alias("_qv"))
             xv = tgt_emb.select(F.col("id").alias("tgt_id"), F.col("vec").alias("_xv"))
             best = (
@@ -240,5 +231,5 @@ def align_files(
             )
         return best
 
-    matches = run_stage("matches", build_matches)
+    matches = ckpt.stage("matches", build_matches)
     return AlignmentResult(src_emb, tgt_emb, fwd, matches, ckpt)

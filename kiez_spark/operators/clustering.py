@@ -24,15 +24,15 @@ only by the edge count it observes:
                  N≤(u) ∪ {u} except m to m = min(N≤(u) ∪ {u})
 
    Each round ``localCheckpoint``s to truncate lineage (mandatory — the
-   self-join loop otherwise compounds the plan exponentially) and reports
-   an edge-set checksum (count + xor of pair hashes); two equal checksums
-   in a row mark the fixed point, and running out of ``max_iter`` rounds
-   without one raises.
+   self-join loop otherwise compounds the plan exponentially), and that
+   pass observes an edge-set checksum (count + xor of pair hashes); two
+   equal checksums in a row mark the fixed point, and running out of
+   ``max_iter`` rounds without one raises.
 
 This is the contract-then-solve-locally pattern of Łącki et al.,
 "Connected Components at Scale via Local Contractions" (2018). A round
-costs two window exchanges, a distinct, a checkpoint and a checksum job,
-and every job's plans are compiled and JIT-tiered on the driver, so up
+costs two window exchanges, a distinct and a checkpoint job, and every
+job's plans are compiled and JIT-tiered on the driver, so up
 to ``_LOCAL_EDGES`` edges one collect is cheaper than the O(log n)
 rounds (see the measurements at the constant). Either way the component
 is the minimum member id, so the output does not depend on which phase
@@ -43,8 +43,10 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from kiez_spark.checkpoint import materialise
 
 # Largest edge set finished on the driver. Measured with tools/cc_scale.py
 # (4-vCPU host, 4g driver, CC plus one aggregate over its result): at 1M
@@ -104,16 +106,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _checksum(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.coalesce(
-            F.bit_xor(F.xxhash64(F.col("u"), F.col("v"))), F.lit(0)
-        ).alias("sig"),
-    ).first()
-    return int(row["cnt"]), int(row["sig"])
-
-
 def _local_components(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(ids, component) for every id on the edges (u, v); component = min
     id in its component. Ids are compressed with np.unique, so dense order
@@ -156,11 +148,12 @@ def _star_rounds(edges: DataFrame, max_iter: int) -> DataFrame:
     stops changing; RuntimeError after ``max_iter`` rounds."""
     prev = None  # first round always runs; no checksum job on the input
     for _ in range(max_iter):
-        # per-round checkpoints are LAZY — the checksum action right after
-        # materializes them, folding what were two jobs per round (eager
-        # checkpoint, then checksum) into one
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        cur = _checksum(edges)
+        # one job per round: the checkpoint's pass observes the checksum
+        edges, cur = materialise(
+            _small_star(_large_star(edges)),
+            F.count(F.lit(1)).alias("cnt"),
+            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("sig"),
+        )
         if cur == prev:
             # at the fixed point every edge points at its component root
             member = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
@@ -171,7 +164,7 @@ def _star_rounds(edges: DataFrame, max_iter: int) -> DataFrame:
         prev = cur
     raise RuntimeError(
         f"connected_components: no fixed point after {max_iter} star "
-        f"rounds; {cur[0]} edges remain"
+        f"rounds; {cur['cnt']} edges remain"
     )
 
 
@@ -194,17 +187,14 @@ def connected_components(
     # edges (an observed metric, no job of its own), and both phases read
     # the checkpoint, so the Spark path neither recomputes the pairs nor
     # collects them first
-    seen = Observation()
-    edges = (
+    edges, seen = materialise(
         pairs.select(
             F.col(pair_cols[0]).cast("bigint").alias("u"),
             F.col(pair_cols[1]).cast("bigint").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .observe(seen, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
+        ).filter(F.col("u") != F.col("v")),
+        F.count(F.lit(1)).alias("n"),
     )
-    if seen.get["n"] <= _LOCAL_EDGES:
+    if seen["n"] <= _LOCAL_EDGES:
         assign = _finish_locally(pairs.sparkSession, edges.toArrow())
     else:
         # no distinct first: duplicate edges cannot change a star's min,
@@ -380,6 +370,16 @@ def decisions_from_assignment(
             (F.col("id") == F.col("keep_id")).alias("is_survivor"),
         )
     )
+
+
+def n_components() -> Column:
+    """The component count of a min-id (id, component) labelling as an
+    observable aggregate: each component holds exactly one row whose id
+    is its label, so it is ``count(id == component)``. It equals
+    ``countDistinct("component")``, which ``DataFrame.observe`` rejects
+    (no DISTINCT aggregate can be observed), and it is also the survivor
+    count of any election that keeps one row per component."""
+    return F.count(F.when(F.col("id") == F.col("component"), 1))
 
 
 def component_size_histogram(assign: DataFrame) -> DataFrame:

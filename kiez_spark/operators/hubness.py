@@ -233,13 +233,19 @@ def _dist_to_centroid(
     ``collect_list`` of the (bounded: n_candidates) member vectors per
     query, folded element-wise with ``aggregate``/``zip_with`` — one
     shuffle of k vectors per query instead of a (query, dim)-exploded
-    shuffle of k*dim rows. Whole-stage codegen, no Python. Returns
-    (query_id, <out>).
+    shuffle of k*dim rows. Whole-stage codegen, no Python. Members are
+    summed in (dist, cand_id) order, the oracle's, not in shuffle order,
+    so the bits do not depend on partitioning. Returns (query_id, <out>).
     """
     grouped = (
         cands.join(member_vecs, cands["cand_id"] == member_vecs["id"])
         .groupBy("query_id")
-        .agg(F.collect_list("vec").alias("vs"))
+        .agg(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("dist", "cand_id", "vec"))),
+                lambda m: m["vec"],
+            ).alias("vs")
+        )
     )
     zero = F.array_repeat(F.lit(0.0), F.size(F.element_at("vs", 1)))
     cent = F.transform(

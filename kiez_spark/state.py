@@ -135,19 +135,42 @@ def latest_wins(df, key):
     )
 
 
+def drop_known(batch, key, known):
+    """(``batch`` minus the ``key``s in ``known``, {batch_docs,
+    batch_docs_new}) from one materialising pass; ``known`` holds unique
+    ids (a re-delivered id never enters the state)."""
+    from pyspark.sql import functions as F
+
+    from kiez_spark.checkpoint import materialise
+
+    is_new = F.col("_known").isNull()
+    marked, counts = materialise(
+        batch.join(known.select(F.col(known.columns[0]).alias(key),
+                                F.lit(True).alias("_known")), key, "left"),
+        F.count(F.lit(1)).alias("batch_docs"),
+        F.count(F.when(is_new, 1)).alias("batch_docs_new"),
+    )
+    return marked.filter(is_new).drop("_known"), counts
+
+
 def compact(spark, state_dir, snapshot):
     """Fold the live versions into one snapshot at N+1 and advance the
     read base to it. ``snapshot(spark, state_dir, ver, base)`` returns
-    the job's ``({name: DataFrame}, (report key, DataFrame))``: the
-    tables to write and the frame whose row count the report names.
-    Prints the report."""
+    the job's ``({name: DataFrame}, (report key, name))``: the tables to
+    write and the one whose row count the report names, observed on its
+    snapshot write. Prints the report."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     ver, base = live_version(state_dir, "--compact-state")
-    tables, (key, counted) = snapshot(spark, state_dir, ver, base)
+    tables, (key, name) = snapshot(spark, state_dir, ver, base)
+    seen = Observation()
+    tables[name] = tables[name].observe(seen, F.count(F.lit(1)).alias(key))
     _write_tables(state_dir, ver + 1, tables)
     _flip(state_dir, ver + 1, ver + 1)
     print(json.dumps({
         "mode": "compact", "state_version": ver + 1, "base": ver + 1,
-        "folded_versions": ver - base + 1, key: counted.count(),
+        "folded_versions": ver - base + 1, **seen.get,
     }))
     return 0
 

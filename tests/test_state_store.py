@@ -55,7 +55,7 @@ def test_compact_reads_only_the_snapshot(spark, tmp_path, capsys):
     # read sees: the deltas would give 3 rows, the snapshot has 2
     snap = _frame(spark, [(1, 1), (2, 1)])
     assert state.compact(spark, s, lambda *_: (
-        {"assign": snap}, ("rows", snap)
+        {"assign": snap}, ("rows", "assign")
     )) == 0
     assert json.loads(capsys.readouterr().out) == {
         "mode": "compact", "state_version": 3, "base": 3,
