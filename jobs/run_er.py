@@ -404,6 +404,9 @@ def main(argv=None) -> int:
     ).write.mode("overwrite").parquet(args.output)
     # min-id decisions keep one survivor per cluster
     report["clusters"] = report["survivors"] = summary.get["clusters"]
+    # the stages' one read-side pass: the metric tables are complete
+    # when the job returns
+    ckpt.verify()
     report["sha_violations"] = ingest["sha_violations"]
 
     if gold is not None:

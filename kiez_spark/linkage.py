@@ -2,8 +2,9 @@
 
 repos_files(repo, path, commit, lang, content)
   -> stage "embeddings":  hash-feature vectors + content_sha invariant
-  -> stage "candidates":  blocking + kNN + hubness rescore (HubnessKnn),
-                          sha re-attached per query row
+  -> stage "candidates":  blocking + kNN + hubness rescore (HubnessKnn
+                          ``ranked``: rank, secondary dist and the kNN
+                          pass's raw_dist), sha re-attached per query row
   -> stage "pairs":       distance threshold on RAW distance + candidate
                           rank gate; canonicalized unordered pairs
   -> stage "clusters":    connected components (driver finish while the
@@ -12,13 +13,16 @@ repos_files(repo, path, commit, lang, content)
 
 Every stage runs once through StageCheckpointer (checkpoint.py): a
 parquet checkpoint with checkpoint_dir (resume + lineage + metrics + sha
-invariant), an eager localCheckpoint without. The hubness engine's cache
-is released once the stage that read it is materialised.
+invariant, the metric tables completed by the run's one verification
+pass), an eager localCheckpoint without. The hubness engine's caches are
+released once the stage that read them is materialised.
 
 Matching rule: a candidate pair is a match when its *raw* distance is
 <= max_dist AND it survived the hubness-reduced top-k (rank <= k). The
-hubness transform decides WHICH candidates surface; the absolute gate
-keeps far-apart pairs out of the transitive closure (transitivity
+raw distance is the kNN pass's own distance of the pair, carried through
+the hubness transform (``raw_dist``), not recomputed from the vectors.
+The hubness transform decides WHICH candidates surface; the absolute
+gate keeps far-apart pairs out of the transitive closure (transitivity
 amplifies false positives — a single bad edge merges two clusters).
 """
 
@@ -30,10 +34,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kiez_spark.checkpoint import StageCheckpointer
-from kiez_spark.functions.vectors import distance_expr
 from kiez_spark.operators import clustering as C
 from kiez_spark.pipeline import HubnessKnn, PipelineConfig
 from kiez_spark.synth import derive_embeddings
+
+
+def _query_sha(emb: DataFrame) -> DataFrame:
+    return emb.select(F.col("id").alias("query_id"), "content_sha")
 
 
 @dataclass
@@ -83,24 +90,9 @@ def link_files(
 
     def build_candidates() -> DataFrame:
         eng.fit(emb.select("id", "vec"))
-        nn = eng.kneighbors(k)
-        # hubness-reduced rank + the RAW distance for absolute gating,
-        # + the sha invariant of the query row
-        qv = emb.select(F.col("id").alias("query_id"), F.col("vec").alias("_qv"),
-                        F.col("content_sha"))
-        xv = emb.select(F.col("id").alias("cand_id"), F.col("vec").alias("_xv"))
-        return (
-            nn.join(qv, "query_id")
-            .join(xv, "cand_id")
-            .select(
-                "query_id",
-                "cand_id",
-                "dist",
-                "rank",
-                distance_expr(F.col("_qv"), F.col("_xv"), metric).alias("raw_dist"),
-                "content_sha",
-            )
-        )
+        # hubness-reduced rank + the kNN pass's RAW distance for absolute
+        # gating, + the sha invariant of the query row
+        return eng.ranked(k).join(_query_sha(emb), "query_id")
 
     cands = ckpt.stage("candidates", build_candidates)
     eng.release()
@@ -172,8 +164,9 @@ def align_files(
     matches: 1:1 link proposals — forward rank-1, optionally required to
     be MUTUAL best (also rank-1 in the independently hubness-reduced
     target->source direction; the standard reciprocal-best filter that
-    trades recall for precision), optionally gated on raw distance.
-    Stages run through the checkpointer like link_files.
+    trades recall for precision), optionally gated on the forward
+    stage's carried raw distance. Stages run through the checkpointer
+    like link_files.
     """
     ckpt = StageCheckpointer(spark, checkpoint_dir)
     src_emb = ckpt.stage("src_embeddings", lambda: derive_embeddings(src_files, dim=dim))
@@ -196,10 +189,7 @@ def align_files(
             # emits a top-k group, so the DISTINCT sha set equals the
             # embedding stage's — the same threading link_files does for
             # its candidates stage)
-            return eng.kneighbors(k).join(
-                a.select(F.col("id").alias("query_id"), "content_sha"),
-                "query_id",
-            )
+            return eng.ranked(k).join(_query_sha(a), "query_id")
 
         out = ckpt.stage(name, build)
         eng.release()
@@ -212,6 +202,7 @@ def align_files(
             F.col("query_id").alias("src_id"),
             F.col("cand_id").alias("tgt_id"),
             "dist",
+            "raw_dist",
         )
         if mutual:
             bwd = knn("backward", tgt_emb, src_emb)
@@ -221,15 +212,8 @@ def align_files(
             )
             best = best.join(bwd_best, ["src_id", "tgt_id"])
         if max_dist is not None:
-            qv = src_emb.select(F.col("id").alias("src_id"), F.col("vec").alias("_qv"))
-            xv = tgt_emb.select(F.col("id").alias("tgt_id"), F.col("vec").alias("_xv"))
-            best = (
-                best.join(qv, "src_id")
-                .join(xv, "tgt_id")
-                .filter(distance_expr(F.col("_qv"), F.col("_xv"), metric) <= max_dist)
-                .select("src_id", "tgt_id", "dist")
-            )
-        return best
+            best = best.filter(F.col("raw_dist") <= max_dist)
+        return best.select("src_id", "tgt_id", "dist")
 
     matches = ckpt.stage("matches", build_matches)
     return AlignmentResult(src_emb, tgt_emb, fwd, matches, ckpt)

@@ -11,15 +11,21 @@ Candidate-table convention (see operators/knn.py):
   reverse  t2s: query_id = target entity, cand_id = source entity
 
 All transforms return an UNSORTED rescored candidate table
-(query_id, cand_id, dist) — final top-k is ``knn.topk`` (mirrors the
-reference contract that transform output "must be sorted downstream",
-hubness_reduction/base.py:102-105).
+(query_id, cand_id, dist, raw_dist) — ``dist`` is the secondary
+distance, ``raw_dist`` the forward table's primary distance carried
+through unchanged, so a linkage rule can gate on the kNN pass's own
+distance without recomputing it. Final top-k is ``knn.topk`` (mirrors
+the reference contract that transform output "must be sorted
+downstream", hubness_reduction/base.py:102-105).
 
 Shuffle accounting (scale design): per-row stats use a window over
 query_id — one exchange that the downstream rank window reuses (same
-partitioning). Per-candidate stats are tiny aggregates (one row per target
+partitioning). Per-candidate stats are tiny tables (one row per target
 entity) broadcast onto the forward table — no second shuffle of the big
-candidate table.
+candidate table. On the pandas tier, csls, ls and nicdm take both from
+the kernel: it emits each query's row_mean/row_max on every candidate
+row, so the forward statistic is a column and the reverse one is the
+rank-1 row of each reverse query, with no aggregate at all.
 
 Approximate-tier totality: under the lsh tier a target entity can have an
 EMPTY reverse candidate list (no bucket collision), so the stats join is a
@@ -39,6 +45,13 @@ from pyspark.sql import functions as F
 
 from kiez_spark.functions.vectors import normal_sf, sqeuclidean
 
+
+def _raw():
+    """The forward table's primary distance, carried through every
+    transform."""
+    return F.col("dist").alias("raw_dist")
+
+
 def _row_w():
     # built lazily: PySpark 4 requires an active session to create a Window
     return Window.partitionBy("query_id")
@@ -53,22 +66,29 @@ def _row_stat(s2t: DataFrame, agg_fn, precomputed: str):
     return agg_fn("dist").over(_row_w())
 
 
-def _reverse_stats(t2s: DataFrame, agg, name: str) -> DataFrame:
+def _reverse_stats(t2s: DataFrame, agg_fn, precomputed: str, name: str) -> DataFrame:
     """Per-target-entity statistic from the reverse candidate table.
 
     In t2s the *query* is the target entity, so stats key = t2s.query_id,
     joined onto forward candidates via cand_id (the gather r[neigh_ind],
     csls.py:93, local_scaling.py:136-145, mutual_proximity.py:173-181).
+    When the table carries the kernel's per-query column (pandas tier),
+    the statistic is read off each query's rank-1 row; else (blocked/lsh
+    tiers) it is a groupBy aggregate.
     """
-    return t2s.groupBy("query_id").agg(agg.alias(name)).withColumnRenamed(
-        "query_id", "cand_id"
-    )
+    if precomputed in t2s.columns and "rank" in t2s.columns:
+        stats = t2s.filter(F.col("rank") == 1).select(
+            "query_id", F.col(precomputed).alias(name)
+        )
+    else:
+        stats = t2s.groupBy("query_id").agg(agg_fn("dist").alias(name))
+    return stats.withColumnRenamed("query_id", "cand_id")
 
 
 def csls(s2t: DataFrame, t2s: DataFrame) -> DataFrame:
     """Cross-domain similarity local scaling (csls.py:85-96):
     d' = 2d - mean_i(forward dists) - mean_j(reverse dists)."""
-    stats = _reverse_stats(t2s, F.avg("dist"), "r_train")
+    stats = _reverse_stats(t2s, F.avg, "row_mean", "r_train")
     return (
         s2t.withColumn("r_test", _row_stat(s2t, F.avg, "row_mean"))
         .join(F.broadcast(stats), "cand_id", "left")
@@ -77,6 +97,7 @@ def csls(s2t: DataFrame, t2s: DataFrame) -> DataFrame:
             "query_id",
             "cand_id",
             (2.0 * F.col("dist") - F.col("r_test") - F.col("r_train")).alias("dist"),
+            _raw(),
         )
     )
 
@@ -89,7 +110,7 @@ def local_scaling(s2t: DataFrame, t2s: DataFrame, method: str = "standard") -> D
     nicdm:    r = mean distance; d' = d / sqrt(r_i * r_j)
     """
     if method in ("standard", "ls"):
-        stats = _reverse_stats(t2s, F.max("dist"), "r_train")
+        stats = _reverse_stats(t2s, F.max, "row_max", "r_train")
         out = (
             s2t.withColumn("r_test", _row_stat(s2t, F.max, "row_max"))
             .join(F.broadcast(stats), "cand_id", "left")
@@ -104,10 +125,11 @@ def local_scaling(s2t: DataFrame, t2s: DataFrame, method: str = "standard") -> D
                         / (F.col("r_test") * F.col("r_train"))
                     )
                 ).alias("dist"),
+                _raw(),
             )
         )
     elif method == "nicdm":
-        stats = _reverse_stats(t2s, F.avg("dist"), "r_train")
+        stats = _reverse_stats(t2s, F.avg, "row_mean", "r_train")
         out = (
             s2t.withColumn("r_test", _row_stat(s2t, F.avg, "row_mean"))
             .join(F.broadcast(stats), "cand_id", "left")
@@ -118,6 +140,7 @@ def local_scaling(s2t: DataFrame, t2s: DataFrame, method: str = "standard") -> D
                 (F.col("dist") / F.sqrt(F.col("r_test") * F.col("r_train"))).alias(
                     "dist"
                 ),
+                _raw(),
             )
         )
     else:
@@ -130,7 +153,9 @@ def mutual_proximity_normal(s2t: DataFrame, t2s: DataFrame) -> DataFrame:
     d' = 1 - sf(d; mu_i, sd_i) * sf(d; mu_j, sd_j), sd is population std
     (numpy nanstd ddof=0, mutual_proximity.py:103,178 — we standardize on
     the numpy path; torch uses ddof=1 and the reference's own tests only
-    hold the two to 1e-1)."""
+    hold the two to 1e-1). The reverse statistics stay a groupBy even on
+    the pandas tier: the kernel's row_std is a one-pass sqrt(ssq/n -
+    mean^2), which loses every digit when a query's distances tie."""
     stats = t2s.groupBy("query_id").agg(
         F.avg("dist").alias("mu_train"),
         F.stddev_pop("dist").alias("sd_train"),
@@ -143,11 +168,13 @@ def mutual_proximity_normal(s2t: DataFrame, t2s: DataFrame) -> DataFrame:
         .join(F.broadcast(stats), "cand_id", "left")
         .withColumn("mu_train", F.coalesce("mu_train", "mu_test"))
         .withColumn("sd_train", F.coalesce("sd_train", "sd_test"))
-        .select("query_id", "cand_id", (1.0 - p1 * p2).alias("dist"))
+        .select("query_id", "cand_id", (1.0 - p1 * p2).alias("dist"), _raw())
     )
 
 
-_MP_EMPIRIC_SCHEMA = "query_id bigint, cand_id bigint, dist double"
+_MP_EMPIRIC_SCHEMA = (
+    "query_id bigint, cand_id bigint, dist double, raw_dist double"
+)
 
 
 def mutual_proximity_empiric(s2t: DataFrame, t2s: DataFrame) -> DataFrame:
@@ -218,7 +245,8 @@ def mutual_proximity_empiric(s2t: DataFrame, t2s: DataFrame) -> DataFrame:
         )
         cnt = ((d[None, :] > d[:, None]) & (dhat > d[:, None])).sum(axis=1)
         return pd.DataFrame(
-            {"query_id": pdf["query_id"], "cand_id": c, "dist": 1.0 - cnt / m}
+            {"query_id": pdf["query_id"], "cand_id": c, "dist": 1.0 - cnt / m,
+             "raw_dist": d}
         )
 
     return joined.groupBy("query_id").applyInPandas(kernel, _MP_EMPIRIC_SCHEMA)
@@ -269,6 +297,7 @@ def dis_sim_local(
     source: DataFrame,
     target: DataFrame,
     metric: str = "euclidean",
+    owned: list[DataFrame] | None = None,
 ) -> DataFrame:
     """DisSimLocal (dis_sim.py:110-181).
 
@@ -285,6 +314,11 @@ def dis_sim_local(
     cheap at any scale but noted as a pipeline-stage boundary. Reference
     semantics define the min over ALL pairs, so under blocking we still
     take it globally.
+
+    ``owned``: the rescored pairs are persisted for the barrier and the
+    cache must outlive the returned lazy plan, so it is appended here
+    for the caller to unpersist once the plan is materialised
+    (``HubnessKnn.release()``).
     """
     if metric in ("euclidean", "minkowski", "l2"):
         squared = False
@@ -320,11 +354,9 @@ def dis_sim_local(
     # and without the cache each pass re-runs the candidate scan + both
     # broadcast joins (measured 2.0 -> 1.56 s at sf0.1, identical rows).
     # Lifetime: the cache must outlive the returned LAZY plan, so it is
-    # not unpersisted here (the minhash_lsh_pairs convention) — it is
-    # MEMORY_AND_DISK-LRU-evicted under pressure, and batch drivers
-    # chaining many queries should spark.catalog.clearCache() between
-    # them. Size is the rescored candidate table itself (n_queries * k
-    # rows of 3 scalars), the table the caller materializes anyway.
+    # handed to ``owned`` instead of being unpersisted here. Size is the
+    # rescored candidate table itself (n_queries * k rows of 4 scalars),
+    # the table the caller materializes anyway.
     pairs = (
         s2t.alias("c")
         .join(F.broadcast(di), F.col("c.query_id") == F.col("di.query_id"))
@@ -335,8 +367,11 @@ def dis_sim_local(
             # delta_i + delta_j first: symmetric, so the two directions
             # of a single-source pair get bit-equal values
             (d2 - (F.col("di.delta") + F.col("dj.delta"))).alias("dist"),
+            F.col("c.dist").alias("raw_dist"),
         )
     ).persist()
+    if owned is not None:
+        owned.append(pairs)
     min_row = pairs.agg(F.min("dist").alias("mind"))
     shifted = pairs.crossJoin(F.broadcast(min_row)).select(
         "query_id",
@@ -344,10 +379,12 @@ def dis_sim_local(
         F.when(F.col("mind") < 0.0, F.col("dist") - F.col("mind"))
         .otherwise(F.col("dist"))
         .alias("dist"),
+        "raw_dist",
     )
     if not squared:
         shifted = shifted.select(
-            "query_id", "cand_id", F.sqrt(F.col("dist")).alias("dist")
+            "query_id", "cand_id", F.sqrt(F.col("dist")).alias("dist"),
+            "raw_dist",
         )
     return shifted
 

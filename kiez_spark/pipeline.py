@@ -6,7 +6,12 @@ Stage graph (hubness != none):
   source ───┐                      ┌─> forward cands s2t (k=n_candidates)──┐
             ├─ candidate kNN join ─┤                                       ├─ transform ─ topk(k)
   target ───┘                      └─> reverse cands t2s (k=n_candidates)──┘
-                                        (aggregated into per-target stats)
+                                        (per-target stats: the kernel's
+                                         rank-1 row, else aggregated)
+
+The ranked table (``ranked``) carries each pair's primary distance from
+the candidate pass as ``raw_dist`` through the transform and the top-k;
+``kneighbors`` is its projection to the reference's columns.
 
 NoHubnessReduction short-circuit preserved (base.py:114-122): single
 forward query at the final k, no reverse pass — halves cost.
@@ -24,6 +29,7 @@ import warnings
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from kiez_spark.operators import hubness as H
 from kiez_spark.operators import knn as K
@@ -231,7 +237,8 @@ class HubnessKnn:
         return self
 
     def release(self) -> None:
-        """Unpersist candidate tables cached by kneighbors(). Called
+        """Unpersist the tables cached by kneighbors()/ranked(): the
+        single-source candidate table and DSL's rescored pairs. Called
         automatically on re-fit; call it explicitly when done with an
         engine to return executor storage memory."""
         for df in getattr(self, "_persisted", []):
@@ -259,34 +266,50 @@ class HubnessKnn:
 
         ``dist`` is the hubness-reduced (secondary) distance when a
         transform is configured, like the reference returns the rescored
-        distances (base.py:89-105).
+        distances (base.py:89-105). A projection of ``ranked(k)``.
+        """
+        return self.ranked(k).select("query_id", "cand_id", "dist", "rank")
+
+    def ranked(self, k: int | None = None) -> DataFrame:
+        """The engine's ranked table (query_id, cand_id, dist, rank,
+        raw_dist): ``kneighbors``' rows plus ``raw_dist``, the candidate
+        pass's own (primary) distance of each pair, carried through the
+        hubness transform and the top-k. Linkage gates on it, so no
+        caller re-joins the vectors to recompute a distance the kNN
+        kernel already returned.
         """
         if self.source_ is None:
             raise RuntimeError("fit() must be called before kneighbors()")
         c = self.config
         n_neighbors = self._set_k(k)
         excl = self.single_source
+        cols = ["query_id", "cand_id", "dist", "rank", "raw_dist"]
         if c.hubness == "none":
-            return self._candidates(self.source_, self.target_, n_neighbors, excl)
+            return self._candidates(
+                self.source_, self.target_, n_neighbors, excl
+            ).withColumn("raw_dist", F.col("dist")).select(*cols)
 
+        # the transforms read (query_id, cand_id, dist) and, when the
+        # pandas-tier kernel emitted them, each query's rank and
+        # candidate-set statistics (forward and reverse alike)
+        keep = ("query_id", "cand_id", "dist", "rank", "row_mean", "row_max",
+                "row_std")
         s2t = self._candidates(self.source_, self.target_, c.n_candidates, excl)
-        keep_cols = [c_ for c_ in ("query_id", "cand_id", "dist", "row_mean",
-                                   "row_max", "row_std") if c_ in s2t.columns]
-        s2t_flat = s2t.select(*keep_cols)
+        s2t_flat = s2t.select(*[c_ for c_ in keep if c_ in s2t.columns])
         if self.single_source:
             # the reverse (t->s) candidate table is IDENTICAL to the
             # forward one (same entity set, symmetric metric, same k):
             # compute once, persist so the stats aggregation and the
             # scoring pass share one materialization. t2s_flat is the SAME
-            # DataFrame object — transforms only read (query_id, cand_id,
-            # dist) from it, and dis_sim_local's `t2s is s2t` single-source
-            # shortcut (delta_j == delta_i) depends on object identity.
+            # DataFrame object — dis_sim_local's `t2s is s2t`
+            # single-source shortcut (delta_j == delta_i) depends on
+            # object identity.
             s2t_flat = s2t_flat.persist()
             self._persisted.append(s2t_flat)
             t2s_flat = s2t_flat
         else:
             t2s = self._candidates(self.target_, self.source_, c.n_candidates, excl)
-            t2s_flat = t2s.select("query_id", "cand_id", "dist")
+            t2s_flat = t2s.select(*[c_ for c_ in keep if c_ in t2s.columns])
 
         if c.hubness == "dsl":
             src = self.source_.select(
@@ -302,7 +325,9 @@ class HubnessKnn:
                     self.target_[c.id_col].cast("bigint").alias("id"),
                     self.target_[c.vec_col].cast("array<double>").alias("vec"),
                 )
-            rescored = H.dis_sim_local(s2t_flat, t2s_flat, src, tgt, c.metric)
+            rescored = H.dis_sim_local(
+                s2t_flat, t2s_flat, src, tgt, c.metric, owned=self._persisted
+            )
         else:
             rescored = H.TRANSFORMS[c.hubness](s2t_flat, t2s_flat)
-        return K.topk(rescored, n_neighbors)
+        return K.topk(rescored, n_neighbors).select(*cols)

@@ -1,5 +1,6 @@
-"""StageCheckpointer: recorded values, the lineage check and directories
-whose metric tables Spark's writer appended to."""
+"""StageCheckpointer: recorded values, the lineage check, a run killed
+before its verification pass, and directories whose metric tables
+Spark's writer appended to."""
 
 import pyarrow.parquet as pq
 import pytest
@@ -68,6 +69,7 @@ def test_stage_values_match_recomputation(spark, stages, tmp_path):
     for name, df in stages.items():
         got = ck.stage(name, lambda df=df: df)
         assert sorted(got.collect()) == sorted(df.collect())
+    ck.verify()
     m = {r["stage"]: r for r in pq.read_table(f"{d}/_metrics").to_pylist()}
     pm = pq.read_table(f"{d}/_partition_metrics").to_pylist()
     assert set(m) == set(stages)
@@ -107,6 +109,61 @@ def test_lineage_detects_disagreeing_partition_row(
     assert not ck.lineage_consistent()
 
 
+def _tables(d):
+    """Both metric tables, without the driver's clock."""
+    m = sorted(
+        (r["stage"], r["rows"], r["sig"], r["sha_sig"], r["n_partitions"])
+        for r in pq.read_table(f"{d}/_metrics").to_pylist()
+    )
+    pm = sorted(
+        tuple(r.values())
+        for r in pq.read_table(f"{d}/_partition_metrics").to_pylist()
+    )
+    return m, pm
+
+
+@pytest.mark.parametrize("kill", ["before_pass", "mid_pass"])
+def test_killed_before_verification_resumes(
+    spark, stages, tmp_path, monkeypatch, kill
+):
+    """A run killed after its stage writes and before its verification
+    pass finished (before the pass, or after the partition rows and
+    before the _metrics rows) verifies those stages when it resumes,
+    rebuilds none of them, and reads what an uninterrupted run reads."""
+    whole = str(tmp_path / "whole")
+    ck = StageCheckpointer(spark, whole)
+    for name, df in stages.items():
+        ck.stage(name, lambda df=df: df)
+    assert ck.lineage_consistent()
+
+    d = str(tmp_path / "killed")
+    ck = StageCheckpointer(spark, d)
+    for name, df in stages.items():
+        ck.stage(name, lambda df=df: df)
+    if kill == "mid_pass":
+        append = StageCheckpointer._append
+
+        def dies_at_metrics(self, table, ddl, rows):
+            if table == "_metrics":
+                raise KeyboardInterrupt
+            append(self, table, ddl, rows)
+
+        monkeypatch.setattr(StageCheckpointer, "_append", dies_at_metrics)
+        with pytest.raises(KeyboardInterrupt):
+            ck.verify()
+        monkeypatch.undo()
+    ck = StageCheckpointer(spark, d)
+    for name, df in stages.items():
+        assert sorted(ck.stage(name, _no_build).collect()) == sorted(df.collect())
+    assert ck.lineage_consistent()
+    assert ck.sha_invariant_ok()
+    m, pm = _tables(d)
+    assert (m, sorted(set(pm))) == _tables(whole)
+    # verified once: a further pass adds nothing
+    ck.verify()
+    assert _tables(d)[0] == m
+
+
 def test_spark_written_metrics_dir_resumes(spark, stages, tmp_path):
     """A directory in the earlier format — metric rows appended by Spark's
     writer — resumes, and driver-written rows appended beside them read
@@ -125,6 +182,7 @@ def test_spark_written_metrics_dir_resumes(spark, stages, tmp_path):
     ck = StageCheckpointer(spark, d)
     assert sorted(ck.stage("old", _no_build).collect()) == sorted(old.collect())
     ck.stage("new", lambda: stages["with_sha"].select("content_sha", "id"))
+    ck.verify()
 
     via_spark = spark.read.parquet(f"{d}/_metrics")
     assert via_spark.schema.simpleString() == METRICS_DDL

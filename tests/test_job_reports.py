@@ -23,11 +23,12 @@ from kiez_spark import synth
 from kiez_spark.checkpoint import sha_violations
 
 # Spark jobs per job main on these fixtures (local[4], 8 shuffle
-# partitions): the most seen in seven runs (37 / 19 / 40 / 44; run_er
-# read 39 or 40) plus one, since an AQE query stage can add a job
-# between otherwise identical runs. With the report actions they used to run
-# they took 47 / 22 / 51 / 55.
-JOB_BUDGET = {"link_batch": 38, "link_state": 20, "er": 41, "curation": 45}
+# partitions): the most seen in seven runs (29 / 19 / 35 / 36; run_er
+# read 34 or 35) plus one, since an AQE query stage can add a job
+# between otherwise identical runs. With the report actions they used to
+# run they took 47 / 22 / 51 / 55, and with one re-read aggregate per
+# checkpointed stage instead of one per run 37 / 19 / 41 / 44.
+JOB_BUDGET = {"link_batch": 30, "link_state": 20, "er": 36, "curation": 37}
 
 
 def _run(spark, module, argv, name):
@@ -262,3 +263,17 @@ def test_link_files_releases_engine_cache(spark, tmp_path, checkpointed):
     )
     assert _cache_empty(spark)
     assert res.checkpointer.rows["clusters"] == 120
+
+
+def test_dsl_release_unpersists_rescored_pairs(spark):
+    """DSL persists its rescored pairs for the global-min barrier; the
+    engine owns that cache, so release() leaves no cached DataFrame."""
+    from kiez_spark.pipeline import HubnessKnn, PipelineConfig
+
+    spark.catalog.clearCache()
+    emb = synth.derive_embeddings(synth.repos_files(spark, n=120), dim=16)
+    eng = HubnessKnn(PipelineConfig(n_candidates=6, k=3, hubness="dsl"))
+    eng.fit(emb.select("id", "vec"))
+    assert eng.kneighbors(3).count() == 360
+    eng.release()
+    assert _cache_empty(spark)
